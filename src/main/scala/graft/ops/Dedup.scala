@@ -188,23 +188,53 @@ object Dedup {
 /** Pure shingle/minhash kernels (deterministic, executor-side). */
 object MinHashKernel {
 
-  /** Word shingles of size n, hashed to 64-bit. */
+  /** Word shingles of size n, hashed to 64-bit. Words are the maximal
+    * runs of non-`\s` chars (`\s` = the six ASCII chars space, \t,
+    * \n, VT, \f, \r) of the text lowercased in the root locale; each
+    * window of n words hashes FNV-style over its chars, a space after
+    * every word. A text with fewer than n (but some) words is one
+    * shingle: the mixed `String.hashCode` of its words joined by single
+    * spaces. Words are located by offset — no regex, no word strings. */
   def shingleHashes(text: String, n: Int): Array[Long] = {
     if (text == null) return Array.emptyLongArray
-    val tokens = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
-    if (tokens.length < n) {
-      if (tokens.isEmpty) return Array.emptyLongArray
-      return Array(mix(tokens.mkString(" ").hashCode.toLong))
-    }
-    val out = new Array[Long](tokens.length - n + 1)
+    val t = text.toLowerCase(java.util.Locale.ROOT)
+    var starts = new Array[Int](16)
+    var ends = new Array[Int](16)
+    var nt = 0
     var i = 0
-    while (i + n <= tokens.length) {
+    while (i < t.length) {
+      while (i < t.length && isSpace(t.charAt(i))) i += 1
+      if (i < t.length) {
+        if (nt == starts.length) {
+          starts = java.util.Arrays.copyOf(starts, nt * 2)
+          ends = java.util.Arrays.copyOf(ends, nt * 2)
+        }
+        starts(nt) = i
+        while (i < t.length && !isSpace(t.charAt(i))) i += 1
+        ends(nt) = i
+        nt += 1
+      }
+    }
+    if (nt < n) {
+      if (nt == 0) return Array.emptyLongArray
+      var h = 0
+      var w = 0
+      while (w < nt) {
+        if (w > 0) h = 31 * h + ' '
+        var k = starts(w)
+        while (k < ends(w)) { h = 31 * h + t.charAt(k); k += 1 }
+        w += 1
+      }
+      return Array(mix(h.toLong))
+    }
+    val out = new Array[Long](nt - n + 1)
+    i = 0
+    while (i + n <= nt) {
       var h = 1125899906842597L
       var j = i
       while (j < i + n) {
-        var k = 0
-        val t = tokens(j)
-        while (k < t.length) { h = (h ^ t.charAt(k)) * 1099511628211L; k += 1 }
+        var k = starts(j)
+        while (k < ends(j)) { h = (h ^ t.charAt(k)) * 1099511628211L; k += 1 }
         h = (h ^ ' ') * 1099511628211L
         j += 1
       }
@@ -213,6 +243,9 @@ object MinHashKernel {
     }
     out
   }
+
+  private def isSpace(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
 
   private def mix(x: Long): Long = {
     var h = x
@@ -241,13 +274,35 @@ object MinHashKernel {
     sig
   }
 
-  /** Exact shingle-set Jaccard between two texts. */
+  /** Exact shingle-set Jaccard between two texts: both shingle arrays
+    * sorted and deduplicated in place, then their overlap counted in
+    * one merge pass. Two empty sets are identical (1.0). */
   def exactJaccard(t1: String, t2: String, n: Int): Double = {
-    val s1 = shingleHashes(t1, n).toSet
-    val s2 = shingleHashes(t2, n).toSet
-    if (s1.isEmpty && s2.isEmpty) return 1.0
-    if (s1.isEmpty || s2.isEmpty) return 0.0
-    val inter = s1.intersect(s2).size
-    inter.toDouble / (s1.size + s2.size - inter)
+    val a = shingleHashes(t1, n)
+    val b = shingleHashes(t2, n)
+    val na = sortDistinct(a)
+    val nb = sortDistinct(b)
+    if (na == 0 && nb == 0) return 1.0
+    if (na == 0 || nb == 0) return 0.0
+    var i = 0; var j = 0; var inter = 0
+    while (i < na && j < nb) {
+      if (a(i) == b(j)) { inter += 1; i += 1; j += 1 }
+      else if (a(i) < b(j)) i += 1
+      else j += 1
+    }
+    inter.toDouble / (na + nb - inter)
+  }
+
+  /** Sorts `xs` and moves its distinct values to the front; returns
+    * how many there are. */
+  private def sortDistinct(xs: Array[Long]): Int = {
+    java.util.Arrays.sort(xs)
+    var n = 0
+    var i = 0
+    while (i < xs.length) {
+      if (n == 0 || xs(i) != xs(n - 1)) { xs(n) = xs(i); n += 1 }
+      i += 1
+    }
+    n
   }
 }

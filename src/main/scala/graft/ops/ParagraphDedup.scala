@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Corpus-wide paragraph-level dedup (the CC-Net / RefinedWeb recipe):
   * boilerplate and syndicated text repeat ACROSS documents even when no
@@ -31,14 +33,53 @@ object ParagraphDedup {
   /** Explode text into (id, para_idx, para) rows. `sep` is a regex
     * (default: blank-line paragraph breaks). Empty/whitespace-only
     * fragments are dropped; `para_idx` is the fragment's 0-based
-    * position among the SURVIVING fragments of its document. */
+    * position among the SURVIVING fragments of its document.
+    * "Whitespace" is what Spark's `trim` strips: the space 0x20 only.
+    * The default separator runs the native [[blankLineParagraphs]]
+    * splitter; any other separator goes through Spark's regex `split`. */
   def paragraphs(docs: DataFrame, idCol: String, textCol: String,
-                 sep: String = "\n\n+"): DataFrame =
-    docs
-      .select(col(idCol).as("id"),
-        filter(split(col(textCol), sep),
-          p => length(trim(p)) > 0).as("ps"))
-      .select(col("id"), posexplode(col("ps")).as(Seq("para_idx", "para")))
+                 sep: String = BlankLines): DataFrame = {
+    val ps =
+      if (sep == BlankLines) graft.sql.GraftFunctions.graft_paragraphs(col(textCol))
+      else filter(split(col(textCol), sep), p => length(trim(p)) > 0)
+    // one select: over a computed array (not a column) the optimizer
+    // infers no `size(ps) > 0 AND isnotnull(ps)` filter for the
+    // generator, a filter that would evaluate the split twice more
+    docs.select(col(idCol).as("id"), posexplode(ps).as(Seq("para_idx", "para")))
+  }
+
+  /** The default paragraph separator: a run of two or more newlines. */
+  val BlankLines = "\n\n+"
+
+  /** `filter(split(text, "\n\n+"), p => length(trim(p)) > 0)` in one
+    * byte pass: a newline is the single byte 0x0A in UTF-8, so the
+    * fragments between runs of ≥ 2 of them are byte ranges, and a
+    * fragment is kept unless it is empty or all 0x20 bytes. Spark's
+    * `split` decodes through a Java String, turning each malformed
+    * UTF-8 sequence into U+FFFD, so invalid input is decoded the same
+    * way first. Fragments are copies, never views of the input. */
+  def blankLineParagraphs(text: UTF8String): ArrayData = {
+    val t = if (text.isValid) text else UTF8String.fromString(text.toString)
+    val b = t.getBytes
+    val out = new scala.collection.mutable.ArrayBuffer[Any]()
+    def emit(from: Int, until: Int): Unit = {
+      var k = from
+      while (k < until && b(k) == ' ') k += 1
+      if (k < until) out += UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, from, until))
+    }
+    var from = 0
+    var i = 0
+    while (i + 1 < b.length) {
+      if (b(i) == '\n' && b(i + 1) == '\n') {
+        emit(from, i)
+        i += 2
+        while (i < b.length && b(i) == '\n') i += 1
+        from = i
+      } else i += 1
+    }
+    emit(from, b.length)
+    new GenericArrayData(out.toArray)
+  }
 
   /** Pre-chunked variant for corpora without separator structure:
     * fixed `chunkWords`-word windows as the paragraph unit. The same
@@ -83,7 +124,7 @@ object ParagraphDedup {
     * paragraph rows, and rejoins as ('', 0, 0) rather than vanishing
     * (it used to be dropped, contradicting this contract). */
   def dedup(docs: DataFrame, idCol: String, textCol: String,
-            sep: String = "\n\n+", joinSep: String = "\n\n"): DataFrame = {
+            sep: String = BlankLines, joinSep: String = "\n\n"): DataFrame = {
     val marked = markDuplicates(paragraphs(docs, idCol, textCol, sep))
     val rebuilt = marked
       .groupBy(col("id"))

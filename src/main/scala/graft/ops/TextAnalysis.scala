@@ -54,7 +54,18 @@ object TextAnalysis {
     docs.withColumn("lang_pred", langIdUdf(col("text")))
 }
 
-/** Deterministic marker-word language identifier. */
+/** Deterministic marker-word language identifier: the language whose
+  * marker function words occur most often among the text's words,
+  * where a word is a maximal run of letters (`\p{L}`, by code point)
+  * of the text lowercased in the root locale (so the result never
+  * depends on the JVM's default locale). Ties keep the earlier
+  * language in the order en, es, fr, de, pt; no marker gives "und".
+  *
+  * One pass over the letter runs. Every marker is at most six Latin-1
+  * letters, so a run longer than that, or holding a letter above
+  * U+00FF, is skipped without being materialized; any other run packs
+  * into a long (8 bits a letter, letters are never 0) and is looked up
+  * once in a word → language-bitmask table. */
 object LangIdKernel {
   private val Markers: List[(String, Set[String])] = List(
     "en" -> Set("the", "and", "of", "is", "that", "with", "for", "this",
@@ -67,21 +78,75 @@ object LangIdKernel {
       "eine", "für", "auf", "werden"),
     "pt" -> Set("o", "os", "das", "um", "uma", "não", "com", "para", "por",
       "mais", "como", "foi"))
+  private val Langs = Markers.map(_._1).toArray
+  private final val MaxLen = 6
+  private final val Slots = 256 // power of two, > 2 × the marker count
+
+  private def pack(word: String): Long =
+    word.foldLeft(0L)((k, c) => (k << 8) | c)
+
+  private def slotOf(key: Long): Int =
+    ((key * 0x9e3779b97f4a7c15L) >>> 56).toInt & (Slots - 1)
+
+  private val (keys, masks) = {
+    val ks = new Array[Long](Slots)
+    val ms = new Array[Int](Slots)
+    for (((_, set), lang) <- Markers.zipWithIndex; w <- set) {
+      require(w.length <= MaxLen && w.forall(c => c > 0 && c <= 0xff), w)
+      val k = pack(w)
+      var s = slotOf(k)
+      while (ks(s) != 0L && ks(s) != k) s = (s + 1) & (Slots - 1)
+      ks(s) = k
+      ms(s) |= 1 << lang
+    }
+    (ks, ms)
+  }
+
+  private def maskOf(key: Long): Int = {
+    var s = slotOf(key)
+    while (keys(s) != 0L) {
+      if (keys(s) == key) return masks(s)
+      s = (s + 1) & (Slots - 1)
+    }
+    0
+  }
 
   def detect(text: String): String = {
     if (text == null || text.isEmpty) return "und"
-    val tokens = text.toLowerCase.split("[^\\p{L}]+")
-    if (tokens.isEmpty) return "und"
+    val t = text.toLowerCase(java.util.Locale.ROOT)
+    val scores = new Array[Int](Langs.length)
+    val n = t.length
+    var i = 0
+    while (i < n) {
+      var c = t.codePointAt(i)
+      if (!Character.isLetter(c)) i += Character.charCount(c)
+      else {
+        var key = 0L
+        var len = 0 // letters packed so far; -1 once the run cannot match
+        while (i < n && Character.isLetter(c)) {
+          if (len >= 0) {
+            if (len < MaxLen && c <= 0xff) { key = (key << 8) | c; len += 1 }
+            else len = -1
+          }
+          i += Character.charCount(c)
+          if (i < n) c = t.codePointAt(i)
+        }
+        if (len > 0) {
+          val m = maskOf(key)
+          var l = 0
+          while (l < scores.length) {
+            if ((m & (1 << l)) != 0) scores(l) += 1
+            l += 1
+          }
+        }
+      }
+    }
     var bestLang = "und"
     var bestScore = 0
-    Markers.foreach { case (lang, set) =>
-      var score = 0
-      var i = 0
-      while (i < tokens.length) {
-        if (set.contains(tokens(i))) score += 1
-        i += 1
-      }
-      if (score > bestScore) { bestScore = score; bestLang = lang }
+    var l = 0
+    while (l < scores.length) {
+      if (scores(l) > bestScore) { bestScore = scores(l); bestLang = Langs(l) }
+      l += 1
     }
     bestLang
   }

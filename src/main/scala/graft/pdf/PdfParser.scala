@@ -915,22 +915,28 @@ object PdfParser {
     } catch { case _: Exception => null }
   }
 
+  /** Null on a corrupt stream. A stream that needs a preset dictionary
+    * (zlib FDICT) cannot be decoded: there `inflate` returns 0 with input
+    * left, so "no output and input left" ends the loop as corrupt
+    * instead of spinning; a truncated stream keeps what it decoded. */
   private def inflate(data: Array[Byte]): Array[Byte] = {
+    val inf = new Inflater()
     try {
-      val inf = new Inflater()
       inf.setInput(data)
       val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 4))
       val buf = new Array[Byte](8192)
       var total = 0
       while (!inf.finished() && total < (64 << 20)) {
         val n = inf.inflate(buf)
+        if (n == 0 && !inf.finished() &&
+            (inf.needsDictionary() || !inf.needsInput())) return null
         if (n == 0 && inf.needsInput()) return out.toByteArray
         out.write(buf, 0, n)
         total += n
       }
-      inf.end()
       out.toByteArray
     } catch { case _: Exception => null }
+    finally inf.end()
   }
 
   // ------------------------------------------------------------------

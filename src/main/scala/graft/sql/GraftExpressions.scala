@@ -3,7 +3,9 @@ package graft.sql
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -232,6 +234,51 @@ case class GraftQualityE6(child: Expression) extends UnaryExpression
   override protected def withNewChildInternal(c: Expression): GraftQualityE6 = copy(c)
 }
 
+/** Gopher repetition signals as struct<_1: top_bigram_cover_e6,
+  * _2: dup_{dupN}gram_cover_e6, _3: n_words> (see
+  * [[graft.ops.Repetition.signalsStruct]]). The field names, types and
+  * nullability are those of the `(Long, Long, Long)` UDF this replaced,
+  * so plans and written schemas keep their shape: the struct is
+  * declared nullable as that UDF was, though a null text scores as the
+  * empty text and the value is never null. Each generated class (and
+  * each interpreted copy) owns its kernel's scratch. */
+case class GraftRepetitionSignals(child: Expression, dupN: Int)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = StructType(Seq("_1", "_2", "_3").map(
+    StructField(_, LongType, nullable = false)))
+  override def nullable: Boolean = true
+  @transient private lazy val kernel = new graft.ops.RepetitionKernel
+  override def eval(input: InternalRow): Any =
+    kernel.signals(child.eval(input).asInstanceOf[UTF8String], dupN)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val k = ctx.addMutableState(classOf[graft.ops.RepetitionKernel].getName,
+      "repetition", v => s"$v = new ${classOf[graft.ops.RepetitionKernel].getName}();")
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      boolean ${ev.isNull} = false;
+      InternalRow ${ev.value} = $k.signals(${c.isNull} ? null : ${c.value}, $dupN);""")
+  }
+  override protected def withNewChildInternal(c: Expression): GraftRepetitionSignals =
+    copy(child = c)
+}
+
+/** Blank-line paragraphs: `filter(split(text, "\n\n+"), p =>
+  * length(trim(p)) > 0)` as one native pass
+  * ([[graft.ops.ParagraphDedup.blankLineParagraphs]]). */
+case class GraftParagraphs(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes {
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(v: Any): Any =
+    graft.ops.ParagraphDedup.blankLineParagraphs(v.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.ops.ParagraphDedup.blankLineParagraphs($c)")
+  override protected def withNewChildInternal(c: Expression): GraftParagraphs = copy(c)
+}
+
 /** Cosine similarity over two array<float> columns (ANN hot loop). */
 case class GraftCosine(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -280,6 +327,10 @@ object GraftFunctions {
     ColumnBridge.column(GraftCosine(expression(a), expression(b)))
   def graft_sorted_overlap(a: Column, b: Column): Column =
     ColumnBridge.column(GraftSortedOverlap(expression(a), expression(b)))
+  def graft_repetition_signals(c: Column, dupN: Int): Column =
+    ColumnBridge.column(GraftRepetitionSignals(expression(c), dupN))
+  def graft_paragraphs(c: Column): Column =
+    ColumnBridge.column(GraftParagraphs(expression(c)))
 
   private def expression(c: Column): Expression = ColumnBridge.expression(c)
 

@@ -38,6 +38,52 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!pii.contains("Exchange"), s"per-row scrub must not shuffle:\n$pii")
   }
 
+  /** A small documents table scanned from parquet, the way the
+    * curation operators read their input. */
+  private lazy val textDocs = {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-docs").resolve("docs")
+    Seq((1L, "alpha beta\n\ngamma"), (2L, "delta  epsilon"))
+      .toDF("doc_id", "text").write.parquet(dir.toString)
+    spark.read.parquet(dir.toString)
+  }
+
+  /** Plan lines that evaluate `fn`, and whether each runs inside
+    * whole-stage codegen (`*(n)`); the scan's DataFilters echo is not
+    * an evaluation. */
+  private def evaluating(plan: String, fn: String): Seq[(String, Boolean)] =
+    plan.split("\n").toSeq
+      .filter(l => l.contains(fn) && !l.contains("FileScan"))
+      .map(l => l -> l.matches("""^[\s+\-:]*\*\(\d+\) .*"""))
+
+  test("repetition gate runs the native expression inside codegen, no UDF") {
+    // the gate shape of a curation run: a filter on one signal field
+    // and a projection of another over the same struct
+    import org.apache.spark.sql.functions._
+    val plan = textDocs
+      .withColumn("sig", graft.ops.Repetition.signalsStruct(col("text"), dupN = 2))
+      .filter(col("sig._1") <= 120000L)
+      .select(col("doc_id"), col("sig._3").as("n_words"))
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("UDF("), s"repetition must not run as a UDF:\n$plan")
+    val ops = evaluating(plan, "graftrepetitionsignals(")
+    val names = ops.map(o => """\*\(\d+\) (\w+)""".r.findFirstMatchIn(o._1).map(_.group(1)))
+    assert(names == Seq(Some("Project"), Some("Filter")), plan)
+    assert(ops.forall(_._2), s"kernel outside whole-stage codegen:\n$plan")
+  }
+
+  test("blank-line paragraphs: no lambda, split once per row inside codegen") {
+    val plan = graft.ops.ParagraphDedup.paragraphs(textDocs, "doc_id", "text")
+      .queryExecution.executedPlan.toString
+    assert(!plan.toLowerCase.contains("lambdafunction"), plan)
+    // one evaluating operator: no inferred size/isnotnull filter that
+    // would split the text again
+    val ops = evaluating(plan, "graftparagraphs(")
+    assert(ops.length == 1 && "graftparagraphs\\(".r.findAllIn(ops.head._1).length == 1, plan)
+    assert(ops.forall(_._2), s"split outside whole-stage codegen:\n$plan")
+  }
+
   test("broadcast-state scoring kernels plan with ZERO exchanges") {
     // QualityTiers scoring (broadcast vocabulary) and Decontaminate
     // scanning (broadcast benchmark set) are per-row kernels: the plan
