@@ -1569,20 +1569,6 @@ object SparkEntry {
   private def qualityScoreE6(text: Column): Column =
     graft_quality_e6(text)
 
-  /** The pre-r08 two-regex Column composition of [[qualityScoreE6]] —
-    * kept ONLY so the test suite can assert the native expression
-    * bit-identical to the original derivation. */
-  private[graft] def qualityScoreE6Reference(text: Column): Column = {
-    val len = length(text)
-    val alnum = length(regexp_replace(text, "[^A-Za-z0-9]", ""))
-    val printable = length(regexp_replace(text, "[^ -~]", ""))
-    val score =
-      lit(0.35) * least(len.cast("double") / 700.0, lit(1.0)) +
-        lit(0.35) * (alnum.cast("double") * 1.0 / greatest(len, lit(1))) +
-        lit(0.30) * (printable.cast("double") * 1.0 / greatest(len, lit(1)))
-    round(score * 1000000).cast("long")
-  }
-
   /** DuckDB-equivalent SQL per SQL-expressible query (same aliases, same
     * ordering; cents-as-BIGINT to keep float association error out of the
     * hash compare). */

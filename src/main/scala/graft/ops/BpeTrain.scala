@@ -281,7 +281,8 @@ object BpeTrain {
     * skipped in O(1) instead of a full O(len) scan, taking the apply
     * from O(merges·len) to O(merges + hits·len) per word. A skipped
     * merge was a no-op under the sequential semantics, so the output is
-    * identical (property-tested against [[encodeWordReference]]). */
+    * identical (property-tested against the linear reference in
+    * the test suite). */
   private[graft] def encodeWord(word: String,
       merges: Seq[(String, String)]): Seq[String] = {
     if (word == null || word.isEmpty) return Seq.empty
@@ -306,17 +307,6 @@ object BpeTrain {
       }
     }
     scala.collection.immutable.ArraySeq.unsafeWrapArray(syms)
-  }
-
-  /** The pre-r08 linear apply — kept so the suite can pin the gated
-    * [[encodeWord]] identical. */
-  private[graft] def encodeWordReference(word: String,
-      merges: Seq[(String, String)]): Seq[String] = {
-    var syms: Seq[String] = word.toCharArray.map(_.toString).toSeq
-    merges.foreach { case (a, b) =>
-      if (syms.length > 1) syms = mergePair(syms, a, b)
-    }
-    syms
   }
 
   /** Tokenize documents under a trained merge list: adds

@@ -49,15 +49,6 @@ object Dedup {
   val Bands = 16 // 16 bands × 4 rows
   val RowsPerBand: Int = NumPerm / Bands
 
-  /** Per-band bucket population cap. A 100 TB crawl carries millions of
-    * near-identical boilerplate pages that land in the SAME band bucket;
-    * without a cap that one bucket yields O(m²) pairs and an OOM-sized
-    * row. Capped buckets keep the `bucketCap` lowest doc_ids (documented
-    * recall loss in pathological buckets — byte-identical mass dups are
-    * handled by the exact pre-pass below, so real-world hot buckets are
-    * already collapsed before this runs). */
-  val DefaultBucketCap = 2000
-
   /** 64-perm MinHash signature per doc (narrow map; one text pass). */
   def minhashSignatures(docs: DataFrame, shingleSize: Int = 3): DataFrame = {
     val sigUdf = udf((text: String) =>
@@ -65,23 +56,23 @@ object Dedup {
     docs.select(col("doc_id"), sigUdf(col("text")).as("sig"))
   }
 
+  /** One (band, band_hash, doc_id) row per band of each signature. */
+  private def banded(docs: DataFrame, shingleSize: Int): DataFrame =
+    minhashSignatures(docs, shingleSize).select(
+      col("doc_id"),
+      posexplode(bandHashes(col("sig"))).as(Seq("band", "band_hash")))
+
+  private def bandKeys = Seq(col("band"), col("band_hash"))
+
   /** LSH candidate pairs: docs sharing any band bucket (a < b).
-    * Shape: explode to (band, band_hash, doc_id) rows → per-bucket size
-    * cap via window row_number → bucket self-join with `a < b`. No
+    * Shape: explode to (band, band_hash, doc_id) rows → text-policy
+    * bucket cap ([[Buckets]]) → bucket self-join with `a < b`. No
     * collected id arrays, no m² UDF — the join output is bounded by
     * cap²/2 per bucket and every row is (long, long). */
   def minhashCandidates(docs: DataFrame, shingleSize: Int = 3,
-      bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val sigs = minhashSignatures(docs, shingleSize)
-    val banded = sigs.select(
-      col("doc_id"),
-      posexplode(bandHashes(col("sig"))).as(Seq("band", "band_hash")))
-    val w = Window.partitionBy(col("band"), col("band_hash"))
-      .orderBy(col("doc_id"))
-    val capped = banded
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= bucketCap)
-      .drop("rn")
+      bucketCap: Int = Buckets.Text.size): DataFrame = {
+    val capped = Buckets.cap(banded(docs, shingleSize), bandKeys,
+      Buckets.Text.order("doc_id"), bucketCap)
     val left = capped.select(col("band"), col("band_hash"),
       col("doc_id").as("a"))
     val right = capped.select(col("band"), col("band_hash"),
@@ -92,20 +83,12 @@ object Dedup {
       .distinct()
   }
 
-  /** Bucket-cap drop accounting: rows dropped per (band, band_hash) by
-    * the cap — `log()` this next to the candidate count so a silent
-    * recall loss never reads as full coverage. */
+  /** Rows the bucket cap drops across all (band, band_hash) buckets —
+    * `log()` this next to the candidate count so a silent recall loss
+    * never reads as full coverage. */
   def minhashBucketDrops(docs: DataFrame, shingleSize: Int = 3,
-      bucketCap: Int = DefaultBucketCap): Long = {
-    val sigs = minhashSignatures(docs, shingleSize)
-    sigs.select(
-      col("doc_id"),
-      posexplode(bandHashes(col("sig"))).as(Seq("band", "band_hash")))
-      .groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("n"))
-      .agg(coalesce(sum(greatest(col("n") - bucketCap, lit(0L))), lit(0L)))
-      .collect()(0).getLong(0)
-  }
+      bucketCap: Int = Buckets.Text.size): Long =
+    Buckets.drops(banded(docs, shingleSize), bandKeys, bucketCap)
 
   /** Near-dup pairs with estimated Jaccard ≥ threshold (from signature
     * agreement), then exact n-gram Jaccard verification.
@@ -117,7 +100,7 @@ object Dedup {
     * then reported between surviving representatives only. */
   def minhashNearDups(docs: DataFrame, threshold: Double = 0.8,
       shingleSize: Int = 3, exactPrepass: Boolean = true,
-      bucketCap: Int = DefaultBucketCap): DataFrame = {
+      bucketCap: Int = Buckets.Text.size): DataFrame = {
     val base = if (exactPrepass) exactSurvivors(docs) else docs
     val cand = minhashCandidates(base, shingleSize, bucketCap)
     val texts = base.select(col("doc_id"), col("text"))
@@ -153,11 +136,12 @@ object Dedup {
     *
     * Same hot-bucket defusal as minhash: exact-dedup pre-pass collapses
     * byte-identical floods (identical text ⇒ identical sketch ⇒ shared
-    * EVERY band) and a per-bucket cap bounds residual mass-identical
-    * sketches. Hamming stays in codegen (`bit_count(a XOR b)`). */
+    * EVERY band) and the text-policy bucket cap ([[Buckets]]) bounds
+    * residual mass-identical sketches. Hamming stays in codegen
+    * (`bit_count(a XOR b)`). */
   def simhashNearDups(docs: DataFrame, maxDistance: Int = 3,
       exactPrepass: Boolean = true,
-      bucketCap: Int = DefaultBucketCap): DataFrame = {
+      bucketCap: Int = Buckets.Text.size): DataFrame = {
     val base = if (exactPrepass) exactSurvivors(docs) else docs
     val sketched = base.select(col("doc_id"),
       graft_simhash(col("text")).as("sh"))
@@ -166,12 +150,8 @@ object Dedup {
       posexplode(array((0 until 4).map(b =>
         shiftrightunsigned(col("sh"), b * 16).bitwiseAND(lit(0xffffL))): _*))
         .as(Seq("band", "band_val")))
-    val wCap = Window.partitionBy(col("band"), col("band_val"))
-      .orderBy(col("doc_id"))
-    val capped = banded
-      .withColumn("rn", row_number().over(wCap))
-      .filter(col("rn") <= bucketCap)
-      .drop("rn")
+    val capped = Buckets.cap(banded, Seq(col("band"), col("band_val")),
+      Buckets.Text.order("doc_id"), bucketCap)
     val a = capped.select(col("band"), col("band_val"),
       col("doc_id").as("a"), col("sh").as("sh_a"))
     val b = capped.select(col("band"), col("band_val"),

@@ -49,7 +49,6 @@ object IvfIndex {
   val DefaultReplicas = 3
 
   val MaxCells = 65536
-  val DefaultCellCap = 10000
 
   /** Below this corpus size brute force beats IVF at its recall-first
     * operating point AND is exact: per-query IVF candidate work is
@@ -289,15 +288,13 @@ object IvfIndex {
     * hot-cell accounting for the bench (0 unless a cell outgrows
     * cellCap × MaxSubCells). */
   def cellDrops(corpus: DataFrame, centroids: Array[Array[Float]],
-      cellCap: Int = DefaultCellCap,
+      cellCap: Int = Buckets.Vector.size,
       replicas: Int = DefaultReplicas): Long = {
     val sc = corpus.sparkSession.sparkContext
     val assigned = assignMulti(corpus, sc.broadcast(centroids), replicas)
     val subCents = sc.broadcast(trainSubCells(assigned, cellCap))
-    keyedCandidates(assigned, subCents)
-      .groupBy(col("ckey")).agg(count(lit(1)).as("n"))
-      .agg(coalesce(sum(greatest(col("n") - cellCap, lit(0L))), lit(0L)))
-      .collect()(0).getLong(0)
+    Buckets.drops(keyedCandidates(assigned, subCents), Seq(col("ckey")),
+      cellCap)
   }
 
   /** IVF top-k: each query probes its `nprobe` nearest coarse cells (and
@@ -307,7 +304,7 @@ object IvfIndex {
     * (query, neighbor) sightings are deduped before ranking. */
   def topK(corpus: DataFrame, centroids: Array[Array[Float]], k: Int,
       nprobe: Int = DefaultNProbe,
-      cellCap: Int = DefaultCellCap,
+      cellCap: Int = Buckets.Vector.size,
       replicas: Int = DefaultReplicas,
       subProbe: Int = DefaultSubProbe,
       queries: DataFrame = null,
@@ -321,22 +318,15 @@ object IvfIndex {
     val bcCents = sc.broadcast(centroids)
     val assigned = assignMulti(corpus, bcCents, replicas)
     val bcSub = sc.broadcast(trainSubCells(assigned, cellCap))
-    // residual-cap safety net (a cell beyond cellCap × MaxSubCells):
-    // deterministic hash-ordered sample per sub-cell, drops accounted
-    // via cellDrops
-    val wKey = Window.partitionBy(col("ckey"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-    // ids only past this point: the probe fan-out (×replicas index rows,
-    // ×nprobe·subProbe query rows) and the candidate join must not carry
-    // the vectors — pairs are deduped as two longs and the embeddings
-    // join back once per side (Catalyst picks broadcast vs shuffled hash
-    // join by corpus size)
-    val candidates = keyedCandidates(assigned, bcSub)
-      .select(col("ckey"), col("vec_id")) // drop embeddings BEFORE the
-      // cap window: its sort shuffle must move (key, id) pairs, not
-      // dim-sized arrays per replicated row
-      .withColumn("rn", row_number().over(wKey))
-      .filter(col("rn") <= cellCap)
+    // ids only past this point: the cap window's sort shuffle, the probe
+    // fan-out (×replicas index rows, ×nprobe·subProbe query rows) and the
+    // candidate join move (key, id) pairs, never the vectors — pairs are
+    // deduped as two longs and the embeddings join back once per side.
+    // The vector-policy cap ([[Buckets]]) is the residual safety net for
+    // a cell beyond cellCap × MaxSubCells (drops accounted via cellDrops).
+    val candidates = Buckets.cap(
+      keyedCandidates(assigned, bcSub).select(col("ckey"), col("vec_id")),
+      Seq(col("ckey")), Buckets.Vector.order("vec_id"), cellCap)
       .select(col("ckey"), col("vec_id").as("neighbor_id"))
     val probeUdf = udf((v: Seq[Float]) => {
       val coarse = nearestCells(bcCents.value, v, nprobe)
@@ -401,7 +391,7 @@ object IvfIndex {
     * measurement, pre-trained centroids). */
   def topKAuto(corpus: DataFrame, k: Int,
       nprobe: Int = DefaultNProbe,
-      cellCap: Int = DefaultCellCap,
+      cellCap: Int = Buckets.Vector.size,
       replicas: Int = DefaultReplicas,
       subProbe: Int = DefaultSubProbe,
       knownN: Long = -1L,

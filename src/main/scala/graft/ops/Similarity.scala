@@ -335,41 +335,6 @@ object Similarity {
     corpus.withColumn("bucket", explode(lshUdf(col("embedding"))))
   }
 
-  /** Single-table bucketing (kept for bucket-statistics callers). */
-  def lshBuckets(corpus: DataFrame, signBits: Int = -1,
-      knownN: Long = -1L): DataFrame = {
-    val bits =
-      if (signBits > 0) signBits
-      else signBitsFor(if (knownN >= 0L) knownN else corpus.count())
-    val lshUdf = udf((emb: Seq[Float]) =>
-      SimilarityKernel.signBuckets(emb, bits, 1)(0).toInt)
-    corpus.withColumn("bucket", lshUdf(col("embedding")))
-  }
-
-  /** Per-(table, bucket) population cap — the cosine twin of
-    * [[Dedup.DefaultBucketCap]]: a 100 TB corpus carries floods of
-    * (near-)identical embeddings that land in the same sign bucket of
-    * EVERY table; without a cap one bucket yields O(m²) pairs.
-    * Byte-identical vectors are collapsed by the exact pre-pass first,
-    * so the cap only bounds residual near-identical floods (survivors
-    * are a deterministic hash-ordered sample; [[lshBucketDrops]]
-    * accounts what the cap discarded — reported by the bench, never a
-    * silent truncation). */
-  val DefaultBucketCap = 10000
-
-  private def cappedIds(corpus: DataFrame, signBits: Int, tables: Int,
-      knownN: Long, bucketCap: Int): DataFrame = {
-    val ids = lshTables(corpus.select(col("vec_id"), col("embedding")),
-      signBits, tables, knownN)
-      .select(col("bucket"), col("vec_id"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("bucket"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-    ids.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= bucketCap)
-      .drop("rn")
-  }
-
   /** Distinct candidate id pairs from the multi-table index: the
     * embedding is dropped BEFORE the bucket self-join, so the ×tables
     * fan-out and the join shuffle carry (bucket, id) rows only, and a
@@ -382,7 +347,10 @@ object Similarity {
   private def candidatePairs(corpus: DataFrame, signBits: Int, tables: Int,
       knownN: Long, symmetric: Boolean, bucketCap: Int,
       queryIds: DataFrame = null, dedupPairs: Boolean = true): DataFrame = {
-    val ids = cappedIds(corpus, signBits, tables, knownN, bucketCap)
+    val ids = Buckets.cap(
+      lshTables(corpus.select(col("vec_id"), col("embedding")),
+        signBits, tables, knownN).select(col("bucket"), col("vec_id")),
+      Seq(col("bucket")), Buckets.Vector.order("vec_id"), bucketCap)
     val left0 = ids.select(col("bucket"), col("vec_id").as("a"))
     // query-set search (a ∈ queries, b ∈ corpus): restrict the LEFT side
     // BEFORE the bucket self-join — the join output shrinks by |Q|/n,
@@ -403,16 +371,13 @@ object Similarity {
     if (dedupPairs) raw.dropDuplicates("a", "b") else raw
   }
 
-  /** Rows dropped by `bucketCap` across all tables (hot-bucket
-    * accounting for the bench). */
+  /** Rows dropped by the vector-policy bucket cap ([[Buckets]]) across
+    * all tables (hot-bucket accounting for the bench). */
   def lshBucketDrops(corpus: DataFrame, signBits: Int = -1,
       tables: Int = DefaultTables, knownN: Long = -1L,
-      bucketCap: Int = DefaultBucketCap): Long =
-    lshTables(corpus.select(col("vec_id"), col("embedding")),
-      signBits, tables, knownN)
-      .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-      .agg(coalesce(sum(greatest(col("n") - bucketCap, lit(0L))), lit(0L)))
-      .collect()(0).getLong(0)
+      bucketCap: Int = Buckets.Vector.size): Long =
+    Buckets.drops(lshTables(corpus.select(col("vec_id"), col("embedding")),
+      signBits, tables, knownN), Seq(col("bucket")), bucketCap)
 
   /** Representatives after collapsing byte-identical embeddings (min
     * vec_id keeps) — the cosine twin of [[Dedup.exactSurvivors]]: mass
@@ -564,7 +529,7 @@ object Similarity {
     * budget takes the indexed path instead of a driver OOM. */
   def lshCosineTopK(corpus: DataFrame, k: Int, signBits: Int = -1,
       tables: Int = -1, knownN: Long = -1L,
-      bucketCap: Int = DefaultBucketCap,
+      bucketCap: Int = Buckets.Vector.size,
       queries: DataFrame = null,
       broadcastBudget: Long = DefaultBroadcastBudgetBytes): DataFrame = {
     val auto = signBits <= 0
@@ -634,7 +599,7 @@ object Similarity {
   def cosineNearDups(corpus: DataFrame, threshold: Double,
       signBits: Int = -1, tables: Int = -1,
       knownN: Long = -1L, exactPrepass: Boolean = true,
-      bucketCap: Int = DefaultBucketCap,
+      bucketCap: Int = Buckets.Vector.size,
       broadcastBudget: Long = DefaultBroadcastBudgetBytes): DataFrame = {
     // mass byte-identical embeddings collapse to one representative
     // BEFORE bucketing (they are exact-dedup output, not near-dup
@@ -788,41 +753,6 @@ object SimilarityKernel {
         while (d < emb.length) {
           if (((words(d >>> 6) >>> (d & 63)) & 1L) != 0L) dot += emb(d)
           else dot -= emb(d)
-          d += 1
-        }
-        if (dot >= 0) bucket |= (1L << j)
-        j += 1
-      }
-      out(t) = (t.toLong << 32) | bucket
-      t += 1
-    }
-    out
-  }
-
-  /** Reference (uncached) signature loop — kept ONLY so the test suite
-    * can assert the cached-plane path is bit-identical to the original
-    * per-row hash derivation. */
-  private[ops] def signBucketsReference(embSeq: Seq[Float], bits: Int,
-      tables: Int): Array[Long] = {
-    val out = new Array[Long](tables)
-    if (embSeq == null || embSeq.isEmpty) {
-      var t = 0
-      while (t < tables) { out(t) = t.toLong << 32; t += 1 }
-      return out
-    }
-    val emb = toFloatArray(embSeq)
-    var t = 0
-    while (t < tables) {
-      var bucket = 0L
-      var j = 0
-      while (j < bits) {
-        var dot = 0.0
-        var d = 0
-        while (d < emb.length) {
-          var h = ((t * 131 + j) * 0x9e3779b9L + d * 0x85ebca6bL + 0xc2b2ae35L)
-          h ^= h >>> 16; h *= 0x45d9f3bL; h ^= h >>> 16
-          val sign = if ((h & 1L) == 0L) 1.0 else -1.0
-          dot += sign * emb(d)
           d += 1
         }
         if (dot >= 0) bucket |= (1L << j)

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Winnowing document fingerprints (Schleimer, Wilkerson, Aiken, "Winnowing:
   * Local Algorithms for Document Fingerprinting", SIGMOD 2003 — the MOSS
@@ -116,37 +115,17 @@ object Winnowing {
       outCol: String = "fps"): DataFrame =
     docs.withColumn(outCol, fpUdf(k, w)(col(textCol)))
 
-  /** Same per-bucket population cap rationale as Dedup.DefaultBucketCap:
-    * a fingerprint shared by a mass-duplicated boilerplate block must not
-    * produce an O(m²) bucket. */
-  val DefaultBucketCap = 2000
-
   /** Candidate near-dup pairs: documents sharing ≥ `minShared` winnowed
-    * fingerprints (a < b). Explode → capped fingerprint bucket →
-    * ids-only self-join → shared-count filter. Bytes on the wire per
-    * row: two longs. */
+    * fingerprints (a < b). Explode → text-policy capped fingerprint
+    * bucket ([[Buckets]]) → ids-only self-join → shared-count filter.
+    * Bytes on the wire per row: two longs. */
   def candidatePairs(docs: DataFrame, minShared: Int = 2,
       k: Int = DefaultK, w: Int = DefaultW,
-      bucketCap: Int = DefaultBucketCap): DataFrame =
-    candidatePairsFromFps(
-      withFingerprints(docs.select(col("doc_id"), col("text")), k, w),
-      minShared, bucketCap)
-
-  /** [[candidatePairs]] over an ALREADY-fingerprinted frame
-    * (doc_id, fps) — for callers that computed (or persisted) the
-    * kernel output themselves. NOTE: x_winnow_fingerprints measured
-    * FASTER re-running the kernel in both of its crossJoin subtrees
-    * than materializing a shared frame (concurrent subtrees beat a
-    * serialized materialization phase), so it deliberately does NOT
-    * use this entry point. */
-  def candidatePairsFromFps(fpDocs: DataFrame, minShared: Int = 2,
-      bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val fps = fpDocs.select(col("doc_id"), explode(col("fps")).as("fp"))
-    val wCap = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
-    val capped = fps
-      .withColumn("rn", row_number().over(wCap))
-      .filter(col("rn") <= bucketCap)
-      .drop("rn")
+      bucketCap: Int = Buckets.Text.size): DataFrame = {
+    val fps = withFingerprints(docs.select(col("doc_id"), col("text")), k, w)
+      .select(col("doc_id"), explode(col("fps")).as("fp"))
+    val capped = Buckets.cap(fps, Seq(col("fp")),
+      Buckets.Text.order("doc_id"), bucketCap)
     val left = capped.select(col("fp"), col("doc_id").as("a"))
     val right = capped.select(col("fp"), col("doc_id").as("b"))
     left.join(right, Seq("fp"))

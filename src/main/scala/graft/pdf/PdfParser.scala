@@ -840,14 +840,19 @@ object PdfParser {
     } catch { case _: Exception => null }
   }
 
+  /** Output bound of each expanding filter stage (Flate, LZW,
+    * RunLength): a stage stops there and keeps what it decoded. */
+  private val MaxStageBytes = 64 << 20
+
   /** RunLengthDecode: length byte L ∈ [0,127] copies the next L+1 bytes
     * literally; L ∈ [129,255] repeats the next byte 257−L times; 128 is
-    * EOD (spec §7.4.5). */
+    * EOD (spec §7.4.5). Output stops at [[MaxStageBytes]]. */
   private[pdf] def runLengthDecode(data: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 2))
+    val run = new Array[Byte](128)
     var i = 0
     var done = false
-    while (i < data.length && !done) {
+    while (i < data.length && !done && out.size < MaxStageBytes) {
       val l = data(i) & 0xff
       i += 1
       if (l == 128) done = true
@@ -856,10 +861,9 @@ object PdfParser {
         out.write(data, i, n)
         i += n
       } else if (i < data.length) {
-        val b = data(i) & 0xff
+        java.util.Arrays.fill(run, 0, 257 - l, data(i))
+        out.write(run, 0, 257 - l)
         i += 1
-        var r = 257 - l
-        while (r > 0) { out.write(b); r -= 1 }
       } else done = true
     }
     out.toByteArray
@@ -907,7 +911,7 @@ object PdfParser {
             prev = entry
             if (codeBits < 12 && dictSize + 1 >= (1 << codeBits))
               codeBits += 1 // EarlyChange = 1
-            if (out.size > (64 << 20)) done = true
+            if (out.size > MaxStageBytes) done = true
           }
         }
       }
@@ -926,7 +930,7 @@ object PdfParser {
       val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 4))
       val buf = new Array[Byte](8192)
       var total = 0
-      while (!inf.finished() && total < (64 << 20)) {
+      while (!inf.finished() && total < MaxStageBytes) {
         val n = inf.inflate(buf)
         if (n == 0 && !inf.finished() &&
             (inf.needsDictionary() || !inf.needsInput())) return null

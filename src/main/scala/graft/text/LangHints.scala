@@ -18,7 +18,7 @@ object LangHints {
   // WordAlts over the aligned lowercase copy (indexOf probes instead of
   // a full regex scan per hint — the regex stays as the misalignment
   // fallback and the fuzz-parity reference). First matching hint wins.
-  private val Hints: List[(Pattern, Array[Array[String]], String, String)] = List(
+  private[text] val Hints: List[(Pattern, Array[Array[String]], String, String)] = List(
     (p("\\b(cpf|cnpj|rg)\\b"), WordAlts.phrases("cpf|cnpj|rg"), "pt", "BR"),
     (p("\\b(rfc|curp|ine)\\b"), WordAlts.phrases("rfc|curp|ine"), "es", "MX"),
     (p("\\b(dni|nie)\\b"), WordAlts.phrases("dni|nie"), "es", "ES"),
@@ -61,12 +61,4 @@ object LangHints {
         (lang, country)
     }.getOrElse(("en", ""))
   }
-
-  /** Regex-only reference path (fuzz-parity baseline in ScoringSpec). */
-  private[text] def detectLowerReference(t: String,
-      lower: String): (String, String) =
-    Hints.collectFirst {
-      case (pat, _, lang, country) if pat.matcher(t).find() =>
-        (lang, country)
-    }.getOrElse(("en", ""))
 }

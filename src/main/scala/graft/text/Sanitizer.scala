@@ -18,7 +18,7 @@ object Sanitizer {
   /** string.punctuation in Python. */
   private val Punctuation = """!"#$%&'()*+,-./:;<=>?@[\]^_`{|}~"""
 
-  private val allowedAscii: Array[Boolean] = {
+  private[text] val allowedAscii: Array[Boolean] = {
     val a = new Array[Boolean](128)
     for (c <- 'a' to 'z') a(c) = true
     for (c <- 'A' to 'Z') a(c) = true
@@ -45,36 +45,9 @@ object Sanitizer {
   private val trailingSep: Pattern = uPattern(
     "(\\d{3,4})[-–—−.,:;]+(?=\\s|$)")
 
-  /** Sequential reference for [[scrubFilterCollapse]] — kept ONLY so
-    * the fuzz suite can assert the fused pass is byte-identical to the
-    * staged composition. */
-  private[text] def scrubFilterCollapseReference(s: String): String = {
-    val scrubbed = dropUnpairedSurrogates(s)
-    var drop = 0
-    var i = 0
-    while (i < scrubbed.length) {
-      val c = scrubbed.charAt(i)
-      if (c <= 127 && !allowedAscii(c)) drop += 1
-      i += 1
-    }
-    val filtered =
-      if (drop == 0) scrubbed
-      else {
-        val kept = new java.lang.StringBuilder(scrubbed.length - drop)
-        i = 0
-        while (i < scrubbed.length) {
-          val c = scrubbed.charAt(i)
-          if (c > 127 || allowedAscii(c)) kept.append(c)
-          i += 1
-        }
-        kept.toString
-      }
-    collapseWsStrip(filtered)
-  }
-
   /** Python `s.encode('utf-8', errors='ignore').decode('utf-8')`:
     * identity except unpaired surrogates are dropped. */
-  private def dropUnpairedSurrogates(s: String): String = {
+  private[text] def dropUnpairedSurrogates(s: String): String = {
     var hasBad = false
     var i = 0
     while (i < s.length && !hasBad) {

@@ -116,7 +116,7 @@ class BpeTrainSpec extends AnyFunSuite {
       val len = rnd.nextInt(12)
       val w = (0 until len).map(_ => ('a' + rnd.nextInt(5)).toChar).mkString
       assert(BpeTrain.encodeWord(w, merges) ==
-        BpeTrain.encodeWordReference(w, merges), s"word '$w'")
+        KernelReferences.encodeWord(w, merges), s"word '$w'")
     }
     assert(BpeTrain.encodeWord("", merges) == Seq.empty)
   }

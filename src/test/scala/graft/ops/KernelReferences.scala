@@ -2,7 +2,7 @@ package graft.ops
 
 import java.util.Locale
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The curation operators' per-row kernels in their plain string-
@@ -137,4 +137,62 @@ object KernelReferences {
         filter(split(col(textCol), "\n\n+"),
           p => length(trim(p)) > 0).as("ps"))
       .select(col("id"), posexplode(col("ps")).as(Seq("para_idx", "para")))
+
+  /** The two-regex Column composition the native `graft_quality_e6`
+    * expression replaced. */
+  def qualityScoreE6(text: Column): Column = {
+    val len = length(text)
+    val alnum = length(regexp_replace(text, "[^A-Za-z0-9]", ""))
+    val printable = length(regexp_replace(text, "[^ -~]", ""))
+    val score =
+      lit(0.35) * least(len.cast("double") / 700.0, lit(1.0)) +
+        lit(0.35) * (alnum.cast("double") * 1.0 / greatest(len, lit(1))) +
+        lit(0.30) * (printable.cast("double") * 1.0 / greatest(len, lit(1)))
+    round(score * 1000000).cast("long")
+  }
+
+  /** BPE encoding as the linear apply of every merge in rank order (the
+    * gated `BpeTrain.encodeWord` skips merges that cannot occur). */
+  def encodeWord(word: String, merges: Seq[(String, String)]): Seq[String] = {
+    var syms: Seq[String] = word.toCharArray.map(_.toString).toSeq
+    merges.foreach { case (a, b) =>
+      if (syms.length > 1) syms = BpeTrain.mergePair(syms, a, b)
+    }
+    syms
+  }
+
+  /** Sign-LSH signatures with each hyperplane sign rehashed per
+    * (table, bit, dim) instead of read from the cached planes of
+    * `SimilarityKernel.signBuckets`. */
+  def signBuckets(embSeq: Seq[Float], bits: Int,
+      tables: Int): Array[Long] = {
+    val out = new Array[Long](tables)
+    if (embSeq == null || embSeq.isEmpty) {
+      var t = 0
+      while (t < tables) { out(t) = t.toLong << 32; t += 1 }
+      return out
+    }
+    val emb = embSeq.toArray
+    var t = 0
+    while (t < tables) {
+      var bucket = 0L
+      var j = 0
+      while (j < bits) {
+        var dot = 0.0
+        var d = 0
+        while (d < emb.length) {
+          var h = ((t * 131 + j) * 0x9e3779b9L + d * 0x85ebca6bL + 0xc2b2ae35L)
+          h ^= h >>> 16; h *= 0x45d9f3bL; h ^= h >>> 16
+          val sign = if ((h & 1L) == 0L) 1.0 else -1.0
+          dot += sign * emb(d)
+          d += 1
+        }
+        if (dot >= 0) bucket |= (1L << j)
+        j += 1
+      }
+      out(t) = (t.toLong << 32) | bucket
+      t += 1
+    }
+    out
+  }
 }

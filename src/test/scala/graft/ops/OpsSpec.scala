@@ -21,6 +21,16 @@ class OpsSpec extends AnyFunSuite {
   private def docs(rows: (Long, String)*) =
     rows.toDF("doc_id", "text")
 
+  /** Every (a, b) pair with a < b over `ids`. */
+  private def pairsOf(ids: Seq[Long]): Set[(Long, Long)] =
+    (for (a <- ids; b <- ids if a < b) yield (a, b)).toSet
+
+  /** The first `cap` ids in vector-bucket order, (xxhash64(id), id),
+    * hashed here with Spark's XXH64 at its default seed 42. */
+  private def hashFirst(ids: Seq[Long], cap: Int): Seq[Long] =
+    ids.sortBy(i => (org.apache.spark.sql.catalyst.expressions.XXH64
+      .hashLong(i, 42L), i)).take(cap)
+
   test("exact dedup keeps min doc_id per distinct text") {
     val d = docs(1L -> "aaa", 2L -> "bbb", 3L -> "aaa", 4L -> "aaa")
     val out = Dedup.exact(d).collect()
@@ -58,6 +68,8 @@ class OpsSpec extends AnyFunSuite {
     val d = hot.toDF("doc_id", "text")
     val capped = Dedup.minhashCandidates(d, bucketCap = 10)
     assert(capped.count() == 45L) // C(10,2): same 10 survivors per band
+    // the survivors are the 10 lowest doc_ids
+    assert(capped.as[(Long, Long)].collect().toSet == pairsOf(0L until 10L))
     val drops = Dedup.minhashBucketDrops(d, bucketCap = 10)
     assert(drops == 16L * 1990L, s"drops $drops")
     // end-to-end: exact pre-pass collapses the flood entirely
@@ -94,6 +106,8 @@ class OpsSpec extends AnyFunSuite {
     val capped = Dedup.simhashNearDups(flood, maxDistance = 3,
       exactPrepass = false, bucketCap = 10)
     assert(capped.count() == 45L)
+    assert(capped.select("a", "b").as[(Long, Long)].collect().toSet ==
+      pairsOf(0L until 10L)) // the 10 lowest doc_ids survive
   }
 
   test("brute cosine topk: identical vector ranks first") {
@@ -152,16 +166,33 @@ class OpsSpec extends AnyFunSuite {
       signBits = Similarity.signBitsFor(2000),
       exactPrepass = false, bucketCap = 10)
     assert(capped.count() == 45L, s"got ${capped.count()}") // C(10,2)
+    // the survivors are a hash-ordered sample, not the lowest ids
+    assert(capped.select("a", "b").as[(Long, Long)].collect().toSet ==
+      pairsOf(hashFirst(0L until 2000L, 10).sorted))
     val drops = Similarity.lshBucketDrops(flood, bucketCap = 10)
     assert(drops > 0L)
     // near-identical (not byte-identical) flood: pre-pass can't collapse,
     // cap still bounds the blow-up
-    val jitter = (0L until 1500L).map(i =>
+    val jitterRows = (0L until 1500L).map(i =>
       (i, v.updated(0, v(0) * (1.0f + i * 1e-7f))))
-      .toDF("vec_id", "embedding")
+    val jitter = jitterRows.toDF("vec_id", "embedding")
     val bounded = Similarity.cosineNearDups(jitter, 0.9,
       signBits = Similarity.signBitsFor(1500), bucketCap = 20)
     assert(bounded.count() == 190L) // C(20,2)
+    // survivors: the hash-ordered first 20 of the pre-pass keepers (float
+    // rounding makes some jittered vectors equal; the min vec_id keeps)
+    val keepers = jitterRows.groupBy(_._2).values.map(_.map(_._1).min).toSeq
+    assert(bounded.select("a", "b").as[(Long, Long)].collect().toSet ==
+      pairsOf(hashFirst(keepers, 20).sorted))
+    // IVF cells share the vector policy: one cell holding the whole
+    // flood (identical members all pick sub-cell 0) keeps the same
+    // hash-ordered 10, so with k above the cap every neighbor is one of
+    // them and each of them is someone's neighbor
+    val one = Array(v.toArray)
+    assert(IvfIndex.cellDrops(flood, one, cellCap = 10) == 1990L)
+    val ivf = IvfIndex.topK(flood, one, k = 20, cellCap = 10)
+    assert(ivf.select("neighbor_id").distinct().as[Long].collect().toSet ==
+      hashFirst(0L until 2000L, 10).toSet)
   }
 
   test("language id on real phrases") {
@@ -606,11 +637,11 @@ class OpsSpec extends AnyFunSuite {
     for (dim <- Seq(3, 64, 129); (bits, tables) <- Seq((4, 24), (8, 12), (24, 12))) {
       val v = Seq.fill(dim)(r.nextGaussian().toFloat)
       val fast = SimilarityKernel.signBuckets(v, bits, tables)
-      val ref = SimilarityKernel.signBucketsReference(v, bits, tables)
+      val ref = KernelReferences.signBuckets(v, bits, tables)
       assert(fast.sameElements(ref), s"dim=$dim bits=$bits tables=$tables")
     }
     assert(SimilarityKernel.signBuckets(Seq.empty[Float], 8, 3)
-      .sameElements(SimilarityKernel.signBucketsReference(Seq.empty[Float], 8, 3)))
+      .sameElements(KernelReferences.signBuckets(Seq.empty[Float], 8, 3)))
   }
 
   test("cosine near-dup recall: lsh-bucketed vs exact all-pairs") {

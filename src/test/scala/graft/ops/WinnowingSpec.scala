@@ -91,5 +91,7 @@ class WinnowingSpec extends AnyFunSuite {
     val pairs = Winnowing.candidatePairs(docs, minShared = 1, bucketCap = 5)
     // cap=5 keeps the 5 lowest ids per bucket: max C(5,2)=10 pairs
     assert(pairs.count() == 10)
+    assert(pairs.select("a", "b").as[(Long, Long)].collect().toSet ==
+      (for (a <- 0L until 5L; b <- 0L until 5L if a < b) yield (a, b)).toSet)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** The native one-pass GraftQualityE6 expression must be bit-identical
   * to the two-regex Column composition it replaced (kept as
-  * SparkEntry.qualityScoreE6Reference), including on multi-byte,
+  * graft.ops.KernelReferences.qualityScoreE6), including on multi-byte,
   * control-char, empty and long inputs. */
 class GraftQualityE6Spec extends AnyFunSuite {
 
@@ -31,7 +31,7 @@ class GraftQualityE6Spec extends AnyFunSuite {
     val df = (fixed ++ synthed).toDF("text")
     val rows = df.select(
         GraftFunctions.graft_quality_e6(col("text")).as("native"),
-        graft.SparkEntry.qualityScoreE6Reference(col("text")).as("ref"))
+        graft.ops.KernelReferences.qualityScoreE6(col("text")).as("ref"))
       .collect()
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1), r))
     assert(rows.length == fixed.length + 400)

@@ -252,7 +252,7 @@ class ScoringSpec extends AnyFunSuite {
         }
         // LangHints full-path parity (fast path vs regex-only reference)
         assert(LangHints.detectLower(text, lower) ==
-          LangHints.detectLowerReference(text, lower), s"langhints '$text'")
+          TextReferences.detectLower(text, lower), s"langhints '$text'")
       }
       // necessary-condition gates can only prune true negatives
       if (Quality.dateLikePattern.matcher(text).find() ||
@@ -275,7 +275,7 @@ class ScoringSpec extends AnyFunSuite {
       val lower = t.toLowerCase
       assert(lower.length == t.length)
       assert(LangHints.detectLower(t, lower) ==
-        LangHints.detectLowerReference(t, lower), s"'$t'")
+        TextReferences.detectLower(t, lower), s"'$t'")
     }
     assert(LangHints.detect("my ſsn number") == ("en", "US"))
     assert(LangHints.detect("DNı: 12345678X") == ("es", "ES"))
