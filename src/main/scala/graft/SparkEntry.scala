@@ -1439,11 +1439,6 @@ object SparkEntry {
     streamCorpus
   }
 
-  /** IVF centroids trained once per (JVM, sfDir) — training is
-    * deterministic (hash-sampled Lloyd), so the cache changes no
-    * result; it removes the fixed train-collect overhead from repeat
-    * x_ann_recall runs (a production recall gate trains once and
-    * probes many times — same shape). */
   /** BPE merges cached per (JVM, sfDir): training is deterministic, so
     * x_bpe_train and x_bpe_tokens share one 12-round train instead of
     * each paying it (a production pipeline trains the tokenizer once
@@ -1460,6 +1455,11 @@ object SparkEntry {
     bpeTrained._2
   }
 
+  /** IVF centroids trained once per (JVM, sfDir) — training is
+    * deterministic (hash-sampled Lloyd), so the cache changes no
+    * result; it removes the fixed train-collect overhead from repeat
+    * x_ann_recall runs (a production recall gate trains once and
+    * probes many times — same shape). */
   @volatile private var ivfTrained: (String, Array[Array[Float]]) = _
   private def ivfCentroids(dir: String, emb: DataFrame, n: Long)
       : Array[Array[Float]] = synchronized {
@@ -1468,14 +1468,6 @@ object SparkEntry {
     ivfTrained._2
   }
 
-  /** Brute top-k (query_id, neighbor_id) pairs for the ANN recall
-    * gate, computed once per (JVM, sfDir) — the exact kernel is
-    * deterministic, so the cache changes no result; repeat gate runs
-    * (bench warm-up + min-of-2 passes) skip the exact pass entirely.
-    * The pair set is |sample|·k ≈ 1.25·n rows of two longs — driver-
-    * safe at every scale this gate runs at (the gate itself samples
-    * queries precisely so its cost stays bounded; a 10^12-row corpus
-    * would cap the sample further, not collect more). */
   /** (batch, seen) frames for the incremental-dedup rows: urls
     * synthesized from doc_id with the expression the oracle repeats. */
   private def incDedupFrames(s: SparkSession, dir: String)
@@ -1500,6 +1492,14 @@ object SparkEntry {
       bloomIdx._2
     }
 
+  /** Brute top-k (query_id, neighbor_id) pairs for the ANN recall
+    * gate, computed once per (JVM, sfDir) — the exact kernel is
+    * deterministic, so the cache changes no result; repeat gate runs
+    * (bench warm-up + min-of-2 passes) skip the exact pass entirely.
+    * The pair set is |sample|·k ≈ 1.25·n rows of two longs — driver-
+    * safe at every scale this gate runs at (the gate itself samples
+    * queries precisely so its cost stays bounded; a 10^12-row corpus
+    * would cap the sample further, not collect more). */
   @volatile private var brutePairCache: (String, Array[(Long, Long)]) = _
   private def brutePairs(dir: String, emb: DataFrame,
       sampleQ: DataFrame): Array[(Long, Long)] = synchronized {

@@ -68,7 +68,7 @@ object ContentClassifier {
           var e = i
           while (e > start && !Character.isLetter(text.charAt(e - 1))) e -= 1
           if (e > start &&
-              Stopwords.contains(text.substring(start, e).toLowerCase))
+              Stopwords.contains(text.substring(start, e).toLowerCase(java.util.Locale.ROOT)))
             hits += 1
         }
         start = i + 1

@@ -16,7 +16,6 @@ final class DomArena(
     val textIdx: Array[Int],      // index into texts, -1 for elements
     val texts: Array[String]      // decoded text-node payloads
 ) {
-  @inline def isText(i: Int): Boolean = tag(i) == DomArena.TextKind
   @inline def text(i: Int): String = texts(textIdx(i))
 }
 

@@ -76,7 +76,4 @@ object HtmlTags {
 
   /** Headings (candidate short-good blocks). */
   val isHeading: Array[Boolean] = set("h1", "h2", "h3", "h4", "h5", "h6")
-
-  /** <li> inside these lists gets the list's link-density context. */
-  val isList: Array[Boolean] = set("ul", "ol", "dl")
 }

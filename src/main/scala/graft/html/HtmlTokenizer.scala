@@ -149,7 +149,7 @@ object HtmlTokenizer {
   private[html] def sniffCharset(bytes: Array[Byte]): String = {
     val n = math.min(bytes.length, 1024)
     val head = new String(bytes, 0, n,
-      java.nio.charset.StandardCharsets.ISO_8859_1).toLowerCase
+      java.nio.charset.StandardCharsets.ISO_8859_1).toLowerCase(java.util.Locale.ROOT)
     val i = head.indexOf("charset=")
     if (i < 0) return "utf-8"
     var j = i + "charset=".length
@@ -245,7 +245,7 @@ object HtmlTokenizer {
           var j = i + 2
           val nameStart = j
           while (j < n && isNameChar(doc.charAt(j))) j += 1
-          val tagName = doc.substring(nameStart, j).toLowerCase
+          val tagName = doc.substring(nameStart, j).toLowerCase(java.util.Locale.ROOT)
           val tagId = HtmlTags.id(tagName)
           i = skipTo(">", j)
           textStart = i
@@ -258,7 +258,7 @@ object HtmlTokenizer {
           var j = i + 1
           val nameStart = j
           while (j < n && isNameChar(doc.charAt(j))) j += 1
-          val tagName = doc.substring(nameStart, j).toLowerCase
+          val tagName = doc.substring(nameStart, j).toLowerCase(java.util.Locale.ROOT)
           val tagId = HtmlTags.id(tagName)
           // skip attributes (quote-aware) to '>'
           var selfClosing = false

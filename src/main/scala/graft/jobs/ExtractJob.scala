@@ -1,8 +1,9 @@
 package graft.jobs
 
 import org.apache.spark.sql.SparkSession
-import graft.pipeline.{ExtractPipeline, PagesSynth}
-import graft.sources.Sources
+import org.apache.spark.sql.functions.col
+import graft.pipeline.ExtractPipeline
+import graft.sources.{Jsonl, Sources, Warc}
 
 /** spark-submit entry point for the production extraction run
   * (SURVEY §7.1 jobs/):
@@ -22,20 +23,31 @@ object ExtractJob {
     Set("input", "output", "lineage", "run-id", "buckets", "narrow",
       "warc-split-mb", "wet", "cdx", "jsonl")
 
+  private val Usage =
+    "usage: ExtractJob --input <parquet|warc:glob|synth:N> --output <dir> " +
+      "--lineage <dir> --run-id <id> [--buckets B] [--narrow true] " +
+      "[--warc-split-mb M] [--wet <dir>] [--cdx true] [--jsonl <dir>]"
+
   def main(args: Array[String]): Unit = {
     // strict parsing: a dangling or unknown flag must not silently fall
     // back to defaults (it would resume someone else's lineage dir)
     if (args.length % 2 != 0 || args.grouped(2).exists(p =>
         !p(0).startsWith("--") || !KnownOpts.contains(p(0).drop(2)))) {
-      System.err.println(
-        "usage: ExtractJob --input <parquet|warc:glob|synth:N> --output <dir> " +
-          "--lineage <dir> --run-id <id> [--buckets B] [--narrow true] " +
-          "[--warc-split-mb M] [--wet <dir>] [--cdx true] [--jsonl <dir>]")
+      System.err.println(Usage)
       sys.exit(2)
     }
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
+    // strict like the other options: a non-boolean value exits through
+    // the usage path, not a stack trace
+    def flag(name: String): Boolean = opts.get(name) match {
+      case None | Some("false") => false
+      case Some("true") => true
+      case Some(other) =>
+        System.err.println(s"--$name must be true or false (got '$other'); $Usage")
+        sys.exit(2)
+    }
 
     val input = opts.getOrElse("input", "synth:100000")
     val output = opts.getOrElse("output", "/tmp/graft-out")
@@ -68,41 +80,27 @@ object ExtractJob {
         val n = input.stripPrefix("synth:").toLong
         ExtractPipeline.pages(spark, n, buckets)
       } else if (input.startsWith("warc:")) {
-        // raw crawl ingest: parse WARC files (plain or .warc.gz) at the
-        // cluster edge, one task per file — the Common-Crawl layout.
-        // --warc-split-mb M slices files bigger than M MB into sub-file
-        // work units (exact gzip-member attribution) for rogue giants.
-        val glob = input.stripPrefix("warc:")
-        opts.get("warc-split-mb") match {
-          case None =>
-            graft.sources.Warc.warcFiles(spark, glob)
-          case Some(v) =>
-            val mb = scala.util.Try(v.toLong).filter(_ > 0).getOrElse {
-              System.err.println(
-                s"--warc-split-mb must be a positive int (got '$v')")
-              sys.exit(2)
-            }
-            val splits = graft.sources.Warc.planSplits(spark, glob, mb << 20)
-            graft.sources.Warc.warcSplitFiles(spark, splits)
+        // raw crawl ingest: parse WARC files (plain, .warc.gz, .warc.zst)
+        // at the cluster edge, one task per file — the Common-Crawl
+        // layout. --warc-split-mb M slices files bigger than M MB into
+        // sub-file work units (exact gzip-member attribution) for rogue
+        // giants.
+        val unitBytes = opts.get("warc-split-mb").fold(Warc.WholeFiles) { v =>
+          val mb = scala.util.Try(v.toLong).filter(_ > 0).getOrElse {
+            System.err.println(
+              s"--warc-split-mb must be a positive int (got '$v')")
+            sys.exit(2)
+          }
+          mb << 20
         }
+        Warc.warcSplitFiles(spark,
+          Warc.planSplits(spark, input.stripPrefix("warc:"), unitBytes))
       } else Sources.pagesTable(spark, input)
 
     // --narrow true: write only (url, text, status, bytes_in, bucket) —
     // half the output bytes for consumers that don't need the
-    // fields/cards/analytics structs. Strict like the other options: a
-    // non-boolean value exits through the usage path, not a stack trace.
-    val narrow = opts.get("narrow") match {
-      case None => false
-      case Some("true") => true
-      case Some("false") => false
-      case Some(other) =>
-        System.err.println(
-          s"--narrow must be true or false (got '$other'); " +
-            "usage: ExtractJob --input <parquet|warc:glob|synth:N> --output <dir> " +
-            "--lineage <dir> --run-id <id> [--buckets B] [--narrow true] " +
-          "[--warc-split-mb M] [--wet <dir>]")
-        sys.exit(2)
-    }
+    // fields/cards/analytics structs.
+    val narrow = flag("narrow")
     // --wet <dir>: additionally publish the run's text as Common-Crawl
     // WET-style conversion records (the format downstream CC-WET
     // consumers already read). Needs warc_ts → wide output only.
@@ -115,14 +113,7 @@ object ExtractJob {
     // --cdx true: also write one CDX sidecar per WET part file (the
     // Common-Crawl index layout — urlkey, ts14, exact byte extents for
     // wayback-style random access)
-    val cdx = opts.get("cdx") match {
-      case None => false
-      case Some("true") => true
-      case Some("false") => false
-      case Some(other) =>
-        System.err.println(s"--cdx must be true or false (got '$other')")
-        sys.exit(2)
-    }
+    val cdx = flag("cdx")
     if (cdx && wetDir.isEmpty) {
       System.err.println("--cdx true requires --wet <dir> (the sidecars " +
         "index the WET output)")
@@ -137,19 +128,12 @@ object ExtractJob {
       ExtractPipeline.run(spark, pages, output, lineage, runId, buckets,
         ExtractPipeline.DefaultSalt, narrowOutput = narrow)
     val wetFiles = wetDir.map { d =>
-      graft.sources.Warc.writeWet(
-        spark.read.parquet(output)
-          .select(org.apache.spark.sql.functions.col("url"),
-            org.apache.spark.sql.functions.col("warc_ts"),
-            org.apache.spark.sql.functions.col("text")), d,
-        cdx = cdx).length
+      Warc.writeWet(spark.read.parquet(output)
+        .select(col("url"), col("warc_ts"), col("text")), d, cdx = cdx).length
     }
     val jsonlFiles = jsonlDir.map { d =>
-      graft.sources.Jsonl.write(
-        spark.read.parquet(output)
-          .select(org.apache.spark.sql.functions.col("url"),
-            org.apache.spark.sql.functions.col("text"),
-            org.apache.spark.sql.functions.col("status")), d).length
+      Jsonl.write(spark.read.parquet(output)
+        .select(col("url"), col("text"), col("status")), d).length
     }
     // one summary line for the orchestrator
     println(

@@ -100,17 +100,6 @@ final case class ExtractResult(
     bytes_in: Long
 )
 
-/** Per-partition lineage/metrics row (SURVEY §2.5 O7, §4 item 4). */
-final case class LineageRow(
-    run_id: String,
-    partition_id: Int,
-    input_fingerprint: Long,
-    docs_in: Long,
-    docs_out: Long,
-    bytes: Long,
-    extractor_version: String
-)
-
 object Model {
   /** Bump when extraction semantics change (golden fixtures must be
     * regenerated on bump; FIXTURES.md §2). */

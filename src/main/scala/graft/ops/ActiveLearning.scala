@@ -26,20 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object ActiveLearning {
 
-  /** Per-cluster top-k by uncertainty (the core of HybridSampling:
-    * active_learning.py:67-80). `perCluster` mirrors
-    * `max(1, n_samples // n_clusters)` (line 67). Tie-break follows
-    * numpy `argsort[::-1]` (stable ascending, reversed): uncertainty
-    * DESC, then id DESC. */
-  def selectPerCluster(features: DataFrame, idCol: String,
-      uncertaintyCol: String, perCluster: Int): DataFrame = {
-    val w = Window.partitionBy(col("cluster"))
-      .orderBy(col(uncertaintyCol).desc, col(idCol).desc)
-    features
-      .withColumn("sel_rank", row_number().over(w))
-      .filter(col("sel_rank") <= perCluster)
-  }
-
   /** Embedding-clustered hybrid sampling. Input: (idCol, embCol,
     * uncertaintyCol). Output: selected rows with `cluster` and
     * `sel_rank`. Mirrors HybridSampling.select_indices end-to-end:

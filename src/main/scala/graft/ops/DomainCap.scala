@@ -23,7 +23,7 @@ object DomainCap {
     if (url == null || url.isEmpty) return ""
     try {
       val h = new java.net.URI(url.trim).getHost
-      if (h == null) "" else h.toLowerCase
+      if (h == null) "" else h.toLowerCase(java.util.Locale.ROOT)
     } catch {
       case _: Exception => ""
     }

@@ -37,10 +37,7 @@ import org.apache.spark.sql.functions._
   *    per-row kernel over each doc's own drop-set — no global state.
   */
 object ExactSubstr {
-
-  private[ops] def tokensOf(text: String): Array[String] =
-    if (text == null || text.isEmpty) Array.empty[String]
-    else text.split(" ", -1).filter(_.nonEmpty)
+  import QualityTiers.tokensOf
 
   /** 64-bit FNV-1a over UTF-8 bytes — the gram key of the hashed
     * variant. Any stable 64-bit hash works (the key only has to GROUP

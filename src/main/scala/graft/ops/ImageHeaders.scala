@@ -38,7 +38,7 @@ object ImageHeaders {
     ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
       ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
 
-  private def le32(b: Array[Byte], off: Int): Int =
+  private[ops] def le32(b: Array[Byte], off: Int): Int =
     (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
       ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
 
@@ -258,10 +258,7 @@ object ImageHeaders {
   *    chunks pad to even) = 108 + bodyLen + (bodyLen mod 2).
   */
 object RiffContainers {
-
-  private def le32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
+  import ImageHeaders.le32
 
   private def le16(b: Array[Byte], off: Int): Int =
     (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
+import graft.ops.SimilarityKernel.toFloatArray
+
 /** IVF (inverted-file) ANN index over an embedding column — the
   * coarse-quantize-then-search scale path (complements the sign-LSH
   * variant in [[Similarity]]):
@@ -124,16 +126,6 @@ object IvfIndex {
       c += 1
     }
     best
-  }
-
-  private def toFloatArray(v: Seq[Float]): Array[Float] = v match {
-    case w: scala.collection.immutable.ArraySeq.ofFloat => w.unsafeArray
-    case other =>
-      val out = new Array[Float](other.length)
-      var i = 0
-      val it = other.iterator
-      while (it.hasNext) { out(i) = it.next(); i += 1 }
-      out
   }
 
   /** The `nprobe` nearest cells for a query vector (ascending distance,
@@ -262,9 +254,14 @@ object IvfIndex {
       .select(col("cell"), col("rn"), col("embedding"))
       .collect()
       .groupBy(_.getInt(0))
-      .map { case (cell, rows) =>
-        cell -> rows.sortBy(_.getInt(1))
+      .flatMap { case (cell, rows) =>
+        // a repeat of an earlier seed never wins nearestCellArr's strict
+        // `<`, so dropping repeats (rank order kept) leaves every
+        // member's sub-cell group as it was; one distinct seed is no split
+        val seeds = rows.sortBy(_.getInt(1))
           .map(r => toFloatArray(r.getAs[scala.collection.Seq[Float]](2).toSeq))
+          .distinctBy(_.toSeq)
+        if (seeds.length > 1) Some(cell -> seeds) else None
       }
   }
 

@@ -632,7 +632,7 @@ object SimilarityKernel {
   /** One primitive copy per row — Seq[Float].apply boxes through the
     * generic dispatch; zero-copy when the encoder hands an
     * immutable.ArraySeq.ofFloat. */
-  private def toFloatArray(v: Seq[Float]): Array[Float] = v match {
+  private[ops] def toFloatArray(v: Seq[Float]): Array[Float] = v match {
     case w: scala.collection.immutable.ArraySeq.ofFloat => w.unsafeArray
     case other =>
       val out = new Array[Float](other.length)

@@ -43,11 +43,6 @@ object TextAnalysis {
   private val StopwordsEn = List(
     "the", "and", "of", "to", "in", "is", "that", "for", "with", "was")
 
-  /** n-gram-profile language ID over {en, es, fr, de, pt}: counts of
-    * language-marker function words; deterministic argmax (tie → fixed
-    * order en,es,fr,de,pt). Pure function — used via udf. */
-  def languageId(text: String): String = LangIdKernel.detect(text)
-
   private val langIdUdf = udf((t: String) => LangIdKernel.detect(t))
 
   def withLanguageId(docs: DataFrame): DataFrame =

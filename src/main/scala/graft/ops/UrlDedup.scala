@@ -22,8 +22,8 @@ object UrlDedup {
     try {
       val u = new java.net.URI(url.trim)
       if (u.getScheme == null || u.getHost == null) return url
-      val scheme = u.getScheme.toLowerCase
-      val host = u.getHost.toLowerCase
+      val scheme = u.getScheme.toLowerCase(java.util.Locale.ROOT)
+      val host = u.getHost.toLowerCase(java.util.Locale.ROOT)
       val port = u.getPort match {
         case -1 => ""
         case 80 if scheme == "http" => ""
@@ -36,7 +36,7 @@ object UrlDedup {
       val query = Option(u.getRawQuery)
         .map(_.split('&').toSeq
           .filter(p => p.nonEmpty &&
-            !TrackingParams.contains(p.takeWhile(_ != '=').toLowerCase))
+            !TrackingParams.contains(p.takeWhile(_ != '=').toLowerCase(java.util.Locale.ROOT)))
           .sorted)
         .filter(_.nonEmpty)
         .map(_.mkString("?", "&", ""))

@@ -232,10 +232,6 @@ object PdfParser {
   private val typePages =
     java.util.regex.Pattern.compile("/Type\\s*/Pages(?![a-zA-Z])")
 
-  /** One concatenated content-stream text per page, in page-tree order. */
-  private[pdf] def pageContentStreams(objs: Map[Int, PdfObj]): List[String] =
-    pageContentStreamsWithIds(objs).map(_._2)
-
   /** (page object number, concatenated content) per page, page-tree
     * order — the id lets the caller resolve per-page /Resources. */
   private[pdf] def pageContentStreamsWithIds(

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.model.{Analytics, CardAnalysis, ExtractResult, PageRow, QualityResult}
-import graft.html.{BlockSegmenter, ContentClassifier, HtmlTokenizer, Segmentation}
+import graft.html.{BlockSegmenter, ContentClassifier, HtmlTokenizer}
 import graft.pdf.PdfParser
 import graft.text._
 
@@ -115,7 +115,7 @@ object Extractor {
     // the reference marks a suspicious trailing partial-card zero in EVERY
     // final text (T4; _build_response, ocr_engine.py:2112-2113)
     val text = CardScore.markUncertainPartialCardTail(sanitizedText)
-    val lower = text.toLowerCase // shared across all keyword operators
+    val lower = text.toLowerCase(java.util.Locale.ROOT) // shared across all keyword operators
     // one fold-safety scan per document, shared by every indexOf-probe
     // fast path (FieldExtractor gates, Quality/LangHints word matchers)
     val foldSafe =

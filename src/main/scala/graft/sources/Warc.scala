@@ -6,7 +6,7 @@ import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.PageRow
@@ -54,9 +54,9 @@ final class SerializableHadoopConf(@transient var conf: Configuration)
   * Parser properties (all bounded-work, never throws):
   *  - streams record-by-record from an InputStream — constant memory in
   *    file size, at most one `maxPayload` block buffered at a time;
-  *  - accepts plain `.warc` and gzipped `.warc.gz` streams, including
-  *    the standard per-record concatenated gzip members (detected by
-  *    magic bytes, not filename);
+  *  - accepts plain `.warc`, gzipped `.warc.gz` (including the standard
+  *    per-record concatenated gzip members) and zstd `.warc.zst`
+  *    streams, detected by magic bytes, not filename;
   *  - for `response` records parses the enclosed HTTP message: status
   *    line, headers, `Transfer-Encoding: chunked` de-chunking and
   *    `Content-Encoding: gzip` inflation, yielding the original body
@@ -66,12 +66,11 @@ final class SerializableHadoopConf(@transient var conf: Configuration)
   *    are truncated at `maxPayload` and flagged, mirroring the 10 MB
   *    input cap (reference ocr_config.py:26).
   *
-  * Scale shape: one task per WARC file — the Common-Crawl unit (~1 GB
-  * gzip each, so 10^5 files at 100 TB: ample parallelism for a
-  * 1000-executor cluster, no shuffle at the ingest edge). Records
-  * stream straight into the extraction pipeline's salted repartition;
-  * per-record gzip members would also allow sub-file splits on a real
-  * cluster, but file granularity already saturates the target scale.
+  * Scale shape: one task per work unit ([[WarcSplit]]), by default one
+  * whole WARC file — the Common-Crawl unit, no shuffle at the ingest
+  * edge. Records stream straight into the extraction pipeline's salted
+  * repartition; per-record gzip members (and marker-framed zstd) also
+  * allow sub-file units for rogue giants ([[planSplits]]).
   */
 object Warc {
 
@@ -83,68 +82,97 @@ object Warc {
 
   // ---------------------------------------------------------------- parse
 
-  /** A sniffed input: the decoding stream plus the health handles the
-    * compression layer exposes. Closing `stream` cascades through the
-    * decoder (freeing its native Inflater/zstd context) down to the
-    * underlying file handle. */
-  private[sources] final case class SniffedStream(
-      stream: InputStream,
-      gzip: Option[GzipMemberResyncStream],
-      zstd: Option[ZstdLenientStream]) {
-    /** Damaged compression units observed so far: gzip members skipped
-      * by the resync reader, or 1 when the zstd frame walk aborted. */
-    def corruptUnits: Long =
-      gzip.map(_.corruptMembers.toLong).getOrElse(0L) +
-        zstd.count(_.aborted).toLong
-    def close(): Unit = stream.close()
+  /** The one compression sniff, from a stream's first `n` bytes of `m`:
+    * gzip (1f 8b — the canonical Common-Crawl member-per-record layout),
+    * zstd (standard frame 28 b5 2f fd, or a leading skippable frame
+    * 5x 2a 4d 18), or plain. */
+  private sealed trait Codec
+  private case object Plain extends Codec
+  private case object Gzip extends Codec
+  private case object Zstd extends Codec
+
+  private def codecOf(m: Array[Byte], n: Int): Codec = {
+    def b(i: Int): Int = m(i) & 0xff
+    if (n >= 2 && b(0) == 0x1f && b(1) == 0x8b) Gzip
+    else if (n >= 4 &&
+        ((b(0) == 0x28 && b(1) == 0xb5 && b(2) == 0x2f && b(3) == 0xfd) ||
+          ((b(0) & 0xf0) == 0x50 && b(1) == 0x2a && b(2) == 0x4d && b(3) == 0x18)))
+      Zstd
+    else Plain
   }
 
-  /** Sniff the compression magic and wrap accordingly: gzip (1f 8b —
-    * the canonical Common-Crawl member-per-record layout, read through
-    * the member-resync stream so bit rot costs one record), zstd
-    * (standard frame 28 b5 2f fd, or a leading skippable frame
-    * 5x 2a 4d 18 — via Spark's bundled zstd-jni, continuous multi-frame
-    * mode, lenient wrapper so corruption truncates instead of throwing),
-    * or plain. */
-  private[sources] def openStream(in: InputStream): SniffedStream = {
+  /** Every record of the raw bytes `in`, through a buffered decoding
+    * stream: gzip through the member-resync stream, so bit rot costs
+    * one record; zstd via Spark's bundled zstd-jni in continuous
+    * multi-frame mode, behind a lenient wrapper so corruption truncates
+    * instead of throwing; plain as is. Closing cascades through the
+    * decoder (freeing its native Inflater/zstd context) down to `in`. */
+  private def wholeUnit(codec: Codec, in: InputStream,
+                        maxPayload: Int): UnitRecords = {
+    val (stream, corrupt) = codec match {
+      case Gzip =>
+        val gz = new GzipMemberResyncStream(in)
+        (new BufferedInputStream(gz, 1 << 16), () => gz.corruptMembers.toLong)
+      case Zstd =>
+        val raw = new com.github.luben.zstd.ZstdInputStream(in)
+        raw.setContinuous(true) // read across frame boundaries
+        val zst = new ZstdLenientStream(raw)
+        (new BufferedInputStream(zst, 1 << 16),
+          () => if (zst.aborted) 1L else 0L)
+      case Plain => (in, () => 0L)
+    }
+    new UnitRecords(wholeIterator(stream, maxPayload), stream, corrupt)
+  }
+
+  /** Lazily parse all records from `in` (plain, gzip, or zstd —
+    * sniffed); `in` is closed once the records are drained. */
+  def records(in: InputStream,
+              maxPayload: Int = DefaultMaxPayload): Iterator[WarcRecordRow] = {
     val pb = new PushbackInputStream(new BufferedInputStream(in, 1 << 16), 4)
     val m = new Array[Byte](4)
     val n = pb.readNBytes(m, 0, 4)
     if (n > 0) pb.unread(m, 0, n)
-    def b(i: Int): Int = m(i) & 0xff
-    val isZstd = n >= 4 &&
-      ((b(0) == 0x28 && b(1) == 0xb5 && b(2) == 0x2f && b(3) == 0xfd) ||
-        ((b(0) & 0xf0) == 0x50 && b(1) == 0x2a && b(2) == 0x4d && b(3) == 0x18))
-    if (n >= 2 && b(0) == 0x1f && b(1) == 0x8b) {
-      val gz = new GzipMemberResyncStream(pb)
-      SniffedStream(new BufferedInputStream(gz, 1 << 16), Some(gz), None)
-    } else if (isZstd) {
-      val raw = new com.github.luben.zstd.ZstdInputStream(pb)
-      raw.setContinuous(true) // read across frame boundaries
-      val zst = new ZstdLenientStream(raw)
-      SniffedStream(new BufferedInputStream(zst, 1 << 16), None, Some(zst))
-    } else SniffedStream(pb, None, None)
+    wholeUnit(codecOf(m, n), pb, maxPayload)
   }
 
-  /** Lazily parse all records from `in` (plain, gzip, or zstd —
-    * sniffed). Note: the decoder's native context is freed when the
-    * SOURCE stream's close cascades or at GC; the Spark paths
-    * (`warcRecords`, `warcFileSummaries`) close the sniffed stream
-    * explicitly. */
-  def records(in: InputStream,
-              maxPayload: Int = DefaultMaxPayload): Iterator[WarcRecordRow] =
-    recordIterator(openStream(in).stream, maxPayload)
+  /** Every record of a decoded stream: the record loop with no split
+    * end, every version line in unit 0. */
+  private def wholeIterator(in: InputStream,
+                            maxPayload: Int): Iterator[WarcRecordRow] =
+    splitIterator(in, maxPayload, Long.MaxValue,
+      sync = () => syncToVersionLine(in, () => 0L))
 
-  private def recordIterator(in: InputStream,
-                             maxPayload: Int): Iterator[WarcRecordRow] =
+  /** The record loop: `sync` scans to the next version line and
+    * returns its container-unit start (−1 at EOF); units at or past
+    * `endExclusive` belong to the next split. `unitNow` (gz splits)
+    * reports the container unit currently being decoded, for the
+    * corruption-merge guard below; −1 disables it (whole streams and
+    * plain files, whose line-position attribution can't cross-claim). */
+  private def splitIterator(in: InputStream, maxPayload: Int,
+      endExclusive: Long, sync: () => Long,
+      unitNow: () => Long = () => -1L): Iterator[WarcRecordRow] =
     new Iterator[WarcRecordRow] {
       private var nextRec: WarcRecordRow = null
       private var done = false
-
       private def advance(): Unit = {
         while (nextRec == null && !done) {
-          if (!syncToVersionLine(in)) { done = true; return }
-          nextRec = parseOne(in, maxPayload) // null on malformed → resync
+          val unit = sync()
+          if (unit < 0 || unit >= endExclusive) done = true
+          else {
+            nextRec = parseOne(in, maxPayload) // null on malformed → resync
+            // corruption-merge guard: a damaged member can abort
+            // mid-record and resync into the NEXT member, whose header
+            // lines then merge into (and take over) the in-flight
+            // parse — the emitted record's bytes actually live in a
+            // later unit. If that unit is at/past the split end, the
+            // record belongs to the NEXT split (which reads its member
+            // from a clean seek): emitting it here would duplicate it
+            // across splits. Within-split merges keep whole-file
+            // semantics (record emitted once, torn predecessor lost).
+            val after = unitNow()
+            if (nextRec != null && after >= endExclusive && after != unit)
+              nextRec = null
+          }
         }
       }
       override def hasNext: Boolean = { advance(); nextRec != null }
@@ -155,16 +183,19 @@ object Warc {
       }
     }
 
-  /** Read lines until one starts with "WARC/" (the version line).
-    * Returns false at EOF. Forward-only: total resync work across a
+  /** Read lines until one starts with "WARC/" (the version line) and
+    * return its start position, `pos` sampled immediately before each
+    * line read; −1 at EOF. Forward-only: total resync work across a
     * file is O(bytes). */
-  private def syncToVersionLine(in: InputStream): Boolean = {
+  private[sources] def syncToVersionLine(in: InputStream, pos: () => Long): Long = {
+    var start = pos()
     var line = readLine(in)
     while (line != null) {
-      if (line.startsWith("WARC/")) return true
+      if (line.startsWith("WARC/")) return start
+      start = pos()
       line = readLine(in)
     }
-    false
+    -1L
   }
 
   /** One line, terminator (CRLF or LF) consumed and stripped; null at
@@ -214,7 +245,7 @@ object Warc {
       if (headerBytes > MaxHeaderBytes) return null
       val colon = line.indexOf(':')
       if (colon > 0) {
-        val name = line.substring(0, colon).trim.toLowerCase
+        val name = line.substring(0, colon).trim.toLowerCase(java.util.Locale.ROOT)
         val value = line.substring(colon + 1).trim
         name match {
           case "warc-type" => warcType = value
@@ -253,10 +284,10 @@ object Warc {
 
     val ts = parseTs(date)
     val isHttpResponse = warcType.equalsIgnoreCase("response") &&
-      contentType.toLowerCase.startsWith("application/http")
+      contentType.toLowerCase(java.util.Locale.ROOT).startsWith("application/http")
     if (!isHttpResponse)
-      return WarcRecordRow(warcType.toLowerCase, uri, ts, id, contentType,
-        -1, "", block, truncated)
+      return WarcRecordRow(warcType.toLowerCase(java.util.Locale.ROOT), uri, ts,
+        id, contentType, -1, "", block, truncated)
 
     val (status, httpCt, body, bodyTrunc) = parseHttp(block, maxPayload)
     WarcRecordRow("response", uri, ts, id, contentType, status, httpCt,
@@ -298,13 +329,13 @@ object Warc {
     while (i < lines.length) {
       val l = lines(i); val colon = l.indexOf(':')
       if (colon > 0) {
-        val name = l.substring(0, colon).trim.toLowerCase
+        val name = l.substring(0, colon).trim.toLowerCase(java.util.Locale.ROOT)
         val value = l.substring(colon + 1).trim
         name match {
           case "transfer-encoding" =>
-            chunked = value.toLowerCase.contains("chunked")
+            chunked = value.toLowerCase(java.util.Locale.ROOT).contains("chunked")
           case "content-encoding" =>
-            val v = value.toLowerCase
+            val v = value.toLowerCase(java.util.Locale.ROOT)
             gzipped = v == "gzip" || v == "x-gzip"
           case "content-type" => httpCt = value
           case _ => ()
@@ -394,109 +425,51 @@ object Warc {
 
   // ---------------------------------------------------------------- spark
 
-  /** All records of every WARC file matching `glob`, one task per file. */
+  /** All records of every WARC file matching `glob`, one task per file:
+    * the split reader over one whole-file unit per file. */
   def warcRecords(spark: SparkSession, glob: String,
-                  maxPayload: Int = DefaultMaxPayload): Dataset[WarcRecordRow] = {
-    import spark.implicits._
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val paths = listFiles(spark, glob)
-    // One partition per WARC file — the Common-Crawl parallelism unit
-    // (parallelize is the one API with exact partition control; the
-    // per-partition work is a genuine imperative stream parse).
-    val rdd = spark.sparkContext.parallelize(paths, math.max(1, paths.length))
-    spark.createDataset(rdd).mapPartitions { it =>
-      it.flatMap { p =>
-        val path = new Path(p)
-        val fs = path.getFileSystem(conf.conf)
-        val sniffed = openStream(fs.open(path))
-        var closed = false
-        def closeOnce(): Unit =
-          if (!closed) { closed = true; sniffed.close() }
-        // free the file handle AND the decoder's native context (the
-        // close cascades): at exhaustion for the common full-drain
-        // case, and at task completion for early termination (limit,
-        // downstream failure) — an executor outlives many tasks, and
-        // 10^5 leaked handles/Inflaters add up
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
-        val rec = recordIterator(sniffed.stream, maxPayload)
-        new Iterator[WarcRecordRow] {
-          override def hasNext: Boolean = {
-            val h = rec.hasNext
-            if (!h) closeOnce()
-            h
-          }
-          override def next(): WarcRecordRow = rec.next()
-        }
-      }
-    }
-  }
+                  maxPayload: Int = DefaultMaxPayload): Dataset[WarcRecordRow] =
+    warcSplitRecords(spark, planSplits(spark, glob, WholeFiles), maxPayload)
 
   /** `response` records as the canonical pages-table rows:
     * (url, warc_ts, html, text="", lang="") — feed straight into
     * `ExtractPipeline.extract` / land as the Iceberg pages table. */
   def warcFiles(spark: SparkSession, glob: String,
-                maxPayload: Int = DefaultMaxPayload): Dataset[PageRow] = {
-    import spark.implicits._
-    warcRecords(spark, glob, maxPayload)
-      .filter(r => r.warc_type == "response" && r.url.nonEmpty)
-      .map(r => PageRow(r.url, r.warc_ts, r.payload, "", ""))
-  }
+                maxPayload: Int = DefaultMaxPayload): Dataset[PageRow] =
+    warcSplitFiles(spark, planSplits(spark, glob, WholeFiles), maxPayload)
 
-  // ------------------------------------------------------- sub-file splits
-
-  /** One sub-file work unit: the records whose CONTAINER UNIT (gzip
-    * member for `.warc.gz`, the record itself for plain `.warc`)
-    * starts in `[offset, offset + length)`. The final unit may extend
-    * past the end — so adjacent splits of one file are exhaustive and
-    * disjoint, the same contract as Hadoop text splits and CDX-indexed
-    * WARC ranges. */
+  /** One work unit: the records whose CONTAINER UNIT (gzip member for
+    * `.warc.gz`, marker frame for framed `.warc.zst`, the record itself
+    * for plain `.warc`) starts in `[offset, offset + length)`. The final
+    * unit may extend past the end — so adjacent splits of one file are
+    * exhaustive and disjoint, the same contract as Hadoop text splits
+    * and CDX-indexed WARC ranges. */
   final case class WarcSplit(path: String, offset: Long, length: Long)
 
-  /** Dataset over explicit split work units — the sub-file parallelism
-    * hook for pathological single-file cases (one ~1 GB file per task
-    * is the Common-Crawl unit and the default [[warcRecords]] shape; a
-    * 100 GB rogue file wants finer units). Offsets need NOT be aligned:
-    * the reader resyncs forward to the next container boundary, so
-    * `(0, L), (L, L), …` byte-range slicing is valid. For
-    * gzip-membered files boundary discovery is exact (member
-    * signatures + deflate framing); for plain files it is the WARC
-    * version-line resync (exact unless a payload line itself starts
-    * with "WARC/"). zstd files are splittable when written by
-    * [[Writer.zstdMember]] (in-band [[ZstdMarkerSig]] skippable-frame
-    * markers); LEGACY zstd files without markers are not — schedule
-    * those as one `(0, fileLen)` unit (offset > 0 units read nothing
-    * by contract). */
+  /** [[planSplits]] unit size that keeps every file one unit: one task
+    * per file — the Common-Crawl unit (~1 GB gzip each, so 10^5 files
+    * at 100 TB: ample parallelism for a 1000-executor cluster). */
+  val WholeFiles: Long = Long.MaxValue
+
+  /** Dataset over explicit work units, one task each: whole files, or
+    * sub-file units for a rogue giant. Offsets need NOT be aligned: the
+    * reader resyncs forward to the next container boundary, so
+    * `(0, L), (L, L), …` byte-range slicing is valid. For gzip-membered
+    * files boundary discovery is exact (member signatures + deflate
+    * framing); for plain files it is the WARC version-line resync (exact
+    * unless a payload line itself starts with "WARC/"). zstd files are
+    * splittable when written by [[Writer.zstdMember]] (in-band
+    * [[ZstdMarkerSig]] skippable-frame markers); LEGACY zstd files
+    * without markers are not — schedule those as one `(0, fileLen)`
+    * unit (offset > 0 units read nothing by contract). */
   def warcSplitRecords(spark: SparkSession, splits: Seq[WarcSplit],
                        maxPayload: Int = DefaultMaxPayload)
       : Dataset[WarcRecordRow] = {
     import spark.implicits._
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val rdd = spark.sparkContext
-      .parallelize(splits, math.max(1, splits.length))
-    spark.createDataset(rdd).mapPartitions { it =>
-      it.flatMap { sp =>
-        val path = new Path(sp.path)
-        val fs = path.getFileSystem(conf.conf)
-        val in = fs.open(path)
-        var closed = false
-        def closeOnce(): Unit = if (!closed) { closed = true; in.close() }
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
-        val rec = splitRecordIterator(in, sp.offset, sp.length, maxPayload)
-        new Iterator[WarcRecordRow] {
-          override def hasNext: Boolean = {
-            val h = rec.hasNext
-            if (!h) closeOnce()
-            h
-          }
-          override def next(): WarcRecordRow = rec.next()
-        }
-      }
-    }
+    unitTasks(spark, splits, maxPayload)((_, unit) => unit)
   }
 
-  /** [[warcFiles]] over split work units: response records as page rows. */
+  /** [[warcSplitRecords]] as page rows: `response` records with a URL. */
   def warcSplitFiles(spark: SparkSession, splits: Seq[WarcSplit],
                      maxPayload: Int = DefaultMaxPayload): Dataset[PageRow] = {
     import spark.implicits._
@@ -506,14 +479,14 @@ object Warc {
   }
 
   /** Slice every file matching `glob` into ≈`splitBytes` work units
-    * (files at or under one unit stay whole) — the scheduling front-end
-    * for [[warcSplitRecords]]. 10^5 well-formed ~1 GB Common-Crawl
-    * files plan as one unit each (identical to [[warcFiles]]); a rogue
-    * 100 GB file becomes ~100 concurrent units instead of one 100 GB
-    * task. Marker-framed zstd files ([[Writer.zstdMember]]) split like
-    * gzip; LEGACY zstd files scheduled in pieces read everything in
-    * their first unit and nothing in the rest (no in-band resync point
-    * — see [[splitRecordIterator]]): correct, just not parallel. */
+    * (files at or under one unit stay whole; [[WholeFiles]] keeps them
+    * all whole), in path order — the scheduling front-end for
+    * [[warcSplitRecords]]. A rogue 100 GB file becomes ~100 concurrent
+    * units instead of one 100 GB task. Marker-framed zstd files
+    * ([[Writer.zstdMember]]) split like gzip; LEGACY zstd files
+    * scheduled in pieces read everything in their first unit and
+    * nothing in the rest (no in-band resync point — see
+    * [[splitRecordIterator]]): correct, just not parallel. */
   def planSplits(spark: SparkSession, glob: String, splitBytes: Long)
       : Seq[WarcSplit] = {
     require(splitBytes > 0, s"splitBytes must be positive (got $splitBytes)")
@@ -521,6 +494,32 @@ object Warc {
       if (len <= splitBytes) Seq(WarcSplit(p, 0L, math.max(len, 1L)))
       else (0L until len by splitBytes).map(off =>
         WarcSplit(p, off, math.min(splitBytes, len - off)))
+    }
+  }
+
+  /** The Spark side of every WARC read: one partition per unit
+    * (parallelize is the one API with exact partition control; the
+    * per-partition work is a genuine imperative stream parse), `f` over
+    * each unit's records. A unit closes once — at exhaustion for the
+    * common full-drain case, and at task completion for early
+    * termination (limit, downstream failure): an executor outlives many
+    * tasks, and 10^5 leaked handles/Inflaters add up. */
+  private def unitTasks[T: Encoder](spark: SparkSession,
+      splits: Seq[WarcSplit], maxPayload: Int)(
+      f: (WarcSplit, UnitRecords) => Iterator[T]): Dataset[T] = {
+    import spark.implicits._
+    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val rdd = spark.sparkContext
+      .parallelize(splits, math.max(1, splits.length))
+    spark.createDataset(rdd).mapPartitions { it =>
+      it.flatMap { sp =>
+        val path = new Path(sp.path)
+        val unit = splitRecordIterator(path.getFileSystem(conf.conf)
+          .open(path), sp.offset, sp.length, maxPayload)
+        Option(org.apache.spark.TaskContext.get())
+          .foreach(_.addTaskCompletionListener[Unit](_ => unit.close()))
+        f(sp, unit)
+      }
     }
   }
 
@@ -758,12 +757,7 @@ object Warc {
               s"CDX slice $dataName@$off+$len holds no record")
           Iterator.single(rec.next())
         }
-        new Iterator[WarcRecordRow] {
-          override def hasNext: Boolean = {
-            val h = out.hasNext; if (!h) closeOpen(); h
-          }
-          override def next(): WarcRecordRow = out.next()
-        }
+        new UnitRecords(out, () => closeOpen())
       }.toDF()
   }
 
@@ -774,9 +768,9 @@ object Warc {
     * compressed length of the data frame that follows, so a resynced
     * reader slices frames exactly without a streaming decoder.
     * Decoders that don't know the convention (including our own
-    * whole-file path: ZstdInputStream in continuous mode) skip
-    * skippable frames transparently, so framed files stay ordinary
-    * multi-frame zstd. */
+    * stream reader [[records]]: ZstdInputStream in continuous mode)
+    * skip skippable frames transparently, so framed files stay
+    * ordinary multi-frame zstd. */
   private[sources] val ZstdMarkerSig: Array[Byte] = Array[Byte](
     0x5e, 0x2a, 0x4d, 0x18, // skippable-frame magic 0x184D2A5E (LE)
     0x08, 0x00, 0x00, 0x00, // frame size: 8-byte payload
@@ -787,129 +781,133 @@ object Warc {
     * one record block compresses well under this. */
   private[sources] val ZstdFrameCap: Int = 1 << 30
 
-  /** Split read over a marker-framed zstd file: scan from `offset` for
-    * the next [[ZstdMarkerSig]], slice the declared data frame, inflate
-    * and parse it. The marker START is the container-unit position —
-    * same ownership convention as gzip members (units starting in
+  /** Read over a marker-framed zstd file: scan from `offset` for the
+    * next [[ZstdMarkerSig]], slice the declared data frame, inflate and
+    * parse it. The marker START is the container-unit position — same
+    * ownership convention as gzip members (units starting in
     * [offset, end) belong to this split), so arbitrary slicing stays
     * exhaustive and disjoint. A frame that fails to inflate or parse is
-    * skipped (costs its own records only), matching the gz resync
-    * behavior. */
-  private def zstdFramedIterator(in: org.apache.hadoop.fs.FSDataInputStream,
-      offset: Long, end: Long, maxPayload: Int): Iterator[WarcRecordRow] = {
+    * skipped (costs its own records only, and counts in `skipped`),
+    * matching the gz resync behavior. */
+  private final class ZstdMarkerWalk(in: org.apache.hadoop.fs.FSDataInputStream,
+      offset: Long, end: Long, maxPayload: Int)
+      extends Iterator[WarcRecordRow] {
+    /** Frames skipped: a corrupt length field, or a torn, truncated or
+      * empty frame. */
+    var skipped = 0L
     in.seek(offset)
-    val c = new CountingInputStream(new BufferedInputStream(in, 1 << 16))
-    val sig = ZstdMarkerSig
-    new Iterator[WarcRecordRow] {
-      private var pending: Iterator[WarcRecordRow] = Iterator.empty
-      private var done = false
+    private val c = new CountingInputStream(new BufferedInputStream(in, 1 << 16))
+    private val sig = ZstdMarkerSig
+    private var pending: Iterator[WarcRecordRow] = Iterator.empty
+    private var done = false
 
-      /** Scan to the next full signature; absolute start pos or -1. */
-      private def scanMarker(): Long = {
-        var matched = 0
-        while (matched < sig.length) {
-          val x = c.read()
-          if (x < 0) return -1L
-          if (x.toByte == sig(matched)) matched += 1
-          else matched = if (x.toByte == sig(0)) 1 else 0
-        }
-        offset + c.count - sig.length
+    /** Scan to the next full signature; absolute start pos or -1. */
+    private def scanMarker(): Long = {
+      var matched = 0
+      while (matched < sig.length) {
+        val x = c.read()
+        if (x < 0) return -1L
+        if (x.toByte == sig(matched)) matched += 1
+        else matched = if (x.toByte == sig(0)) 1 else 0
       }
+      offset + c.count - sig.length
+    }
 
-      private def readLE32(): Long = {
-        val b = new Array[Byte](4)
-        var got = 0
-        while (got < 4) {
-          val r = c.read(b, got, 4 - got)
-          if (r < 0) return -1L
-          got += r
-        }
-        (b(0) & 0xffL) | ((b(1) & 0xffL) << 8) |
-          ((b(2) & 0xffL) << 16) | ((b(3) & 0xffL) << 24)
-      }
+    private def readLE32(): Long = {
+      val b = new Array[Byte](4)
+      if (c.readNBytes(b, 0, 4) < 4) -1L
+      else (b(0) & 0xffL) | ((b(1) & 0xffL) << 8) |
+        ((b(2) & 0xffL) << 16) | ((b(3) & 0xffL) << 24)
+    }
 
-      private def advance(): Unit = {
-        while (!pending.hasNext && !done) {
-          val markerStart = scanMarker()
-          if (markerStart < 0 || markerStart >= end) { done = true }
+    private def advance(): Unit = {
+      while (!pending.hasNext && !done) {
+        val markerStart = scanMarker()
+        if (markerStart < 0 || markerStart >= end) { done = true }
+        else {
+          val len = readLE32()
+          if (len < 0) { done = true; skipped += 1 }
+          else if (len == 0 || len > ZstdFrameCap) skipped += 1 // rescan
           else {
-            val len = readLE32()
-            if (len < 0) done = true
-            else if (len == 0 || len > ZstdFrameCap) () // corrupt; rescan
-            else {
-              val frame = new Array[Byte](len.toInt)
-              var got = 0
-              var eof = false
-              while (!eof && got < frame.length) {
-                val r = c.read(frame, got, frame.length - got)
-                if (r < 0) eof = true else got += r
-              }
-              if (eof) done = true // truncated tail frame
-              else {
-                try {
-                  val size = com.github.luben.zstd.Zstd
-                    .getFrameContentSize(frame)
-                  if (size > 0 && size <= maxPayload + (1L << 16)) {
-                    val raw = com.github.luben.zstd.Zstd
-                      .decompress(frame, size.toInt)
-                    pending = records(
-                      new ByteArrayInputStream(raw), maxPayload)
-                  } // unknown/oversized content size: skip this frame
-                } catch {
-                  case _: Exception => () // torn frame: costs itself only
-                }
+            val frame = new Array[Byte](len.toInt)
+            if (c.readNBytes(frame, 0, frame.length) < frame.length) {
+              done = true; skipped += 1 // truncated tail frame
+            } else {
+              try {
+                val size = com.github.luben.zstd.Zstd
+                  .getFrameContentSize(frame) // -1 unknown, < -1 error
+                if (size == 0 || size < -1) skipped += 1 // no data frame
+                else pending = records(new ByteArrayInputStream(
+                  if (size > 0 && size <= maxPayload + (1L << 16))
+                    com.github.luben.zstd.Zstd.decompress(frame, size.toInt)
+                  // unknown/oversized content size: stream-decode the
+                  // frame so the record is truncated at the cap, not lost
+                  else frame), maxPayload)
+              } catch {
+                case _: Exception => skipped += 1 // torn frame
               }
             }
           }
         }
       }
-      override def hasNext: Boolean = { advance(); pending.hasNext }
-      override def next(): WarcRecordRow = {
-        advance()
-        if (!pending.hasNext) throw new NoSuchElementException("WARC EOF")
-        pending.next()
-      }
+    }
+    override def hasNext: Boolean = { advance(); pending.hasNext }
+    override def next(): WarcRecordRow = {
+      advance()
+      if (!pending.hasNext) throw new NoSuchElementException("WARC EOF")
+      pending.next()
     }
   }
 
-  /** Iterator over one split of a seekable stream (exposed for tests;
-    * the caller owns `in`). Sniffs the compression magic at position 0,
-    * then seeks to `offset` and resyncs forward. */
+  /** One unit's records. [[close]] frees the file handle and the
+    * decoder's native context, once: at exhaustion, or earlier from the
+    * task-completion listener. `corruptUnits` counts the damaged
+    * compression units seen so far: gzip members skipped by the resync
+    * reader, zstd frames skipped by the marker walk, or 1 when a
+    * whole-stream zstd decode aborted. */
+  private[sources] final class UnitRecords(rows: Iterator[WarcRecordRow],
+      resource: java.io.Closeable, val corruptUnits: () => Long = () => 0L)
+      extends Iterator[WarcRecordRow] with java.io.Closeable {
+    private var open = true
+    override def hasNext: Boolean = rows.hasNext || { close(); false }
+    override def next(): WarcRecordRow = rows.next()
+    override def close(): Unit = if (open) { open = false; resource.close() }
+  }
+
+  /** Records of one unit of a seekable file (exposed for tests); closes
+    * `in` when drained. Sniffs the compression magic at position 0.
+    *  - Marker-framed zstd takes the marker walk, whole file or not.
+    *  - A unit covering its whole file (and the first unit of a legacy
+    *    zstd file, which has no in-band resync point) reads through the
+    *    buffered decoding stream: with no split end there is no member
+    *    to attribute, so gzip inflates through a read-ahead buffer.
+    *  - Any other unit seeks to `offset` and resyncs forward. */
   private[sources] def splitRecordIterator(
       in: org.apache.hadoop.fs.FSDataInputStream, offset: Long,
-      length: Long, maxPayload: Int): Iterator[WarcRecordRow] = {
+      length: Long, maxPayload: Int): UnitRecords = {
+    if (length <= 0) return new UnitRecords(Iterator.empty, in)
     val end = offset + length
-    if (length <= 0) return Iterator.empty
-    val magic = new Array[Byte](4)
-    val n = try { in.readFully(0L, magic); 4 } catch {
-      case _: EOFException => 0 // file shorter than 4 bytes
+    val head = new Array[Byte](ZstdMarkerSig.length)
+    var n = 0
+    var r = 0
+    while (n < head.length && { r = in.read(n.toLong, head, n, head.length - n); r > 0 })
+      n += r
+    val codec = codecOf(head, n)
+    if (n == head.length && java.util.Arrays.equals(head, ZstdMarkerSig)) {
+      // splittable: files produced by [[Writer.zstdMember]] start with a
+      // marker skippable frame (RFC 8878 §3.1.2 magic 0x184D2A5E +
+      // "GZS1" payload) before every record's data frame, giving the
+      // reader an in-band, validated resync point
+      val walk = new ZstdMarkerWalk(in, offset, end, maxPayload)
+      return new UnitRecords(walk, in, () => walk.skipped)
     }
-    def b(i: Int): Int = magic(i) & 0xff
-    val isGzip = n >= 2 && b(0) == 0x1f && b(1) == 0x8b
-    val isZstd = n >= 4 &&
-      ((b(0) == 0x28 && b(1) == 0xb5 && b(2) == 0x2f && b(3) == 0xfd) ||
-        ((b(0) & 0xf0) == 0x50 && b(1) == 0x2a && b(2) == 0x4d && b(3) == 0x18))
-    if (isZstd) {
-      // splittable IFF the writer framed it: files produced by
-      // [[Writer.zstdMember]] start with a marker skippable frame
-      // (RFC 8878 §3.1.2 magic 0x184D2A5E + "GZS1" payload) before
-      // every record's data frame, giving the reader an in-band,
-      // validated resync point. Legacy zstd files (no markers) keep
-      // the whole-file contract: the 0-offset unit reads everything,
-      // any offset > 0 unit is empty.
-      val head = new Array[Byte](ZstdMarkerSig.length)
-      val hn = try { in.readFully(0L, head); head.length } catch {
-        case _: EOFException => 0
-      }
-      val framed = hn == head.length &&
-        java.util.Arrays.equals(head, ZstdMarkerSig)
-      if (framed) return zstdFramedIterator(in, offset, end, maxPayload)
-      if (offset != 0L) return Iterator.empty
+    if (offset == 0L && (codec == Zstd || !hasByteAt(in, end))) {
       in.seek(0L)
-      return records(new BufferedInputStream(in, 1 << 16), maxPayload)
+      return wholeUnit(codec, new BufferedInputStream(in, 1 << 16), maxPayload)
     }
+    if (codec == Zstd) return new UnitRecords(Iterator.empty, in)
     in.seek(offset)
-    if (isGzip) {
+    if (codec == Gzip) {
       // UNBUFFERED decompressed side: member starts must be
       // demand-driven so memberStartPos at sync time is the version
       // line's member (a read-ahead buffer would start future members
@@ -918,74 +916,24 @@ object Warc {
       // no extra raw buffer: the resync stream reads raw in 64 K chunks
       val gz = new GzipMemberResyncStream(in,
         basePos = offset, startAtSignature = offset > 0)
-      splitIterator(gz, maxPayload, end,
-        sync = () =>
-          if (syncToVersionLinePos(gz, () => 0L) < 0) -1L
+      new UnitRecords(splitIterator(gz, maxPayload, end,
+        sync = () => if (syncToVersionLine(gz, () => 0L) < 0) -1L
           else gz.memberStartPos,
-        unitNow = () => gz.memberStartPos)
+        unitNow = () => gz.memberStartPos), gz, () => gz.corruptMembers.toLong)
     } else {
       // plain: the record itself is the container unit; count consumed
       // bytes ABOVE the buffer so the parser's position is exact
       val c = new CountingInputStream(new BufferedInputStream(in, 1 << 16))
-      splitIterator(c, maxPayload, end,
-        sync = () => syncToVersionLinePos(c, () => offset + c.count))
+      new UnitRecords(splitIterator(c, maxPayload, end,
+        sync = () => syncToVersionLine(c, () => offset + c.count)), in)
     }
   }
 
-  /** The split read loop: `sync` scans to the next version line and
-    * returns its container-unit start (−1 at EOF); units at or past
-    * `endExclusive` belong to the next split. `unitNow` (gz mode)
-    * reports the container unit currently being decoded, for the
-    * corruption-merge guard below; −1 disables it (plain files, whose
-    * line-position attribution can't cross-claim). */
-  private def splitIterator(in: InputStream, maxPayload: Int,
-      endExclusive: Long, sync: () => Long,
-      unitNow: () => Long = () => -1L): Iterator[WarcRecordRow] =
-    new Iterator[WarcRecordRow] {
-      private var nextRec: WarcRecordRow = null
-      private var done = false
-      private def advance(): Unit = {
-        while (nextRec == null && !done) {
-          val unit = sync()
-          if (unit < 0 || unit >= endExclusive) done = true
-          else {
-            nextRec = parseOne(in, maxPayload) // null on malformed → resync
-            // corruption-merge guard: a damaged member can abort
-            // mid-record and resync into the NEXT member, whose header
-            // lines then merge into (and take over) the in-flight
-            // parse — the emitted record's bytes actually live in a
-            // later unit. If that unit is at/past the split end, the
-            // record belongs to the NEXT split (which reads its member
-            // from a clean seek): emitting it here would duplicate it
-            // across splits. Within-split merges keep whole-file
-            // semantics (record emitted once, torn predecessor lost).
-            val after = unitNow()
-            if (nextRec != null && after >= endExclusive && after != unit)
-              nextRec = null
-          }
-        }
-      }
-      override def hasNext: Boolean = { advance(); nextRec != null }
-      override def next(): WarcRecordRow = {
-        advance()
-        if (nextRec == null) throw new NoSuchElementException("WARC EOF")
-        val r = nextRec; nextRec = null; r
-      }
-    }
-
-  /** Like [[syncToVersionLine]] but returns the start position of the
-    * matched version line via `pos` (sampled immediately before each
-    * line read); −1 at EOF. */
-  private[sources] def syncToVersionLinePos(in: InputStream, pos: () => Long): Long = {
-    var start = pos()
-    var line = readLine(in)
-    while (line != null) {
-      if (line.startsWith("WARC/")) return start
-      start = pos()
-      line = readLine(in)
-    }
-    -1L
-  }
+  /** Whether the file has a byte at `pos` (a seek past EOF is none). */
+  private def hasByteAt(in: org.apache.hadoop.fs.FSDataInputStream,
+      pos: Long): Boolean =
+    try in.read(pos, new Array[Byte](1), 0, 1) > 0
+    catch { case _: EOFException => false }
 
   /** Consumed-byte counter ABOVE buffering — exact parser positions for
     * plain-file splits. */
@@ -1028,36 +976,29 @@ object Warc {
 
   /** Per-file ingest health — one row per WARC file: record/response/
     * truncation counts plus the damaged-compression-unit counter (gzip
-    * members skipped by the resync reader, or a zstd frame-walk abort;
-    * 0 for plain files). The operational view for a 10^5-file crawl
-    * load: `WHERE corrupt_members > 0` lists the files bit rot
-    * touched, with the parallelism (one task per file) of the ingest
-    * itself. */
+    * members skipped by the resync reader, zstd frames skipped by the
+    * marker walk, or a whole-stream zstd abort; 0 for plain files). The
+    * operational view for a 10^5-file crawl load:
+    * `WHERE corrupt_members > 0` lists the files bit rot touched, with
+    * the parallelism (one task per file) of the ingest itself. */
   def warcFileSummaries(spark: SparkSession, glob: String,
                         maxPayload: Int = DefaultMaxPayload): DataFrame = {
     import spark.implicits._
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val paths = listFiles(spark, glob)
-    val rdd = spark.sparkContext.parallelize(paths, math.max(1, paths.length))
-    spark.createDataset(rdd).map { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf.conf)
-      val sniffed = openStream(fs.open(path))
-      var records = 0L; var responses = 0L; var truncated = 0L
-      var payloadBytes = 0L
-      try recordIterator(sniffed.stream, maxPayload).foreach { r =>
-        records += 1
-        if (r.warc_type == "response") responses += 1
-        if (r.truncated) truncated += 1
-        if (r.payload != null) payloadBytes += r.payload.length
-      } finally sniffed.close()
-      (p, records, responses, truncated, payloadBytes, sniffed.corruptUnits)
+    unitTasks(spark, planSplits(spark, glob, WholeFiles), maxPayload) {
+      (sp, unit) =>
+        var records = 0L; var responses = 0L; var truncated = 0L
+        var payloadBytes = 0L
+        unit.foreach { r =>
+          records += 1
+          if (r.warc_type == "response") responses += 1
+          if (r.truncated) truncated += 1
+          if (r.payload != null) payloadBytes += r.payload.length
+        }
+        Iterator.single((sp.path, records, responses, truncated,
+          payloadBytes, unit.corruptUnits()))
     }.toDF("file", "records", "responses", "truncated_records",
       "payload_bytes", "corrupt_members")
   }
-
-  private def listFiles(spark: SparkSession, glob: String): Seq[String] =
-    listFilesWithLen(spark, glob).map(_._1)
 
   private def listFilesWithLen(spark: SparkSession, glob: String)
       : Seq[(String, Long)] = {
@@ -1176,8 +1117,8 @@ object Warc {
       * splittable zstd member: the [[ZstdMarkerSig]] skippable frame
       * (with the data frame's compressed length in its payload), then
       * one zstd data frame. Concatenated members are a legal multi-
-      * frame zstd stream — standard decoders (and our whole-file
-      * reader) skip the markers transparently; [[splitRecordIterator]]
+      * frame zstd stream — standard decoders (and our stream reader
+      * [[records]]) skip the markers transparently; [[splitRecordIterator]]
       * resyncs on them, making `.warc.zst` splittable the way
       * member-per-record `.warc.gz` is. */
     def zstdMember(out: OutputStream, rawRecord: Array[Byte],

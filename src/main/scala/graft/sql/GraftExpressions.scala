@@ -76,8 +76,6 @@ object GraftKernels {
     h
   }
 
-  def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
   /** C4-style quality proxy as an e6-scaled long, one byte pass:
     * 0.35·min(len/700, 1) + 0.35·alnum/len + 0.30·printable/len with
     * len = code points, alnum = chars in [A-Za-z0-9], printable = chars

@@ -163,7 +163,7 @@ object CardIntel {
   def analyze(text: String, layoutType: String = "unknown")
       : (String, Double, CardAnalysis) = {
     val t = if (text == null) "" else text
-    analyzeLower(t, t.toLowerCase, layoutType)
+    analyzeLower(t, t.toLowerCase(java.util.Locale.ROOT), layoutType)
   }
 
   /** analyze() with a caller-provided lowercase copy (hot path: the
@@ -197,7 +197,8 @@ object CardIntel {
       text: String,
       layoutType: String,
       cards: CardAnalysis): (String, Double) =
-    classifyLower((if (text == null) "" else text).toLowerCase, layoutType, cards)
+    classifyLower((if (text == null) "" else text).toLowerCase(java.util.Locale.ROOT),
+      layoutType, cards)
 
   def classifyLower(
       lower: String,
@@ -211,9 +212,6 @@ object CardIntel {
       while (i < ids.length) { if (found(ids(i))) n += 1; i += 1 }
       n
     }
-    def keywordScore(kws: Set[String]): Int =
-      scoreOf(AllKeywordSets.indexOf(kws))
-    def hasAny(kws: Set[String]): Boolean = keywordScore(kws) > 0
 
     val hasCardKeyword = scoreOf(0) > 0
     val hasInvoiceKeyword = scoreOf(1) > 0

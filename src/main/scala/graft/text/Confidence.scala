@@ -45,7 +45,7 @@ object Confidence {
   }
 
   def calculate(text: String): Double =
-    if (text == null) 0.0 else calculateLower(text, text.toLowerCase)
+    if (text == null) 0.0 else calculateLower(text, text.toLowerCase(java.util.Locale.ROOT))
 
   /** calculate() with a caller-provided lowercase copy. */
   def calculateLower(text: String, lowerIn: String): Double = {

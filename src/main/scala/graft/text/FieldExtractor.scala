@@ -182,12 +182,6 @@ object FieldExtractor {
     Gated(p("(?:POB|NACIDO\\s+EN|BORN\\s+IN)[:\\s]+([A-ZÁÉÍÓÚÜÑ][A-ZÁÉÍÓÚÜÑA-Za-z\\s\\-,]{2,50})"),
       List("pob", "nacido", "born"), anchored = true))
 
-  private val OutstandingAmountPatterns = List(
-    Gated(p("(?:OUTSTANDING\\s+AMOUNT|AMOUNT\\s+OUTSTANDING|SALDO\\s+PENDIENTE|MONTANT\\s+EN\\s+SOUFFRANCE)[:\\s]+([£$€\\d,\\.\\s]+)"),
-      List("outstanding", "saldo", "montant", "amount"), anchored = true),
-    Gated(p("(?:OVERDUE|PAST\\s+DUE)[:\\s]+([£$€\\d,\\.\\s]+)"),
-      List("overdue", "past"), anchored = true))
-
   final case class FieldDef(
       name: String,
       patterns: List[Gated],
@@ -298,7 +292,7 @@ object FieldExtractor {
 
   private val ltRun = uPattern("<+")
   private def normalizeFullName(v: String): String =
-    collapseWs(ltRun.matcher(v).replaceAll(" ")).toUpperCase.trim
+    collapseWs(ltRun.matcher(v).replaceAll(" ")).toUpperCase(java.util.Locale.ROOT).trim
 
   private val nonMrzChar = uPattern("[^\\w<\\n]")
   private def normalizeMrz(v: String): String =
@@ -307,8 +301,8 @@ object FieldExtractor {
   private val GenderMap =
     Map("MALE" -> "M", "FEMALE" -> "F", "MASCULINO" -> "M", "FEMENINO" -> "F")
   private def normalizeGender(v: String): String =
-    GenderMap.getOrElse(v.toUpperCase,
-      if (v.isEmpty) "" else v.toUpperCase.substring(0, 1))
+    GenderMap.getOrElse(v.toUpperCase(java.util.Locale.ROOT),
+      if (v.isEmpty) "" else v.toUpperCase(java.util.Locale.ROOT).substring(0, 1))
 
   private val dateSeps = uPattern("[./]")
 
@@ -320,7 +314,7 @@ object FieldExtractor {
     fieldName match {
       case "full_name" => normalizeFullName(value)
       case "mrz_data" => normalizeMrz(value)
-      case "nationality" => value.toUpperCase.trim
+      case "nationality" => value.toUpperCase(java.util.Locale.ROOT).trim
       case "gender" => normalizeGender(value)
       case _ => value
     }
@@ -412,7 +406,7 @@ object FieldExtractor {
     * literal prefilter (skips regexes that cannot match; identical
     * results, far fewer full-text scans). */
   def tryPatterns(text: String, patterns: List[Gated]): Option[String] =
-    tryPatternsLower(text, text.toLowerCase, patterns)
+    tryPatternsLower(text, text.toLowerCase(java.util.Locale.ROOT), patterns)
 
   def tryPatternsLower(text: String, lower: String,
       patterns: List[Gated]): Option[String] =
@@ -487,10 +481,12 @@ object FieldExtractor {
           case None => // next pattern
         }
       } else {
+        // literal gates probe the lowercase copy, so they only prune
+        // when it is aligned; otherwise the regex itself decides
         val gateOk =
           (g.minDigitRun == 0 || textMaxDigitRun >= g.minDigitRun) &&
           (if (g.mrzRun) hasMrzRun(text)
-           else g.gates.isEmpty || g.gates.exists(lower.contains))
+           else !aligned || g.gates.isEmpty || g.gates.exists(lower.contains))
         if (gateOk) {
           val m = g.pattern.matcher(text)
           if (m.find()) {
@@ -551,7 +547,7 @@ object FieldExtractor {
     * personal_doc_extractor.py:470-508 */
   def extract(text: String, documentType: String,
       runYear: Int = DefaultRunYear): (List[FieldRow], List[String]) =
-    extractLower(text, text.toLowerCase, documentType, runYear)
+    extractLower(text, text.toLowerCase(java.util.Locale.ROOT), documentType, runYear)
 
   /** extract() with a caller-provided lowercase copy. */
   def extractLower(text: String, lower: String, documentType: String,

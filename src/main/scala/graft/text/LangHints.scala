@@ -39,7 +39,7 @@ object LangHints {
   /** Returns (language_code, country_code); country may be "". */
   def detect(text: String): (String, String) = {
     val t = if (text == null) "" else text
-    detectLower(t, t.toLowerCase)
+    detectLower(t, t.toLowerCase(java.util.Locale.ROOT))
   }
 
   /** detect() with a caller-provided lowercase copy. */

@@ -151,11 +151,11 @@ object Quality {
     val reasons = scala.collection.mutable.ListBuffer.empty[String]
 
     val docType =
-      (if (documentType == null) "other" else documentType).toLowerCase.trim
+      (if (documentType == null) "other" else documentType).toLowerCase(java.util.Locale.ROOT).trim
     // doc-type signal bonuses, open_source_ocr_stack.py:119-147
     if (docType == "bank_statement" || docType == "loan_application" ||
         docType == "kyc_form" || docType == "receipt" || docType == "invoice") {
-      val lower = text.toLowerCase
+      val lower = text.toLowerCase(java.util.Locale.ROOT)
       // length check catches 1:2 lowercasing; hasFoldDivergent catches
       // same-length divergence (incl. U+212A Kelvin → 'k', which would
       // false-positive the probe copy vs these ASCII-CI patterns)

@@ -77,8 +77,6 @@ package object text {
   def uPattern(regex: String, flags: Int = 0): Pattern =
     Pattern.compile(regex, flags | Pattern.UNICODE_CHARACTER_CLASS)
 
-  private val wsRun = uPattern("\\s+")
-
   /** Exactly the char set Java regex `\s` matches under
     * UNICODE_CHARACTER_CLASS (Unicode White_Space) — NOT the same as
     * `Character.isWhitespace` (which excludes NEL/NBSP-family chars).

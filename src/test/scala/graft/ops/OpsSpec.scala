@@ -189,6 +189,11 @@ class OpsSpec extends AnyFunSuite {
     // hash-ordered 10, so with k above the cap every neighbor is one of
     // them and each of them is someone's neighbor
     val one = Array(v.toArray)
+    // the hot cell's 800 seeds are one vector repeated: no duplicate
+    // seed reaches the broadcast table, and one distinct seed is no split
+    val seeds = IvfIndex.trainSubCells(flood.withColumn("cell", lit(0)), 10)
+    assert(seeds.values.forall(s => s.map(_.toSeq).distinct.length == s.length))
+    assert(seeds.isEmpty, seeds.map { case (c, s) => c -> s.length }.toString)
     assert(IvfIndex.cellDrops(flood, one, cellCap = 10) == 1990L)
     val ivf = IvfIndex.topK(flood, one, k = 20, cellCap = 10)
     assert(ivf.select("neighbor_id").distinct().as[Long].collect().toSet ==

@@ -8,6 +8,16 @@ class FieldExtractorSpec extends AnyFunSuite {
 
   private def names(fs: Seq[graft.model.FieldRow]) = fs.map(_.name).toSet
 
+  /** The first pattern whose bare regex finds a match (group 1 when it
+    * has one), trimmed: no literal, digit-run or MRZ gate, no anchoring. */
+  private def bareRegex(text: String,
+      patterns: List[FieldExtractor.Gated]): Option[String] =
+    patterns.iterator.map(_.pattern.matcher(text)).collectFirst {
+      case m if m.find() =>
+        (if (m.groupCount() >= 1 && m.group(1) != null) m.group(1)
+         else m.group()).trim
+    }
+
   test("extract passport fields") {
     val text = "PASSPORT\nSurname: SMITH\nGiven Names: JOHN\nNationality: GBR\n" +
       "Date of Birth: 15/03/1985\nPassport No: AB123456\nDate of Expiry: 25/09/2030\n"
@@ -208,7 +218,8 @@ class FieldExtractorSpec extends AnyFunSuite {
     val texts = Seq(
       "PASSPORT\nDate of Bırth: 15/03/1985\nPassport No: AB123456\n",
       "paſſport no: X1234567\nDate of Birth: 01/02/1990",
-      "banK card\ncard number: 4111 1111 1111 1111")
+      "banK card\ncard number: 4111 1111 1111 1111",
+      "ſEX: M\nDate of Birth: 01/02/1990")
     texts.foreach { text =>
       val lower = text.toLowerCase
       assert(lower.length == text.length, "1:1 case must hold for this test")
@@ -216,7 +227,9 @@ class FieldExtractorSpec extends AnyFunSuite {
           .map(_.patterns).toSeq.distinct) {
         val fast = FieldExtractor.tryPatternsLower(text, lower, patterns,
           graft.text.maxDigitRun(text))
-        val ref = FieldExtractor.tryPatternsNoAnchor(text, lower, patterns)
+        // the bare regex, not tryPatternsNoAnchor: that one applies the
+        // same literal gates and would share a gate miss
+        val ref = bareRegex(text, patterns)
         assert(fast == ref,
           s"patterns=${patterns.head.pattern.pattern()} text='$text'")
       }
@@ -224,6 +237,16 @@ class FieldExtractorSpec extends AnyFunSuite {
     // end-to-end: the ı'd passport still yields date_of_birth
     val (fields, _) = FieldExtractor.extract(texts.head, "passport")
     assert(names(fields).contains("date_of_birth"))
+  }
+
+  test("fold-unsafe text skips the literal gates: ſEX: M keeps its gender") {
+    // ſ (U+017F) matches s under CASE_INSENSITIVE|UNICODE_CASE (and
+    // Python's re.I), but the lowercase copy holds no "sex" gate literal
+    def gender(text: String) =
+      FieldExtractor.extract(text, "id_document")._1
+        .find(_.name == "gender").map(_.value)
+    assert(gender("SEX: M") == Some("M"))
+    assert(gender("ſEX: M") == Some("M"))
   }
 
   test("property: maskPan preserves last 4 and hides the rest") {
