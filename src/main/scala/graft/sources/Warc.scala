@@ -782,24 +782,29 @@ object Warc {
   private[sources] val ZstdFrameCap: Int = 1 << 30
 
   /** Read over a marker-framed zstd file: scan from `offset` for the
-    * next [[ZstdMarkerSig]], slice the declared data frame, inflate and
-    * parse it. The marker START is the container-unit position — same
-    * ownership convention as gzip members (units starting in
-    * [offset, end) belong to this split), so arbitrary slicing stays
-    * exhaustive and disjoint. A frame that fails to inflate or parse is
-    * skipped (costs its own records only, and counts in `skipped`),
-    * matching the gz resync behavior. */
+    * next [[ZstdMarkerSig]], slice the declared data frame and parse it
+    * through the whole-stream zstd decoder. The marker START is the
+    * container-unit position — same ownership convention as gzip
+    * members (units starting in [offset, end) belong to this split), so
+    * arbitrary slicing stays exhaustive and disjoint. A frame that fails
+    * to decode costs its own records only, matching the gz resync
+    * behavior; an over-cap record truncates at `maxPayload`. [[close]]
+    * frees the current frame's decoder. */
   private final class ZstdMarkerWalk(in: org.apache.hadoop.fs.FSDataInputStream,
       offset: Long, end: Long, maxPayload: Int)
-      extends Iterator[WarcRecordRow] {
-    /** Frames skipped: a corrupt length field, or a torn, truncated or
-      * empty frame. */
-    var skipped = 0L
+      extends Iterator[WarcRecordRow] with java.io.Closeable {
     in.seek(offset)
     private val c = new CountingInputStream(new BufferedInputStream(in, 1 << 16))
     private val sig = ZstdMarkerSig
-    private var pending: Iterator[WarcRecordRow] = Iterator.empty
+    private var frame: UnitRecords = null // the data frame being parsed
+    private var dropped = 0L // frames lost before decoding
     private var done = false
+
+    /** Frames skipped so far: a corrupt length field, a truncated tail
+      * frame, or a frame whose decode aborted (counted once the decoder
+      * reaches the damage, since frames decode lazily). */
+    def skipped: Long =
+      dropped + (if (frame == null) 0L else frame.corruptUnits())
 
     /** Scan to the next full signature; absolute start pos or -1. */
     private def scanMarker(): Long = {
@@ -821,42 +826,32 @@ object Warc {
     }
 
     private def advance(): Unit = {
-      while (!pending.hasNext && !done) {
+      while ((frame == null || !frame.hasNext) && !done) {
         val markerStart = scanMarker()
         if (markerStart < 0 || markerStart >= end) { done = true }
         else {
           val len = readLE32()
-          if (len < 0) { done = true; skipped += 1 }
-          else if (len == 0 || len > ZstdFrameCap) skipped += 1 // rescan
+          if (len < 0) { done = true; dropped += 1 }
+          else if (len == 0 || len > ZstdFrameCap) dropped += 1 // rescan
           else {
-            val frame = new Array[Byte](len.toInt)
-            if (c.readNBytes(frame, 0, frame.length) < frame.length) {
-              done = true; skipped += 1 // truncated tail frame
+            val bytes = new Array[Byte](len.toInt)
+            if (c.readNBytes(bytes, 0, bytes.length) < bytes.length) {
+              done = true; dropped += 1 // truncated tail frame
             } else {
-              try {
-                val size = com.github.luben.zstd.Zstd
-                  .getFrameContentSize(frame) // -1 unknown, < -1 error
-                if (size == 0 || size < -1) skipped += 1 // no data frame
-                else pending = records(new ByteArrayInputStream(
-                  if (size > 0 && size <= maxPayload + (1L << 16))
-                    com.github.luben.zstd.Zstd.decompress(frame, size.toInt)
-                  // unknown/oversized content size: stream-decode the
-                  // frame so the record is truncated at the cap, not lost
-                  else frame), maxPayload)
-              } catch {
-                case _: Exception => skipped += 1 // torn frame
-              }
+              if (frame != null) dropped += frame.corruptUnits()
+              frame = wholeUnit(Zstd, new ByteArrayInputStream(bytes),
+                maxPayload)
             }
           }
         }
       }
     }
-    override def hasNext: Boolean = { advance(); pending.hasNext }
+    override def hasNext: Boolean = { advance(); frame != null && frame.hasNext }
     override def next(): WarcRecordRow = {
-      advance()
-      if (!pending.hasNext) throw new NoSuchElementException("WARC EOF")
-      pending.next()
+      if (!hasNext) throw new NoSuchElementException("WARC EOF")
+      frame.next()
     }
+    override def close(): Unit = if (frame != null) frame.close()
   }
 
   /** One unit's records. [[close]] frees the file handle and the
@@ -899,7 +894,8 @@ object Warc {
       // "GZS1" payload) before every record's data frame, giving the
       // reader an in-band, validated resync point
       val walk = new ZstdMarkerWalk(in, offset, end, maxPayload)
-      return new UnitRecords(walk, in, () => walk.skipped)
+      return new UnitRecords(walk, () => { walk.close(); in.close() },
+        () => walk.skipped)
     }
     if (offset == 0L && (codec == Zstd || !hasByteAt(in, end))) {
       in.seek(0L)

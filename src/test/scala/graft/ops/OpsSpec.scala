@@ -189,11 +189,24 @@ class OpsSpec extends AnyFunSuite {
     // hash-ordered 10, so with k above the cap every neighbor is one of
     // them and each of them is someone's neighbor
     val one = Array(v.toArray)
-    // the hot cell's 800 seeds are one vector repeated: no duplicate
-    // seed reaches the broadcast table, and one distinct seed is no split
-    val seeds = IvfIndex.trainSubCells(flood.withColumn("cell", lit(0)), 10)
-    assert(seeds.values.forall(s => s.map(_.toSeq).distinct.length == s.length))
-    assert(seeds.isEmpty, seeds.map { case (c, s) => c -> s.length }.toString)
+    // a hot cell's 80 seeds repeat its members' vectors: the broadcast
+    // table keeps each distinct seed once, in rank order, and the flood
+    // (one distinct seed) is no split
+    val w = v.reverse
+    val mixed = (0L until 200L).map(i => (i, if (i % 2 == 0) v else w))
+      .toDF("vec_id", "embedding").withColumn("cell", lit(0))
+    val seeds = IvfIndex.trainSubCells(mixed, 10)
+    val first = if (hashFirst(0L until 200L, 1).head % 2 == 0) v else w
+    assert(seeds.keySet == Set(0))
+    assert(seeds(0).map(_.toSeq).toSeq == Seq(first, if (first == v) w else v))
+    assert(IvfIndex.trainSubCells(flood.withColumn("cell", lit(0)), 10).isEmpty)
+    // the sub-probe reaches both distinct sub-cells: a v query also sees
+    // the w sub-cell's hash-ordered 10 (repeats of its own seed would
+    // fill all 4 sub-probes and hide them)
+    val mixedIvf = IvfIndex.topK(mixed.drop("cell"), one, k = 20, cellCap = 10)
+    assert(mixedIvf.filter(col("query_id") % 2 === 0 && col("neighbor_id") % 2 === 1)
+      .select("neighbor_id").distinct().as[Long].collect().toSet ==
+      hashFirst((0L until 200L).filter(_ % 2 == 1), 10).toSet)
     assert(IvfIndex.cellDrops(flood, one, cellCap = 10) == 1990L)
     val ivf = IvfIndex.topK(flood, one, k = 20, cellCap = 10)
     assert(ivf.select("neighbor_id").distinct().as[Long].collect().toSet ==

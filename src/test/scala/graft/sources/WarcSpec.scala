@@ -589,6 +589,72 @@ class WarcSpec extends AnyFunSuite {
     }
   }
 
+  /** Offset within a zstd frame of its `k`-th block header (RFC 8878
+    * §3.1.1: magic, frame header, then blocks behind 3-byte LE headers
+    * of last flag, 2-bit type and 21-bit size; an RLE block carries one
+    * byte). */
+  private def zstdBlockHeader(f: Array[Byte], k: Int): Int = {
+    val fhd = f(4) & 0xff
+    val single = (fhd >> 5) & 1
+    var p = 5 + (1 - single) + Seq(0, 1, 2, 4)(fhd & 3) +
+      Seq(single, 2, 4, 8)(fhd >> 6)
+    for (_ <- 0 until k) {
+      val h = (f(p) & 0xff) | ((f(p + 1) & 0xff) << 8) |
+        ((f(p + 2) & 0xff) << 16)
+      p += 3 + (if (((h >> 1) & 3) == 1) 1 else h >>> 3)
+    }
+    p
+  }
+
+  test("marker-framed zstd: an over-cap record truncates, a damaged frame counts") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_zbig_").toFile
+    val cap = 1 << 16 // maxPayload; the record spans three zstd blocks
+    val big = (0 until 12000).map(i => s"line $i of a big record\n")
+      .mkString.getBytes(UTF_8)
+    assert(big.length > 2 * cap + (1 << 16))
+    val out = new ByteArrayOutputStream()
+    var bigAt = 0
+    for ((name, body) <- Seq("small" -> "<p>s</p>".getBytes(UTF_8),
+        "big" -> big, "after" -> "<p>a</p>".getBytes(UTF_8))) {
+      if (name == "big") bigAt = out.size()
+      val raw = new ByteArrayOutputStream()
+      Warc.Writer.response(raw, s"http://zb.test/$name", ts(0), body)
+      Warc.Writer.zstdMember(out, raw.toByteArray)
+    }
+    val bytes = out.toByteArray
+    val f = new java.io.File(dir, "big.warc.zst")
+    java.nio.file.Files.write(f.toPath, bytes)
+
+    def rows(splits: Seq[Warc.WarcSplit]) =
+      Warc.warcSplitRecords(spark, splits, cap)
+        .selectExpr("url", "truncated", "length(payload)").collect()
+        .map(r => (r.getString(0), r.getBoolean(1), r.getInt(2))).toSeq
+    val urls = Seq("small", "big", "after").map(n => s"http://zb.test/$n")
+    val whole = rows(Seq(Warc.WarcSplit(f.getAbsolutePath, 0L, f.length())))
+    val plan = Warc.planSplits(spark, f.getAbsolutePath, bytes.length / 3)
+    assert(plan.size > 1)
+    val split = rows(plan)
+    for (got <- Seq(whole, split)) {
+      assert(got.map(_._1).sorted == urls.sorted, got.toString)
+      val (_, truncated, len) = got.find(_._1 == urls(1)).get
+      assert(truncated && len > 0 && len <= cap)
+    }
+
+    // a reserved block type midway through the big record's data frame
+    // (behind its 16-byte marker) aborts that frame's decode only
+    val frameAt = bigAt + Warc.ZstdMarkerSig.length + 4
+    val frame = bytes.slice(frameAt, bytes.length)
+    val blk = frameAt + zstdBlockHeader(frame, 1)
+    bytes(blk) = (bytes(blk) | 0x06).toByte
+    java.nio.file.Files.write(f.toPath, bytes)
+    val summary = Warc.warcFileSummaries(spark, f.getAbsolutePath, cap)
+      .collect()
+    assert(summary.map(_.getLong(5)).toSeq == Seq(1L), summary.toSeq)
+    assert(rows(Seq(Warc.WarcSplit(f.getAbsolutePath, 0L, f.length())))
+      .map(_._1).filter(_ != urls(1)).sorted == Seq(urls(0), urls(2)).sorted)
+    f.delete(); dir.delete()
+  }
+
   test("WET zstd codec: splittable output, same records") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_wetz_")
