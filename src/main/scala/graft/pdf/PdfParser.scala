@@ -34,10 +34,8 @@ object PdfParser {
 
   /** Extract document text: pages joined with the reference's page-break
     * separator (O6, processor.py:391-438). Returns "" when nothing parses. */
-  def extractText(bytes: Array[Byte]): String = {
-    val pages = extractPages(bytes)
-    pages.mkString(PageBreak)
-  }
+  def extractText(bytes: Array[Byte]): String =
+    extractPages(bytes).mkString(PageBreak)
 
   /** Page texts. Page boundaries come from the page tree (Catalog →
     * Pages → Kids): a page whose /Contents is an ARRAY of streams is one
@@ -45,9 +43,10 @@ object PdfParser {
     * to stream-order when no page tree parses (truncated/malformed docs).
     * 2-byte CID hex strings (Type0/Identity-H docs) are mapped through
     * the ToUnicode CMap when present; unmapped codes become U+FFFD
-    * instead of garbage. */
+    * instead of garbage. A stream decodes only when something uses it;
+    * decoding past the document's budget throws [[DecodeBudgetExceeded]]. */
   def extractPages(bytes: Array[Byte]): List[String] = {
-    val objs = parseObjects(bytes)
+    val (objs, streams) = parseObjects(bytes)
     val cidDoc = objs.values.exists(o =>
       o.dict.contains("/Type0") || o.dict.contains("/Identity-H"))
     val toUni = if (cidDoc) parseToUnicode(objs) else Map.empty[Int, String]
@@ -58,30 +57,30 @@ object PdfParser {
     // a document-wide first-binding-wins table would byte-decode that
     // page's 2-byte CID strings into mojibake); pages without their own
     // /Resources (inherited) fall back to the document-wide table
-    val sources: List[(String, Map[String, Array[String]])] =
-      if (pageContents.nonEmpty)
+    val sources: Iterator[(String, Map[String, Array[String]])] =
+      if (pageContents.hasNext)
         pageContents.map { case (num, s) =>
           (s, pageFontEncodings(objs, num).getOrElse(docFonts))
         }
-      else findStreams(bytes).map((_, docFonts)) // legacy stream order
-    val pageTexts = List.newBuilder[String]
-    var pageCount = 0
-    sources.foreach { case (s, fonts) =>
-      if (pageCount < MaxPages) {
-        val runs = interpretContent(s, cidDoc, toUni, fonts)
-        if (runs.nonEmpty) {
-          pageTexts += XYCut.layout(runs)
-          pageCount += 1
-        }
-      }
-    }
-    pageTexts.result()
+      else streams.iterator.flatMap(_.stream).map((_, docFonts)) // legacy stream order
+    sources.map { case (s, fonts) => interpretContent(s, cidDoc, toUni, fonts) }
+      .filter(_.nonEmpty).take(MaxPages).map(XYCut.layout).toList
   }
 
   // ------------------------------------------------------------------
   // object table + page tree
 
-  private[pdf] final case class PdfObj(dict: String, stream: Option[String])
+  /** One indirect object: its dict text and, for a stream object, the
+    * extent of its raw payload in the input (no copy). `stream` decodes
+    * the payload on first use and keeps the result; it is None for a
+    * dict-only object or a stream that does not decode. */
+  private[pdf] final class PdfObj(val dict: String, src: Array[Byte] = null,
+      from: Int = 0, until: Int = 0, budget: DecodeBudget = null) {
+    lazy val stream: Option[String] =
+      if (src == null) None
+      else Option(decodeStream(dict, java.util.Arrays.copyOfRange(src, from, until),
+        budget)).map(new String(_, java.nio.charset.StandardCharsets.ISO_8859_1))
+  }
 
   private val objHeader =
     java.util.regex.Pattern.compile("(\\d+)\\s+\\d+\\s+obj\\b")
@@ -90,7 +89,9 @@ object PdfParser {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Indirect objects: number → (dict text, decoded stream payload).
+  /** Indirect objects by number, and every stream object in scan order
+    * (shadowed redefinitions included) for the no-page-tree fallback.
+    * All of them share one decode budget, sized from the input.
     *
     * The scanner resumes AFTER each object's endstream/endobj, so byte
     * sequences that happen to spell "N 0 obj" inside binary stream
@@ -98,10 +99,14 @@ object PdfParser {
     * real entries and corrupt page-tree order in compressed PDFs). The
     * 10000-object guard is logged when it truncates — never a silent
     * cap. */
-  private[pdf] def parseObjects(bytes: Array[Byte]): Map[Int, PdfObj] = {
-    if (bytes == null || bytes.length < 16) return Map.empty
+  private[pdf] def parseObjects(
+      bytes: Array[Byte]): (Map[Int, PdfObj], List[PdfObj]) = {
+    if (bytes == null || bytes.length < 16) return (Map.empty, Nil)
+    val budget = new DecodeBudget(
+      math.min(DecodeCeiling, DecodeMultiple * bytes.length))
     val doc = new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
     val out = Map.newBuilder[Int, PdfObj]
+    val streams = List.newBuilder[PdfObj]
     val m = objHeader.matcher(doc)
     var guard = 0
     var from = 0
@@ -122,21 +127,19 @@ object PdfParser {
           var dataEnd = ei
           if (dataEnd > dataStart && doc.charAt(dataEnd - 1) == '\n') dataEnd -= 1
           if (dataEnd > dataStart && doc.charAt(dataEnd - 1) == '\r') dataEnd -= 1
-          val raw = java.util.Arrays.copyOfRange(bytes, dataStart, dataEnd)
-          val payload = decodeStream(dict, raw)
-          out += num -> PdfObj(dict,
-            Option(payload).map(p =>
-              new String(p, java.nio.charset.StandardCharsets.ISO_8859_1)))
+          val o = new PdfObj(dict, bytes, dataStart, dataEnd, budget)
+          out += num -> o
+          streams += o
           // skip past the stream payload: its bytes must never be
           // scanned for object headers
           val eo = doc.indexOf("endobj", ei)
           from = if (eo >= 0) eo + "endobj".length else ei + "endstream".length
         } else {
-          out += num -> PdfObj(dict, None)
+          out += num -> new PdfObj(dict)
           from = doc.length // unterminated stream: nothing trustworthy after
         }
       } else {
-        out += num -> PdfObj(doc.substring(bodyStart, bodyEnd), None)
+        out += num -> new PdfObj(doc.substring(bodyStart, bodyEnd))
         from = if (endObj >= 0) endObj + "endobj".length else bodyEnd
       }
       if (from <= bodyStart) from = bodyStart // monotone progress
@@ -150,10 +153,10 @@ object PdfParser {
     // them into the object table; a top-level object with the same
     // number wins (incremental updates append uncompressed overrides).
     val unpacked = base.values
-      .filter(o => o.dict.contains("/ObjStm") && o.stream.isDefined)
-      .flatMap(o => unpackObjStm(o))
-      .filterNot { case (num, _) => base.contains(num) }
-    if (unpacked.isEmpty) base else base ++ unpacked
+      .filter(_.dict.contains("/ObjStm"))
+      .flatMap(o => o.stream.toList.flatMap(unpackObjStm(o.dict, _)))
+      .collect { case (num, d) if !base.contains(num) => num -> new PdfObj(d) }
+    (if (unpacked.isEmpty) base else base ++ unpacked, streams.result())
   }
 
   private val intToken = java.util.regex.Pattern.compile("\\d+")
@@ -165,13 +168,12 @@ object PdfParser {
     if (m.find(i + key.length)) m.group().toInt else -1
   }
 
-  /** Embedded (objNum → dict) pairs of one /ObjStm payload: header is
-    * N (objnum, offset) integer pairs, bodies start at /First. Objects
+  /** Embedded (objNum → dict) pairs of one /ObjStm payload `s`: header
+    * is N (objnum, offset) integer pairs, bodies start at /First. Objects
     * inside an ObjStm are dict-only (the spec forbids nested streams). */
-  private[pdf] def unpackObjStm(o: PdfObj): List[(Int, PdfObj)] = {
-    val s = o.stream.getOrElse(return Nil)
-    val n = intAfter(o.dict, "/N")
-    val first = intAfter(o.dict, "/First")
+  private[pdf] def unpackObjStm(dict: String, s: String): List[(Int, String)] = {
+    val n = intAfter(dict, "/N")
+    val first = intAfter(dict, "/First")
     if (n <= 0 || n > 10000 || first <= 0 || first > s.length) return Nil
     val m = intToken.matcher(s.substring(0, first))
     val header = new Array[Int](2 * n)
@@ -183,7 +185,7 @@ object PdfParser {
       i += 1
     }
     if (i < 2 * n) return Nil
-    val out = List.newBuilder[(Int, PdfObj)]
+    val out = List.newBuilder[(Int, String)]
     var k = 0
     while (k < n) {
       val num = header(2 * k)
@@ -192,7 +194,7 @@ object PdfParser {
         if (k + 1 < n) math.min(s.length, first + header(2 * k + 3))
         else s.length
       if (start >= 0 && start <= end)
-        out += num -> PdfObj(s.substring(start, end), None)
+        out += num -> s.substring(start, end)
       k += 1
     }
     out.result()
@@ -233,14 +235,15 @@ object PdfParser {
     java.util.regex.Pattern.compile("/Type\\s*/Pages(?![a-zA-Z])")
 
   /** (page object number, concatenated content) per page, page-tree
-    * order — the id lets the caller resolve per-page /Resources. */
+    * order — the id lets the caller resolve per-page /Resources. Lazy:
+    * a page's content streams decode when the caller reaches it. */
   private[pdf] def pageContentStreamsWithIds(
-      objs: Map[Int, PdfObj]): List[(Int, String)] = {
-    if (objs.isEmpty) return Nil
+      objs: Map[Int, PdfObj]): Iterator[(Int, String)] = {
+    if (objs.isEmpty) return Iterator.empty
     // roots: /Pages nodes not referenced as a Kid of another /Pages node
     val pagesNodes = objs.filter(o => typePages.matcher(o._2.dict).find())
     val pageObjs = objs.filter(o => typePage.matcher(o._2.dict).find())
-    if (pageObjs.isEmpty) return Nil
+    if (pageObjs.isEmpty) return Iterator.empty
 
     val kidRefs: Map[Int, List[Int]] = pagesNodes.map { case (n, o) =>
       n -> dictValue(o.dict, "/Kids").map(refsIn).getOrElse(Nil)
@@ -262,11 +265,12 @@ object PdfParser {
     pageObjs.keys.toList.sorted.foreach(n =>
       if (!seen.contains(n)) ordered += n)
 
-    ordered.result().flatMap { n =>
+    ordered.result().iterator.flatMap { n =>
       val contents = dictValue(pageObjs(n).dict, "/Contents")
         .map(refsIn).getOrElse(Nil)
       val parts = contents.flatMap(objs.get).flatMap(_.stream)
-      if (parts.isEmpty) None else Some((n, parts.mkString("\n")))
+      if (parts.isEmpty) None
+      else Some((n, if (parts.tail.isEmpty) parts.head else parts.mkString("\n")))
     }
   }
 
@@ -302,19 +306,9 @@ object PdfParser {
       fontDict: String): Option[Array[String]] = {
     val i = fontDict.indexOf("/Encoding")
     if (i < 0) return None
-    var j = i + "/Encoding".length
-    while (j < fontDict.length && Character.isWhitespace(fontDict.charAt(j))) j += 1
-    val encSrc: String =
-      if (j + 1 < fontDict.length && fontDict.charAt(j) == '<' &&
-        fontDict.charAt(j + 1) == '<')
-        balancedDict(fontDict, j) // inline dict
-      else {
-        val tail = fontDict.substring(j, math.min(fontDict.length, j + 40))
-        val rm = refPattern.matcher(tail)
-        if (rm.lookingAt) // indirect encoding dict
-          objs.get(rm.group(1).toInt).map(_.dict).getOrElse("")
-        else tail // a bare name like /WinAnsiEncoding
-      }
+    // an inline or indirect dict, or a bare name like /WinAnsiEncoding
+    val encSrc = dictAfterKey(objs, fontDict, i + "/Encoding".length,
+      orName = true)
     if (encSrc.isEmpty) return None
     val base = {
       val bm = encodingName.matcher(encSrc)
@@ -339,9 +333,10 @@ object PdfParser {
   }
 
   /** Resolve the value following `key` in `src` as a dict: inline
-    * `<< ... >>` or an indirect reference to one; "" when neither. */
+    * `<< ... >>` or an indirect reference to one; when neither, the next
+    * 40 chars if `orName` (a bare name), else "". */
   private def dictAfterKey(objs: Map[Int, PdfObj], src: String,
-      keyEnd: Int): String = {
+      keyEnd: Int, orName: Boolean = false): String = {
     var j = keyEnd
     while (j < src.length && Character.isWhitespace(src.charAt(j))) j += 1
     if (j + 1 < src.length && src.charAt(j) == '<' && src.charAt(j + 1) == '<')
@@ -350,6 +345,7 @@ object PdfParser {
       val tail = src.substring(j, math.min(src.length, j + 40))
       val rm = refPattern.matcher(tail)
       if (rm.lookingAt) objs.get(rm.group(1).toInt).map(_.dict).getOrElse("")
+      else if (orName) tail
       else ""
     }
   }
@@ -435,10 +431,15 @@ object PdfParser {
     sb.toString
   }
 
-  /** Merge every ToUnicode CMap in the document: CID code → string. */
+  private val subtypeImage =
+    java.util.regex.Pattern.compile("/Subtype\\s*/Image(?![a-zA-Z])")
+
+  /** Merge every ToUnicode CMap in the document: CID code → string.
+    * Image XObjects never hold a CMap, so they are not decoded. */
   private[pdf] def parseToUnicode(objs: Map[Int, PdfObj]): Map[Int, String] = {
     val out = scala.collection.mutable.HashMap.empty[Int, String]
-    objs.values.flatMap(_.stream).foreach { s =>
+    objs.values.filterNot(o => subtypeImage.matcher(o.dict).find())
+      .flatMap(_.stream).foreach { s =>
       if (s.contains("begincmap") || s.contains("beginbfchar") ||
           s.contains("beginbfrange")) {
         // bfchar sections: <src> <dst>
@@ -499,82 +500,10 @@ object PdfParser {
   }
 
   // ------------------------------------------------------------------
-  // object/stream lexing
-
-  /** Locate stream payloads, decode FlateDecode when flagged, return each
-    * as a Latin-1 string (content streams are byte-oriented). */
-  private def findStreams(bytes: Array[Byte]): List[String] = {
-    if (bytes == null || bytes.length < 16) return Nil
-    val doc = new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
-    val out = List.newBuilder[String]
-    var from = 0
-    var guard = 0
-    while (from < doc.length && guard < 10000) {
-      guard += 1
-      val si = doc.indexOf("stream", from)
-      if (si < 0) { from = doc.length }
-      else {
-        // dict precedes "stream"; find its start for the Filter check —
-        // nesting-aware (a plain lastIndexOf("<<") would land on a
-        // nested sub-dict like /DecodeParms << ... >> and lose /Filter)
-        val dictStart = dictStartBefore(doc, si)
-        val dict = if (dictStart >= 0) doc.substring(dictStart, si) else ""
-        var dataStart = si + "stream".length
-        if (dataStart < doc.length && doc.charAt(dataStart) == '\r') dataStart += 1
-        if (dataStart < doc.length && doc.charAt(dataStart) == '\n') dataStart += 1
-        val ei = doc.indexOf("endstream", dataStart)
-        if (ei < 0) { from = doc.length }
-        else {
-          var dataEnd = ei
-          // strip one trailing EOL
-          if (dataEnd > dataStart && doc.charAt(dataEnd - 1) == '\n') dataEnd -= 1
-          if (dataEnd > dataStart && doc.charAt(dataEnd - 1) == '\r') dataEnd -= 1
-          val raw = java.util.Arrays.copyOfRange(bytes, dataStart, dataEnd)
-          val payload = decodeStream(dict, raw)
-          if (payload != null)
-            out += new String(payload,
-              java.nio.charset.StandardCharsets.ISO_8859_1)
-          from = ei + "endstream".length
-        }
-      }
-    }
-    out.result()
-  }
-
-  /** Start index of the outermost `<<` of the dict whose closing `>>`
-    * immediately precedes position `si` — a backward scan balancing
-    * `>>`/`<<` pairs, so nested sub-dicts (/DecodeParms << ... >>)
-    * don't truncate the enclosing stream dict. −1 when absent. The
-    * scan is windowed to 8 KB: real stream dicts are far smaller, and
-    * without the bound a malformed doc repeating `stream` with no
-    * dicts costs O(len) per token — quadratic over the document
-    * (bounded-work contract; the old lastIndexOf had the same hole). */
-  private def dictStartBefore(doc: String, si: Int): Int = {
-    val floor = math.max(0, si - 8192)
-    var i = si - 1
-    var depth = 0
-    while (i > floor) {
-      val c = doc.charAt(i)
-      if (c == '>' && doc.charAt(i - 1) == '>') { depth += 1; i -= 2 }
-      else if (c == '<' && doc.charAt(i - 1) == '<') {
-        depth -= 1
-        if (depth <= 0) return i - 1
-        i -= 2
-      }
-      else i -= 1
-    }
-    -1
-  }
-
-  // ------------------------------------------------------------------
   // stream filters (PDF 32000-1 §7.4): FlateDecode, LZWDecode,
-  // ASCIIHexDecode, ASCII85Decode, RunLengthDecode — including filter
-  // ARRAYS (applied first-to-last) and /DecodeParms predictors (TIFF
-  // predictor 2 and PNG predictors 10–15, §7.4.4.4) applied after the
-  // Flate/LZW stage they parameterize. Predicted ObjStm/content
-  // streams (Flate + /Predictor 12 occurs in the wild) now decode;
-  // image filters (DCTDecode etc.) and indirect /Filter refs still
-  // leave the data as-is (the text interpreter gates on "BT").
+  // ASCIIHexDecode, ASCII85Decode, RunLengthDecode, and filter ARRAYS
+  // applied first-to-last, with /DecodeParms predictors (TIFF 2, PNG
+  // 10–15, §7.4.4.4) after the Flate/LZW stage they parameterize
 
   private val filterNameToken =
     java.util.regex.Pattern.compile("/([A-Za-z0-9]+)")
@@ -603,6 +532,52 @@ object PdfParser {
     Nil
   }
 
+  /** Bytes one document may decode, summed over every expanding stage
+    * (Flate, LZW, RunLength, ASCII85) of every stream it decodes:
+    * `DecodeMultiple` × its input size, at most `DecodeCeiling`. The
+    * largest decoded/input ratio measured over the golden fixture, the
+    * benchmark's seed-7 PDFs and the PDF kernel spec is 2.18 (a
+    * benchmark PDF whose content is ASCII85 over Flate): 64 leaves ~30×
+    * headroom, while a deflated run of zeros (~1000×) stops early. */
+  private[graft] val DecodeMultiple = 64L
+  private[graft] val DecodeCeiling = 32L << 20
+
+  /** One document's decode allowance; [[charge]] throws
+    * [[DecodeBudgetExceeded]] once it is spent. */
+  private[pdf] final class DecodeBudget(private[pdf] var left: Long) {
+    def charge(n: Int): Unit = {
+      left -= n
+      if (left < 0) throw new DecodeBudgetExceeded
+    }
+  }
+
+  /** A document decoded past its budget: the row fails with
+    * `EXTRACTION_ERROR: DecodeBudgetExceeded`. */
+  final class DecodeBudgetExceeded
+      extends RuntimeException("PDF decode budget exceeded", null, false, false)
+
+  /** Output buffer of an expanding stage: each write is charged to the
+    * budget before it is stored, and the buffer never grows past what
+    * the budget still allows. */
+  private final class Sink(budget: DecodeBudget, hint: Int) {
+    private[this] var buf =
+      new Array[Byte](math.max(64L, math.min(hint.toLong, budget.left)).toInt)
+    private[this] var n = 0
+    def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      budget.charge(len)
+      if (n + len > buf.length) { // double, or take all that is left
+        val allowed = n + len + budget.left
+        val doubled = math.max(n + len, 2L * buf.length)
+        buf = java.util.Arrays.copyOf(buf,
+          (if (2 * doubled > allowed) allowed else doubled).toInt)
+      }
+      System.arraycopy(b, off, buf, n, len)
+      n += len
+    }
+    def bytes: Array[Byte] =
+      if (n == buf.length) buf else java.util.Arrays.copyOf(buf, n)
+  }
+
   /** Apply the stream's declared filter chain; null on corrupt data
     * (caller treats as undecodable). Unknown filters pass data through
     * unchanged (image codecs never reach the text interpreter — it
@@ -610,29 +585,20 @@ object PdfParser {
     * after the Flate/LZW stage they parameterize; a predictor this
     * decoder can't invert yields null rather than predictor-encoded
     * garbage flowing into the content interpreter. */
-  private[pdf] def decodeStream(dict: String, raw: Array[Byte]): Array[Byte] = {
-    var data = raw
+  private[pdf] def decodeStream(dict: String, raw: Array[Byte],
+      budget: DecodeBudget): Array[Byte] = {
     val parms = decodeParmsOf(dict)
-    var idx = 0
-    filtersOf(dict).foreach { f =>
-      if (data != null) {
-        val predicted = f match {
-          case "FlateDecode" | "Fl" => inflate(data)
-          case "LZWDecode" | "LZW" => lzwDecode(data)
-          case "ASCIIHexDecode" | "AHx" => asciiHexDecode(data)
-          case "ASCII85Decode" | "A85" => ascii85Decode(data)
-          case "RunLengthDecode" | "RL" => runLengthDecode(data)
-          case _ => data
-        }
-        data = f match {
-          case "FlateDecode" | "Fl" | "LZWDecode" | "LZW" =>
-            applyPredictor(parms(idx), predicted)
-          case _ => predicted
-        }
+    filtersOf(dict).zipWithIndex.foldLeft(raw) { case (data, (f, idx)) =>
+      if (data == null) null
+      else f match {
+        case "FlateDecode" | "Fl" => applyPredictor(parms(idx), inflate(data, budget))
+        case "LZWDecode" | "LZW" => applyPredictor(parms(idx), lzwDecode(data, budget))
+        case "ASCIIHexDecode" | "AHx" => asciiHexDecode(data)
+        case "ASCII85Decode" | "A85" => ascii85Decode(data, budget)
+        case "RunLengthDecode" | "RL" => runLengthDecode(data, budget)
+        case _ => data
       }
-      idx += 1
     }
-    data
   }
 
   /** Predictor parameters of one /DecodeParms entry (spec defaults:
@@ -798,57 +764,54 @@ object PdfParser {
   /** ASCII85Decode: 5 chars (!..u) → 4 bytes base-85; `z` = four zero
     * bytes; `~>` terminates; a partial group of n chars yields n−1
     * bytes after padding with 'u' (spec §7.4.3). */
-  private[pdf] def ascii85Decode(data: Array[Byte]): Array[Byte] = {
-    try {
-      val out = new java.io.ByteArrayOutputStream(data.length * 4 / 5 + 4)
-      var tuple = 0L
-      var cnt = 0
-      var i = 0
-      if (data.length >= 2 && data(0) == '<' && data(1) == '~') i = 2
-      var done = false
-      while (i < data.length && !done) {
-        val c = data(i).toChar
-        if (c == '~') done = true
-        else if (c == 'z' && cnt == 0) {
-          out.write(0); out.write(0); out.write(0); out.write(0)
-        } else if (c >= '!' && c <= 'u') {
-          tuple = tuple * 85 + (c - '!')
-          cnt += 1
-          if (cnt == 5) {
-            out.write(((tuple >> 24) & 0xff).toInt)
-            out.write(((tuple >> 16) & 0xff).toInt)
-            out.write(((tuple >> 8) & 0xff).toInt)
-            out.write((tuple & 0xff).toInt)
-            tuple = 0L; cnt = 0
-          }
-        } // anything else (whitespace): skip
-        i += 1
-      }
-      if (cnt > 1) {
-        var t = tuple
-        var p = cnt
-        while (p < 5) { t = t * 85 + 84; p += 1 } // pad with 'u'
-        val bs = Array(((t >> 24) & 0xff).toByte, ((t >> 16) & 0xff).toByte,
-          ((t >> 8) & 0xff).toByte, (t & 0xff).toByte)
-        out.write(bs, 0, cnt - 1)
-      }
-      out.toByteArray
-    } catch { case _: Exception => null }
+  private[pdf] def ascii85Decode(data: Array[Byte],
+      budget: DecodeBudget): Array[Byte] = {
+    val out = new Sink(budget, data.length * 4 / 5 + 4)
+    val group = new Array[Byte](4)
+    var tuple = 0L
+    var cnt = 0
+    var i = 0
+    if (data.length >= 2 && data(0) == '<' && data(1) == '~') i = 2
+    var done = false
+    while (i < data.length && !done) {
+      val c = data(i).toChar
+      if (c == '~') done = true
+      else if (c == 'z' && cnt == 0) {
+        bigEndian(0L, group)
+        out.write(group, 0, 4)
+      } else if (c >= '!' && c <= 'u') {
+        tuple = tuple * 85 + (c - '!')
+        cnt += 1
+        if (cnt == 5) {
+          bigEndian(tuple, group)
+          out.write(group, 0, 4)
+          tuple = 0L; cnt = 0
+        }
+      } // anything else (whitespace): skip
+      i += 1
+    }
+    if (cnt > 1) {
+      var p = cnt
+      while (p < 5) { tuple = tuple * 85 + 84; p += 1 } // pad with 'u'
+      bigEndian(tuple, group)
+      out.write(group, 0, cnt - 1)
+    }
+    out.bytes
   }
 
-  /** Output bound of each expanding filter stage (Flate, LZW,
-    * RunLength): a stage stops there and keeps what it decoded. */
-  private val MaxStageBytes = 64 << 20
+  private def bigEndian(v: Long, to: Array[Byte]): Unit =
+    for (k <- 0 until 4) to(k) = (v >> (24 - 8 * k)).toByte
 
   /** RunLengthDecode: length byte L ∈ [0,127] copies the next L+1 bytes
     * literally; L ∈ [129,255] repeats the next byte 257−L times; 128 is
-    * EOD (spec §7.4.5). Output stops at [[MaxStageBytes]]. */
-  private[pdf] def runLengthDecode(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 2))
+    * EOD (spec §7.4.5). */
+  private[pdf] def runLengthDecode(data: Array[Byte],
+      budget: DecodeBudget): Array[Byte] = {
+    val out = new Sink(budget, data.length * 2)
     val run = new Array[Byte](128)
     var i = 0
     var done = false
-    while (i < data.length && !done && out.size < MaxStageBytes) {
+    while (i < data.length && !done) {
       val l = data(i) & 0xff
       i += 1
       if (l == 128) done = true
@@ -862,80 +825,76 @@ object PdfParser {
         i += 1
       } else done = true
     }
-    out.toByteArray
+    out.bytes
   }
 
   /** LZWDecode (spec §7.4.4, TIFF-style): 9→12-bit codes MSB-first,
     * 256 = clear table, 257 = EOD, entries from 258; code width grows
     * one entry EARLY (EarlyChange default 1: at table sizes 511, 1023,
     * 2047). Truncated/invalid input yields the bytes decoded so far. */
-  private[pdf] def lzwDecode(data: Array[Byte]): Array[Byte] = {
-    try {
-      val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 3))
-      val table = new Array[Array[Byte]](4096)
-      var dictSize = 258
-      var codeBits = 9
-      var prev: Array[Byte] = null
-      var bitBuf = 0L
-      var bitCnt = 0
-      var i = 0
-      var done = false
-      while (!done) {
-        while (bitCnt < codeBits && i < data.length) {
-          bitBuf = (bitBuf << 8) | (data(i) & 0xff)
-          bitCnt += 8
-          i += 1
-        }
-        if (bitCnt < codeBits) done = true // truncated input
+  private[pdf] def lzwDecode(data: Array[Byte],
+      budget: DecodeBudget): Array[Byte] = {
+    val out = new Sink(budget, data.length * 3)
+    val table = new Array[Array[Byte]](4096)
+    var dictSize = 258
+    var codeBits = 9
+    var prev: Array[Byte] = null
+    var bitBuf = 0L
+    var bitCnt = 0
+    var i = 0
+    var done = false
+    while (!done) {
+      while (bitCnt < codeBits && i < data.length) {
+        bitBuf = (bitBuf << 8) | (data(i) & 0xff)
+        bitCnt += 8
+        i += 1
+      }
+      if (bitCnt < codeBits) done = true // truncated input
+      else {
+        val code =
+          ((bitBuf >> (bitCnt - codeBits)) & ((1 << codeBits) - 1)).toInt
+        bitCnt -= codeBits
+        if (code == 256) { dictSize = 258; codeBits = 9; prev = null }
+        else if (code == 257) done = true
         else {
-          val code =
-            ((bitBuf >> (bitCnt - codeBits)) & ((1 << codeBits) - 1)).toInt
-          bitCnt -= codeBits
-          if (code == 256) { dictSize = 258; codeBits = 9; prev = null }
-          else if (code == 257) done = true
-          else {
-            val entry: Array[Byte] =
-              if (code < 256) Array(code.toByte)
-              else if (code < dictSize && table(code) != null) table(code)
-              else if (prev != null) prev :+ prev(0) // KwKwK
-              else return out.toByteArray // invalid leading code
-            out.write(entry, 0, entry.length)
-            if (prev != null && dictSize < 4096) {
-              table(dictSize) = prev :+ entry(0)
-              dictSize += 1
-            }
-            prev = entry
-            if (codeBits < 12 && dictSize + 1 >= (1 << codeBits))
-              codeBits += 1 // EarlyChange = 1
-            if (out.size > MaxStageBytes) done = true
+          val entry: Array[Byte] =
+            if (code < 256) Array(code.toByte)
+            else if (code < dictSize && table(code) != null) table(code)
+            else if (prev != null) prev :+ prev(0) // KwKwK
+            else return out.bytes // invalid leading code
+          out.write(entry, 0, entry.length)
+          if (prev != null && dictSize < 4096) {
+            table(dictSize) = prev :+ entry(0)
+            dictSize += 1
           }
+          prev = entry
+          if (codeBits < 12 && dictSize + 1 >= (1 << codeBits))
+            codeBits += 1 // EarlyChange = 1
         }
       }
-      out.toByteArray
-    } catch { case _: Exception => null }
+    }
+    out.bytes
   }
 
   /** Null on a corrupt stream. A stream that needs a preset dictionary
     * (zlib FDICT) cannot be decoded: there `inflate` returns 0 with input
     * left, so "no output and input left" ends the loop as corrupt
     * instead of spinning; a truncated stream keeps what it decoded. */
-  private def inflate(data: Array[Byte]): Array[Byte] = {
+  private def inflate(data: Array[Byte], budget: DecodeBudget): Array[Byte] = {
     val inf = new Inflater()
     try {
       inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 4))
+      val out = new Sink(budget, data.length * 4)
       val buf = new Array[Byte](8192)
-      var total = 0
-      while (!inf.finished() && total < MaxStageBytes) {
+      while (!inf.finished()) {
         val n = inf.inflate(buf)
         if (n == 0 && !inf.finished() &&
             (inf.needsDictionary() || !inf.needsInput())) return null
-        if (n == 0 && inf.needsInput()) return out.toByteArray
+        if (n == 0 && inf.needsInput()) return out.bytes
         out.write(buf, 0, n)
-        total += n
       }
-      out.toByteArray
-    } catch { case _: Exception => null }
+      out.bytes
+    } catch { case _: java.util.zip.DataFormatException => null }
     finally inf.end()
   }
 
@@ -1059,14 +1018,6 @@ object PdfParser {
     def next(): Tok = { val t = nextTok; nextTok = advance(); t }
   }
 
-  /** Interpret one content stream into positioned glyph runs. */
-  private[pdf] def interpretContent(content: String): List[GlyphRun] =
-    interpretContent(content, cid = false, Map.empty, Map.empty)
-
-  private[pdf] def interpretContent(content: String, cid: Boolean,
-      toUni: Map[Int, String]): List[GlyphRun] =
-    interpretContent(content, cid, toUni, Map.empty)
-
   /** Map a hex string's byte-chars as 2-byte CIDs through the ToUnicode
     * table; unmapped codes (and odd trailing bytes) become U+FFFD. */
   private def decodeCid(raw: String, toUni: Map[Int, String]): String = {
@@ -1081,6 +1032,7 @@ object PdfParser {
     sb.toString
   }
 
+  /** Interpret one content stream into positioned glyph runs. */
   private[pdf] def interpretContent(content: String, cid: Boolean,
       toUni: Map[Int, String],
       fonts: Map[String, Array[String]]): List[GlyphRun] = {
@@ -1137,14 +1089,9 @@ object PdfParser {
                 if (lastName != null) fonts.getOrElse(lastName, null) else null
             case "TL" =>
               if (nums.nonEmpty) leading = nums.last
-            case "Td" =>
+            case "Td" | "TD" =>
               if (nums.size >= 2) {
-                lineX += nums(nums.size - 2); lineY += nums.last
-                curX = lineX; curY = lineY
-              }
-            case "TD" =>
-              if (nums.size >= 2) {
-                leading = -nums.last
+                if (op == "TD") leading = -nums.last
                 lineX += nums(nums.size - 2); lineY += nums.last
                 curX = lineX; curY = lineY
               }
@@ -1161,10 +1108,7 @@ object PdfParser {
             case "ET" => // end text
             case "Tj" =>
               if (lastStr != null) { show(lastStr, lastStrCid); lastStr = null }
-            case "'" =>
-              lineY -= leading; curX = lineX; curY = lineY
-              if (lastStr != null) { show(lastStr, lastStrCid); lastStr = null }
-            case "\"" =>
+            case "'" | "\"" =>
               lineY -= leading; curX = lineX; curY = lineY
               if (lastStr != null) { show(lastStr, lastStrCid); lastStr = null }
             case "TJ" =>

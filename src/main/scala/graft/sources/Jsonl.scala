@@ -7,11 +7,11 @@ import org.apache.spark.sql.functions._
 /** JSONL (newline-delimited JSON) sink — the interchange format LLM
   * training stacks actually exchange corpora in (one JSON object per
   * line, gzip per file). `write` emits one `part-NNNNN.jsonl.gz` per
-  * partition with the same speculation-safe commit discipline as
-  * [[Warc.writeWet]]: every task attempt streams to an attempt-unique
-  * temp under `_jsonl_tmp/` and commits by atomic rename, so a
-  * speculative duplicate can never interleave into a final file and a
-  * failed job leaves no partial output. Rows are serialized with
+  * partition with the speculation-safe commit of [[PartFiles]] (shared
+  * with [[Warc.writeWet]]): every task attempt streams to an
+  * attempt-unique temp under `_jsonl_tmp/` and commits by atomic
+  * rename, so a speculative duplicate can never interleave into a final
+  * file and a failed job leaves no partial output. Rows are serialized with
   * Spark's codegen'd `to_json` (JSON string escaping keeps every record
   * on one line regardless of newlines in the data); the files read
   * straight back with `spark.read.schema(...).json(dir)` — or any
@@ -26,61 +26,25 @@ object Jsonl {
   def write(df: DataFrame, dir: String): Seq[(String, Long)] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val conf = new SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    val written = df
-      .select(to_json(struct(df.columns.map(col): _*)).as("line"))
-      .as[String]
-      .mapPartitions { it =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          val ctx = org.apache.spark.TaskContext.get()
-          // partitionId is safe HERE: this mapPartitions is consumed
-          // directly by the collect() below (one stage, ids == input
-          // partitions) — the same contract writeWet documents
-          val pid = if (ctx != null) ctx.partitionId() else 0
-          val attemptUid =
-            if (ctx != null) s"a${ctx.taskAttemptId()}"
-            else java.util.UUID.randomUUID().toString
-          Iterator.single(
-            writePartition(it, dir, pid, attemptUid, conf.conf))
-        }
-      }.collect().toSeq.sortBy(_._1)
-    // best-effort sweep of scratch from attempts killed mid-write
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(dir, TmpDir), true)
-    written
+    PartFiles.write(
+      df.select(to_json(struct(df.columns.map(col): _*)).as("line")).as[String],
+      dir, TmpDir)(writePartition(_, dir, _, _, _))
   }
 
   /** One attempt's partition write: stream lines to an attempt-unique
-    * gzip temp, commit by rename (first committer wins; the loser
-    * deletes its temp — same discipline as [[Warc.writeWetPartition]]). */
+    * gzip temp and commit it ([[PartFiles.commit]]). */
   private[sources] def writePartition(it: Iterator[String], dir: String,
       pid: Int, attemptUid: String,
-      conf: org.apache.hadoop.conf.Configuration): (String, Long) = {
-    val fin = new Path(f"$dir/part-$pid%05d.jsonl.gz")
-    val tmp = new Path(f"$dir/$TmpDir/part-$pid%05d-$attemptUid.jsonl.gz")
-    val fs = fin.getFileSystem(conf)
-    val out = new java.util.zip.GZIPOutputStream(fs.create(tmp, true))
-    var n = 0L
-    var ok = false
-    try {
+      conf: org.apache.hadoop.conf.Configuration): (String, Long) =
+    PartFiles.commit(new Path(f"$dir/part-$pid%05d.jsonl.gz"),
+      new Path(f"$dir/$TmpDir/part-$pid%05d-$attemptUid.jsonl.gz"), Nil,
+      conf)(new java.util.zip.GZIPOutputStream(_)) { out =>
+      var n = 0L
       it.foreach { line =>
         out.write(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         out.write('\n')
         n += 1
       }
-      ok = true
-    } finally {
-      out.close()
-      if (!ok) fs.delete(tmp, false)
+      n
     }
-    if (!fs.rename(tmp, fin)) {
-      fs.delete(tmp, false)
-      if (!fs.exists(fin))
-        throw new java.io.IOException(s"JSONL commit failed for $fin")
-      (fin.toString, n)
-    } else (fin.toString, n)
-  }
 }

@@ -541,52 +541,19 @@ object Warc {
       s"unsupported WET codec '$codec' (gzip | zstd)")
     val spark = rows.sparkSession
     import spark.implicits._
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val written = rows
-      .select(col("url"), col("warc_ts"), col("text"))
-      .as[(String, java.sql.Timestamp, String)]
-      .mapPartitions { it =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          val ctx = org.apache.spark.TaskContext.get()
-          // partitionId is safe HERE because this mapPartitions is
-          // consumed directly by the collect() below (one stage, ids ==
-          // input partitions); it must never be used to look up
-          // bucket-keyed state in a frame a caller can compose (union
-          // concatenation shifts the ids — see IncrementalDedup)
-          val pid = if (ctx != null) ctx.partitionId() else 0
-          // attempt-unique scratch name: a speculative duplicate and
-          // the original can NEVER share a write target
-          val attemptUid =
-            if (ctx != null) s"a${ctx.taskAttemptId()}"
-            else java.util.UUID.randomUUID().toString
-          Iterator.single(
-            writeWetPartition(it, dir, pid, attemptUid, conf.conf, codec,
-              cdx))
-        }
-      }.collect().toSeq.sortBy(_._1)
-    // best-effort sweep of the attempt scratch dir (loser temps are
-    // deleted at commit time; this clears temps from attempts killed
-    // mid-write). A straggling speculative attempt writing after this
-    // sweep leaves only scratch under _wet_tmp — never a final file.
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(dir, WetTmpDir), true)
-    written
+    PartFiles.write(rows.select(col("url"), col("warc_ts"), col("text"))
+      .as[(String, java.sql.Timestamp, String)], dir, WetTmpDir)(
+      writeWetPartition(_, dir, _, _, _, codec, cdx))
   }
 
   private[sources] val WetTmpDir = "_wet_tmp"
 
-  /** One task attempt's WET partition write with commit discipline
-    * (the r6 version wrote the FINAL path directly with overwrite=true,
-    * so a speculative duplicate attempt — which §4 recommends enabling
-    * — could interleave two streams into one corrupt file): stream the
-    * records to an attempt-unique temp under `_wet_tmp/`, then commit
-    * by rename. Rename is atomic per attempt (HDFS: first committer
-    * wins, loser's rename returns false; POSIX local fs: whole-file
-    * atomic replace) — either way the final `part-NNNNN.warc.wet.gz`
-    * is always exactly one attempt's complete output, and a failed or
-    * losing attempt deletes its temp and leaves no partial final file.
-    */
+  /** One task attempt's WET partition write, committed by
+    * [[PartFiles.commit]] (the r6 version wrote the FINAL path directly
+    * with overwrite=true, so a speculative duplicate attempt — which §4
+    * recommends enabling — could interleave two streams into one
+    * corrupt file). The CDX sidecar streams to its own temp alongside
+    * the data and commits only with it. */
   private[sources] def writeWetPartition(
       it: Iterator[(String, java.sql.Timestamp, String)], dir: String,
       pid: Int, attemptUid: String,
@@ -595,67 +562,38 @@ object Warc {
       cdx: Boolean = false): (String, Long) = {
     val ext = if (codec == "zstd") "zst" else "gz"
     val finName = f"part-$pid%05d.warc.wet.$ext"
-    val fin = new Path(s"$dir/$finName")
-    val tmp = new Path(
-      f"$dir/$WetTmpDir/part-$pid%05d-$attemptUid.warc.wet.$ext")
-    val fs = fin.getFileSystem(conf)
-    val ctmp = new Path(
-      f"$dir/$WetTmpDir/part-$pid%05d-$attemptUid.cdx.gz")
-    val out = new CountingOutputStream(fs.create(tmp, true))
-    // the sidecar streams to its own temp alongside the data (an
-    // in-memory line buffer would be O(partition) at crawl scale)
-    val cout = if (cdx)
-      new java.util.zip.GZIPOutputStream(fs.create(ctmp, true)) else null
-    var n = 0L
-    var ok = false
-    try {
-      it.foreach { case (url, ts, text) =>
-        val u = if (url == null) "" else url
-        val when = if (ts == null) java.time.Instant.EPOCH else ts.toInstant
-        val body = (if (text == null) "" else text)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val off = out.count
-        if (codec == "zstd") {
-          val raw = new ByteArrayOutputStream(body.length + 256)
-          Writer.conversion(raw, u, when, body, gzipMember = false)
-          Writer.zstdMember(out, raw.toByteArray)
-        } else {
-          Writer.conversion(out, u, when, body, gzipMember = true)
+    val ctmp = new Path(f"$dir/$WetTmpDir/part-$pid%05d-$attemptUid.cdx.gz")
+    PartFiles.commit(new Path(s"$dir/$finName"),
+      new Path(f"$dir/$WetTmpDir/part-$pid%05d-$attemptUid.warc.wet.$ext"),
+      if (cdx) Seq(ctmp -> new Path(f"$dir/part-$pid%05d.cdx.gz")) else Nil,
+      conf)(new CountingOutputStream(_)) { out =>
+      // the sidecar streams to its own temp alongside the data (an
+      // in-memory line buffer would be O(partition) at crawl scale)
+      val cout = if (cdx) new java.util.zip.GZIPOutputStream(
+        ctmp.getFileSystem(conf).create(ctmp, true)) else null
+      var n = 0L
+      try {
+        it.foreach { case (url, ts, text) =>
+          val u = if (url == null) "" else url
+          val when = if (ts == null) java.time.Instant.EPOCH else ts.toInstant
+          val body = (if (text == null) "" else text)
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          val off = out.count
+          if (codec == "zstd") {
+            val raw = new ByteArrayOutputStream(body.length + 256)
+            Writer.conversion(raw, u, when, body, gzipMember = false)
+            Writer.zstdMember(out, raw.toByteArray)
+          } else {
+            Writer.conversion(out, u, when, body, gzipMember = true)
+          }
+          if (cdx) cout.write(cdxLine(u, when, off, out.count - off, finName)
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          n += 1
         }
-        if (cdx) cout.write(cdxLine(u, when, off, out.count - off, finName)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        n += 1
-      }
-      ok = true
-    } finally {
-      out.close()
-      if (cout != null) cout.close()
-      if (!ok) { fs.delete(tmp, false); if (cdx) fs.delete(ctmp, false) }
-    }
-    if (!fs.rename(tmp, fin)) {
-      // loser of a speculative race (dest already committed) — or a
-      // genuinely failed commit, which must fail the task
-      fs.delete(tmp, false)
-      if (cdx) fs.delete(ctmp, false)
-      if (!fs.exists(fin))
-        throw new java.io.IOException(s"WET commit failed for $fin")
-      (fin.toString, n)
-    } else {
-      // data committed by THIS attempt: commit the CDX sidecar too.
-      // The sidecar is advisory (readers must work without it), and
-      // per-record compression is deterministic — every attempt of this
-      // partition writes byte-identical data AND index — so the worst
-      // interleaving (one attempt's data file + another's sidecar, or a
-      // crash between the two renames) still leaves a correct pair or a
-      // data file whose index is absent, never a wrong offset.
-      if (cdx && !fs.rename(ctmp, cfinPath(dir, pid)))
-        fs.delete(ctmp, false)
-      (fin.toString, n)
+      } finally if (cout != null) cout.close()
+      n
     }
   }
-
-  private def cfinPath(dir: String, pid: Int): Path =
-    new Path(f"$dir/part-$pid%05d.cdx.gz")
 
   private val Ts14 = java.time.format.DateTimeFormatter
     .ofPattern("yyyyMMddHHmmss").withZone(java.time.ZoneOffset.UTC)

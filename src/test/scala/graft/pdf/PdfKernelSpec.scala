@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 class PdfKernelSpec extends AnyFunSuite {
 
+  private def budget = new PdfParser.DecodeBudget(1L << 20)
+
   private def pdf(content: String): Array[Byte] =
     (s"%PDF-1.4\n1 0 obj << /Length ${content.length} >>\nstream\n" +
       content + "\nendstream\nendobj\n%%EOF\n").getBytes(UTF_8)
@@ -157,7 +159,7 @@ class PdfKernelSpec extends AnyFunSuite {
     assert(PdfParser.extractText(
       filteredPdf("/ASCII85Decode", payload.getBytes(UTF_8))) == filterExpect)
     // z = four zero bytes
-    assert(PdfParser.ascii85Decode("z~>".getBytes(UTF_8))
+    assert(PdfParser.ascii85Decode("z~>".getBytes(UTF_8), budget)
       .sameElements(Array[Byte](0, 0, 0, 0)))
   }
 
@@ -171,7 +173,7 @@ class PdfKernelSpec extends AnyFunSuite {
     out.write(tail.length - 1); out.write(tail, 0, tail.length)
     out.write(128) // EOD
     val raw = head ++ Array.fill(40)('u'.toByte) ++ tail
-    assert(PdfParser.runLengthDecode(out.toByteArray).sameElements(raw))
+    assert(PdfParser.runLengthDecode(out.toByteArray, budget).sameElements(raw))
     assert(PdfParser.extractText(
       filteredPdf("/RunLengthDecode", out.toByteArray)) ==
       "r" + "u" * 40 + "n")
@@ -184,7 +186,7 @@ class PdfKernelSpec extends AnyFunSuite {
       .mkString("BT /F1 4 Tf 72 9000 Td ", " ", " ET")
     val raw = long.getBytes(UTF_8)
     val encoded = lzwEncode(raw)
-    assert(PdfParser.lzwDecode(encoded).sameElements(raw),
+    assert(PdfParser.lzwDecode(encoded, budget).sameElements(raw),
       "lzw roundtrip mismatch")
     // and through the full parser on a simple doc
     val simple = "BT /F1 12 Tf 72 720 Td (Filtered hello) Tj 0 -14 Td (line two) Tj ET"
@@ -193,7 +195,7 @@ class PdfKernelSpec extends AnyFunSuite {
       filterExpect)
     // KwKwK pattern (code == dictSize at decode time)
     val kwk = "ababababab".getBytes(UTF_8)
-    assert(PdfParser.lzwDecode(lzwEncode(kwk)).sameElements(kwk))
+    assert(PdfParser.lzwDecode(lzwEncode(kwk), budget).sameElements(kwk))
   }
 
   test("filter arrays apply first-to-last: [/ASCII85Decode /FlateDecode]") {
@@ -575,10 +577,8 @@ class PdfKernelSpec extends AnyFunSuite {
         "\nendstream\nendobj\n%%EOF\n").getBytes(UTF_8)
     assert(PdfParser.extractText(bytes) == "From an object stream")
     // top-level objects override same-numbered embedded ones
-    val o = PdfParser.PdfObj("<< /Type /ObjStm /N 1 /First 4 >>",
-      Some("9 0 << /A 1 >>"))
-    assert(PdfParser.unpackObjStm(o) == List(9 ->
-      PdfParser.PdfObj("<< /A 1 >>", None)))
+    assert(PdfParser.unpackObjStm("<< /Type /ObjStm /N 1 /First 4 >>",
+      "9 0 << /A 1 >>") == List(9 -> "<< /A 1 >>"))
   }
 
   test("ObjStm pages resolve fonts from their compressed /Resources") {
@@ -607,9 +607,9 @@ class PdfKernelSpec extends AnyFunSuite {
   }
 
   test("dict-less stream spam stays linear (bounded backscan)") {
-    // a malformed doc repeating `stream` with no dicts used to cost
-    // O(len) of backward scan PER token (quadratic overall); the 8 KB
-    // window keeps it linear. 2 MB / ~60k tokens must finish fast.
+    // a malformed doc repeating `stream` with no dicts once cost O(len)
+    // of backward scan PER token (quadratic overall); streams are now
+    // read only inside object bodies. 2 MB / ~60k tokens must finish fast.
     val sb = new StringBuilder("%PDF-1.4\n")
     while (sb.length < 2 * 1024 * 1024) sb.append("stream endstream ")
     val bytes = sb.toString
@@ -627,5 +627,96 @@ class PdfKernelSpec extends AnyFunSuite {
     r.nextBytes(junk)
     junk(0) = '%'; junk(1) = 'P'; junk(2) = 'D'; junk(3) = 'F'; junk(4) = '-'
     PdfParser.extractText(junk) // must not throw
+  }
+
+  // ------------------------------------------------------------------
+  // one object scan, decode on demand
+
+  private def streamObj(num: Int, dict: String, data: String): String =
+    s"$num 0 obj << /Length ${data.length}$dict >>\nstream\n$data\nendstream\nendobj\n"
+
+  test("tree-less incremental update: both definitions of an object, in scan order") {
+    // the fallback reads every stream object the scan met, the
+    // shadowed first definition of object 1 included
+    val bytes = ("%PDF-1.4\n" +
+      streamObj(1, "", "BT /F1 12 Tf 72 720 Td (Old page) Tj ET") +
+      streamObj(2, "", "BT /F1 12 Tf 72 720 Td (Other page) Tj ET") +
+      "%%EOF\n" +
+      streamObj(1, "", "BT /F1 12 Tf 72 720 Td (New page) Tj ET") +
+      "%%EOF\n").getBytes(UTF_8)
+    assert(PdfParser.extractText(bytes).split(PdfParser.PageBreak).toSeq ==
+      Seq("Old page", "Other page", "New page"))
+  }
+
+  test("a PDF cut inside its page tree falls back to stream order") {
+    val bytes = ("%PDF-1.4\n" +
+      streamObj(4, "", "BT /F1 12 Tf 72 720 Td (Second by tree) Tj ET") +
+      streamObj(5, "", "BT /F1 12 Tf 72 720 Td (First by tree) Tj ET") +
+      "1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n" +
+      "2 0 obj << /Type /Pages /Kids [6 0 R 3 0 R] /Count 2 >> endobj\n" +
+      "6 0 obj << /Type /Page /Parent 2 0 R /Contents 5 0 R >> endobj\n" +
+      "3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R >> endobj\n" +
+      "%%EOF\n").getBytes(UTF_8)
+    assert(PdfParser.extractText(bytes).split(PdfParser.PageBreak).toSeq ==
+      Seq("First by tree", "Second by tree"))
+    val cut = new String(bytes, UTF_8).indexOf("[6 0 R") + 3
+    assert(PdfParser.extractText(bytes.take(cut)).split(PdfParser.PageBreak)
+      .toSeq == Seq("Second by tree", "First by tree"))
+  }
+
+  test("CID text with a large Flate image: the image is never decoded") {
+    // 16 MB of zeros deflate to ~16 KB: decoding the image would spend
+    // far more than this document's decode budget
+    val d = new java.util.zip.Deflater(9)
+    val zs = new java.io.ByteArrayOutputStream()
+    val zeros = new Array[Byte](1 << 20)
+    val buf = new Array[Byte](1 << 16)
+    for (_ <- 0 until 16) {
+      d.setInput(zeros)
+      while (!d.needsInput()) zs.write(buf, 0, d.deflate(buf))
+    }
+    d.finish()
+    while (!d.finished()) zs.write(buf, 0, d.deflate(buf))
+    d.end()
+    val image = zs.toByteArray
+    val cmap = "/CIDInit /ProcSet findresource begin begincmap\n" +
+      "2 beginbfchar\n<0001> <0048>\n<0002> <0069>\nendbfchar\nendcmap end"
+    val content = "BT /F1 12 Tf 72 720 Td <0001 0002> Tj ET"
+    val head = ("%PDF-1.4\n" +
+      "1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n" +
+      "2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n" +
+      "3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R " +
+      "/Resources << /XObject << /Im1 7 0 R >> >> >> endobj\n" +
+      streamObj(4, "", content) +
+      "5 0 obj << /Type /Font /Subtype /Type0 /Encoding /Identity-H " +
+      "/ToUnicode 6 0 R >> endobj\n" +
+      streamObj(6, "", cmap) +
+      s"7 0 obj << /Type /XObject /Subtype /Image /Width 4096 /Height 4096 " +
+      s"/ColorSpace /DeviceGray /BitsPerComponent 8 /Length ${image.length} " +
+      "/Filter /FlateDecode >>\nstream\n").getBytes(UTF_8)
+    val bytes = head ++ image ++ "\nendstream\nendobj\n%%EOF\n".getBytes(UTF_8)
+    assert(PdfParser.DecodeMultiple * bytes.length < (16 << 20))
+    assert(PdfParser.extractText(bytes) == "Hi")
+  }
+
+  test("a stream with no object header is not read") {
+    // not valid PDF; xref reconstruction does not find it either
+    val bytes = ("%PDF-1.4\n<< /Length 36 >>\nstream\n" +
+      "BT /F1 12 Tf 72 720 Td (Hidden) Tj ET\nendstream\n%%EOF\n")
+      .getBytes(UTF_8)
+    assert(PdfParser.extractText(bytes) == "")
+  }
+
+  test("a document that decodes past its budget throws the budget error") {
+    val d = new java.util.zip.Deflater(9)
+    d.setInput(new Array[Byte](1 << 20)); d.finish()
+    val buf = new Array[Byte](1 << 16)
+    val z = java.util.Arrays.copyOf(buf, d.deflate(buf))
+    d.end()
+    val bytes = ("%PDF-1.4\n" + s"1 0 obj << /Length ${z.length} " +
+      "/Filter /FlateDecode >>\nstream\n").getBytes(UTF_8) ++ z ++
+      "\nendstream\nendobj\n%%EOF\n".getBytes(UTF_8)
+    assert(PdfParser.DecodeMultiple * bytes.length < (1 << 20))
+    intercept[PdfParser.DecodeBudgetExceeded](PdfParser.extractText(bytes))
   }
 }
