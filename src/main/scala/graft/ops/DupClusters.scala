@@ -23,10 +23,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes:
   *  - every pass shuffles only (long, long) rows keyed by node id;
-  *  - iteration lineage is truncated each round via the `persistRound`
-  *    hook (default `localCheckpoint(eager = true)`; on a real cluster
-  *    pass `_.checkpoint()` with a reliable checkpoint dir so executor
-  *    loss cannot orphan the iteration);
+  *  - iteration lineage is truncated each round by a lazy
+  *    `localCheckpoint` (its blocks live on the executors, so losing
+  *    one mid-iteration fails the job);
   *  - convergence is detected by a (count, order-independent xxhash64
   *    checksum) pair over the canonicalized edge set — one cheap
   *    aggregate per round instead of a full set-equality join.
@@ -56,7 +55,6 @@ object DupClusters {
     *         is the minimum node id reachable from `id`
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
-      persistRound: DataFrame => DataFrame = _.localCheckpoint(false),
       localEdgeThreshold: Long = LocalEdgeThreshold)
       : DataFrame = {
     val raw = pairs
@@ -75,7 +73,7 @@ object DupClusters {
     // of an eager-checkpoint job plus a checksum job (measured 5.5 s →
     // ~3 s on the 50-chain bench graph; the loop cost is job overhead,
     // not data)
-    edges = persistRound(edges)
+    edges = edges.localCheckpoint(false)
 
     var prev = edgeChecksum(edges)
     // Small-graph route: the checksum just counted the canonical edges;
@@ -95,7 +93,7 @@ object DupClusters {
     var iter = 0
     var stale: DataFrame = null
     while (!converged && iter < maxIter) {
-      val next = persistRound(smallStar(largeStar(edges)))
+      val next = smallStar(largeStar(edges)).localCheckpoint(false)
       val cur = edgeChecksum(next) // materializes `next`
       // previous-previous round is now unreachable — release its blocks
       // so a long iteration cannot accrete storage

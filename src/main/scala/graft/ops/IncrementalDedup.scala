@@ -48,11 +48,6 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object IncrementalDedup {
 
-  /** Default byte budget for one broadcast Bloom filter (matches the
-    * broadcast discipline used by [[Similarity]]). 256 MiB holds
-    * ~2.2·10^8 urls at 1% fpp. */
-  val DefaultFilterBudgetBytes: Long = 256L << 20
-
   /** Bytes the standard Bloom sizing formula allocates for n items at
     * the given fpp: m = -n·ln(p)/ln(2)^2 bits. */
   def filterBytes(n: Long, fpp: Double): Long = {
@@ -84,12 +79,15 @@ object IncrementalDedup {
     *
     * @param expectedSeen pass the known |seen| url count to skip the
     *   sizing `count()` (e.g. from table metadata); -1 counts.
+    * @param filterBudgetBytes bytes one broadcast Bloom filter may take
+    *   (default: the [[Similarity]] broadcast budget; 256 MiB holds
+    *   ~2.2·10^8 urls at 1% fpp).
     */
   def newUrls(newBatch: DataFrame, seen: DataFrame,
               urlCol: String = "url",
               fpp: Double = 0.01,
               expectedSeen: Long = -1L,
-              filterBudgetBytes: Long = DefaultFilterBudgetBytes)
+              filterBudgetBytes: Long = Similarity.DefaultBroadcastBudgetBytes)
       : DataFrame = {
     val seenUrls = seen.select(col(urlCol))
     val nSeen = if (expectedSeen > 0L) expectedSeen else seenUrls.count()
@@ -333,7 +331,8 @@ object IncrementalDedup {
     val seenPruned =
       if (nCand == 0L) seenUrls.limit(0) // no candidates: nothing to check
       else {
-        budgetGuard(nCand, 0.01, DefaultFilterBudgetBytes, "candidate-side")
+        budgetGuard(nCand, 0.01, Similarity.DefaultBroadcastBudgetBytes,
+          "candidate-side")
         // stat.bloomFilter returns an unreadable filter on an empty
         // frame (NPE at readFrom) — the nCand==0 branch above avoids it
         val candBf = candidates.select(col(urlCol))

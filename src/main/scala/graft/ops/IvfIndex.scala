@@ -345,38 +345,15 @@ object IvfIndex {
     val probes = qsrc
       .select(col("vec_id").as("query_id"),
         explode(probeUdf(col("embedding"))).as("ckey"))
-    val rawPairs = probes.join(candidates, Seq("ckey"))
+    val pairs = probes.join(candidates, Seq("ckey"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"))
-    // same ranking gate as Similarity.lshCosineTopK: a corpus the
-    // caller KNOWS fits the broadcast budget scores pairs against a
-    // broadcast id→vector block with partial top-k instead of two
-    // join-backs materializing dim-sized arrays per candidate pair —
-    // and the kernel dedups the ×replicas/probes sightings itself
-    // (buffer-scan + over partials), skipping the full-pair exchange.
-    // Row-count pre-filter keeps the embDim head-probe off corpora
-    // whose row count alone exceeds the budget.
-    if (knownN >= 0L && knownN * 4L <= broadcastBudget && knownN *
-        math.max(Similarity.embDim(corpus), 1).toLong * 4L <= broadcastBudget) {
-      val nEmbF = corpus.select(col("vec_id"), col("embedding"))
-      val qEmbF = if (queries == null) nEmbF
-        else qsrc.select(col("vec_id"), col("embedding"))
-      return Similarity.rankPairsTopKBroadcast(rawPairs, qEmbF, nEmbF, k,
-        broadcastBudget)
+    // a corpus the caller KNOWS fits the budget ranks on the broadcast
+    // path, which also drops the ×replicas/probes repeat sightings
+    ExactScore.rankPairs(corpus, knownN, k, broadcastBudget,
+        qBroadcast = queries, qJoin = queries) { distinct =>
+      if (distinct) pairs.dropDuplicates("query_id", "neighbor_id") else pairs
     }
-    val pairs =
-      rawPairs.dropDuplicates("query_id", "neighbor_id") // ×sightings
-    val embQ = qsrc.select(col("vec_id").as("query_id"),
-      col("embedding").as("query_emb"))
-    val embN = corpus.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("neighbor_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    pairs.join(embQ, Seq("query_id")).join(embN, Seq("neighbor_id"))
-      .withColumn("cos", Similarity.cosineFast(col("query_emb"), col("neighbor_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
   }
 
   /** Size-aware IVF top-k — the SHIPPED entry point: counts the corpus
@@ -395,14 +372,11 @@ object IvfIndex {
       broadcastBudget: Long = Similarity.DefaultBroadcastBudgetBytes)
       : DataFrame = {
     val n = if (knownN >= 0L) knownN else corpus.count()
-    // row crossover AND collected-byte budget (short-circuit keeps the
-    // 1-row dim probe off the large-corpus path): wide vectors below
-    // the row crossover but above the byte budget take the indexed path
+    // row crossover AND collected-byte budget: wide vectors below the
+    // row crossover but above the byte budget take the indexed path
     // instead of a driver-OOM-sized collect
-    if (n < BruteCrossover && Similarity.routesToBrute(n,
-        Similarity.embDim(corpus), BruteCrossover, broadcastBudget))
-      Similarity.bruteCosineTopKSelf(corpus, k, broadcastBudget,
-        preChecked = true)
+    if (ExactScore.fits(corpus, n, broadcastBudget, BruteCrossover))
+      Similarity.bruteCosineTopKSelf(corpus, k, broadcastBudget)
     else topK(corpus, train(corpus, knownN = n), k, nprobe, cellCap,
       replicas, subProbe)
   }

@@ -21,9 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object JaccardExact {
 
-  /** Byte budget for the collected (id, keys) block. */
-  val DefaultBroadcastBudgetBytes: Long = 256L << 20
-
   /** All pairs a < b with union > 0: (a, b, jac_e6) where jac_e6 =
     * round(|inter| * 1e6 / |union|) — the same expression (and the same
     * positive-halves-up rounding) the previous Catalyst form and the
@@ -35,17 +32,12 @@ object JaccardExact {
     */
   def pairsE6(keyed: DataFrame, idCol: String = "doc_id",
       keysCol: String = "keys",
-      broadcastBudget: Long = DefaultBroadcastBudgetBytes): DataFrame = {
+      broadcastBudget: Long = Similarity.DefaultBroadcastBudgetBytes)
+      : DataFrame = {
     val spark = keyed.sparkSession
     import spark.implicits._
-    // pre-collect byte bound: assert BEFORE the collect materializes
-    // the block on the driver (the Similarity pre-collect discipline)
-    val est = keyed
-      .agg(coalesce(sum(size(col(keysCol)).cast("long") * 8L), lit(0L)))
-      .head().getLong(0)
-    require(est <= broadcastBudget,
-      s"jaccard sample is $est B of shingle keys > broadcast budget " +
-        s"$broadcastBudget B — shrink the sample (this is the " +
+    ExactScore.guard(keyed, keysCol, 8L, broadcastBudget,
+      "jaccard sample of shingle keys", "shrink the sample (this is the " +
         "deliberately-quadratic oracle twin, not a scale path)")
     val rows = keyed.select(col(idCol), col(keysCol))
       .as[(Long, Array[Long])].collect().sortBy(_._1)

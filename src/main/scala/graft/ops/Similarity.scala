@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   *  - `bruteCosineTopK` — exact baseline: broadcast the (small) query set,
   *    one narrow pass over the corpus, per-query top-k via window. Dot
   *    products are a primitive double loop (Spark's array higher-order
-  *    functions are CodegenFallback — interpreted — so a tight UDF is
-  *    ~40× faster per pair at identical bits; see `cosine`'s note).
+  *    functions are CodegenFallback — interpreted, ~40 µs per 64-dim
+  *    pair — so the primitive loop is ~100 ns/pair at identical bits).
   *  - `exactCosineNearDups` — exact all-pairs twin (oracle/recall baseline;
   *    O(n²) by construction — run on samples, never the full corpus).
   *  - `lshCosineTopK` — scale path: random-hyperplane (sign) LSH buckets;
@@ -24,29 +24,11 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** cosine(a, b) as a Column built from array higher-order functions.
-    * Arrays are cast to double FIRST so products accumulate in double
-    * precision — bit-identical to an independent left-to-right double
-    * fold (the DuckDB oracle). NOTE: Spark's ArrayAggregate/ZipWith are
-    * CodegenFallback (interpreted) — ~40 µs per 64-dim pair measured.
-    * The hot paths below use [[SimilarityKernel.cosineDouble]] via a
-    * primitive-loop UDF instead (~100 ns/pair, same bits). */
-  def cosine(a: Column, b: Column): Column = {
-    val ad = a.cast("array<double>")
-    val bd = b.cast("array<double>")
-    val dot = aggregate(zip_with(ad, bd, (x, y) => x * y),
-      lit(0.0), (acc, v) => acc + v)
-    val na = sqrt(aggregate(transform(ad, x => x * x),
-      lit(0.0), (acc, v) => acc + v))
-    val nb = sqrt(aggregate(transform(bd, x => x * x),
-      lit(0.0), (acc, v) => acc + v))
-    when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(dot / (na * nb))
-  }
-
-  /** Cosine for the hot paths: a native binary Catalyst expression over
+  /** Cosine for the join paths: a native binary Catalyst expression over
     * the raw ArrayData (graft.sql.GraftCosine) — primitive access, stays
-    * in whole-stage codegen. Bit-identical to [[cosine]] and to
-    * [[SimilarityKernel.cosineDouble]] (asserted in OpsSpec). */
+    * in whole-stage codegen. Bit-identical to the HOF Column reference
+    * (KernelReferences.cosine) and to [[SimilarityKernel.cosinePrenormed]]
+    * (asserted in OpsSpec). */
   private[ops] def cosineFast(a: Column, b: Column): Column =
     graft.sql.GraftFunctions.graft_cosine(a, b)
 
@@ -61,177 +43,96 @@ object Similarity {
     * query) pair, which measured ~1.2 µs/pair against ~0.1 µs for the
     * cosine itself), then a window over partitions × queries × k
     * partial rows picks the global top-k. Doubles are bit-identical to
-    * the DuckDB oracle ([[SimilarityKernel.cosineDouble]] fold). */
+    * the DuckDB oracle's fold. */
   def bruteCosineTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       broadcastBudget: Long = DefaultBroadcastBudgetBytes): DataFrame =
-    bruteTopKImpl(corpus, queries, k, self = false, broadcastBudget,
-      preChecked = false)
+    bruteTopKImpl(corpus, queries, k, self = false, broadcastBudget)
 
-  /** Self-query variant the auto-routed paths use (queries == corpus):
-    * each unordered pair's cosine is computed ONCE and inserted into
-    * both top-k buffers — half the work of the general form.
-    * `preChecked = true` skips the pre-collect byte-bound job (the auto
-    * routes already asserted [[routesToBrute]] against the same
-    * budget). */
+  /** Self-query variant the auto routes use (queries == corpus): each
+    * unordered pair's cosine is computed ONCE and inserted into both
+    * top-k buffers — half the work of the general form. Only routes that
+    * passed [[ExactScore.fits]] call it, so the pre-collect guard job is
+    * skipped; a query set given by the caller is always guarded. */
   private[ops] def bruteCosineTopKSelf(corpus: DataFrame, k: Int,
-      broadcastBudget: Long = DefaultBroadcastBudgetBytes,
-      preChecked: Boolean = false): DataFrame =
-    bruteTopKImpl(corpus, corpus, k, self = true, broadcastBudget,
-      preChecked)
-
-  /** Exact embedding bytes of a frame (one aggregate job) — the
-    * pre-collect guard: asserting AFTER `.collect()` would let the
-    * oversized set reach the driver before the check fires. */
-  private def embeddingBytes(df: DataFrame): Long =
-    df.agg(coalesce(
-        sum(size(col("embedding")).cast("long") * 4L), lit(0L)))
-      .head.getLong(0)
+      broadcastBudget: Long = DefaultBroadcastBudgetBytes): DataFrame =
+    bruteTopKImpl(corpus, corpus, k, self = true, broadcastBudget)
 
   private def bruteTopKImpl(corpus: DataFrame, queries: DataFrame, k: Int,
-      self: Boolean, broadcastBudget: Long, preChecked: Boolean): DataFrame = {
+      self: Boolean, broadcastBudget: Long): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    // fail fast with a named invariant instead of an opaque driver OOM:
-    // the query block is broadcast to every task. Auto routes enforce
-    // the bound BEFORE routing here (routesToBrute against the caller's
-    // budget); direct callers get the bound asserted BEFORE the collect
-    // materializes the set on the driver.
-    if (!preChecked) {
-      val est = embeddingBytes(queries)
-      require(est <= broadcastBudget,
-        s"brute query set is $est B > broadcast budget " +
-          s"$broadcastBudget B — use the LSH/IVF indexed path")
-    }
-    val q = queries
-      .select(col("vec_id"), col("embedding").cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val qBytes = q.iterator.map(t =>
-      if (t._2 == null) 0L else t._2.length * 4L).sum
-    require(qBytes <= broadcastBudget,
-      s"brute query set is $qBytes B > broadcast budget " +
-        s"$broadcastBudget B — use the LSH/IVF indexed path")
-    // norms precomputed per vector (sqrt of the same left-to-right
-    // fold): recomputing both norms per PAIR tripled the inner-loop
-    // flops for identical bits
-    val bc = spark.sparkContext.broadcast(
-      (q.map(_._1), q.map(_._2), q.map(t => SimilarityKernel.sqrtNorm(t._2))))
+    val bc = ExactScore.block(queries, broadcastBudget, "brute query set",
+      "use the LSH/IVF indexed path", guarded = !self)
     val partial = corpus
       .select(col("vec_id"), col("embedding").cast("array<float>"))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
-        val (ids, vecs, norms) = bc.value
-        val nq = ids.length
-        val cosBuf = Array.fill(nq)(new Array[Double](k))
-        val idBuf = Array.fill(nq)(new Array[Long](k))
-        val len = new Array[Int](nq)
-        // bounded insertion, global order: cos desc, neighbor_id asc
-        def insert(qi: Int, c: Double, id: Long): Unit = {
-          val cb = cosBuf(qi); val ib = idBuf(qi); val l = len(qi)
-          if (l < k || c > cb(l - 1) || (c == cb(l - 1) && id < ib(l - 1))) {
-            var pos = if (l < k) l else k - 1
-            while (pos > 0 && (c > cb(pos - 1) ||
-                (c == cb(pos - 1) && id < ib(pos - 1)))) {
-              cb(pos) = cb(pos - 1); ib(pos) = ib(pos - 1); pos -= 1
-            }
-            cb(pos) = c; ib(pos) = id
-            if (l < k) len(qi) = l + 1
-          }
-        }
+        val q = bc.value
+        val nq = q.ids.length
+        val bufs = Array.fill(nq)(new ExactScore.TopK(k))
         it.foreach { case (id, emb) =>
           val rowNorm = SimilarityKernel.sqrtNorm(emb)
           if (self) {
-            // each unordered pair once: this row vs queries with a
-            // LARGER id (pairs against smaller ids are produced by
-            // those rows' own iterations); insert both directions.
-            // selfIdx: this row's own query buffer (ids are the same
-            // sorted set in self mode)
-            var lo = 0; var hi = nq
-            while (lo < hi) { // first index with ids(qi) > id
-              val mid = (lo + hi) >>> 1
-              if (ids(mid) <= id) lo = mid + 1 else hi = mid
-            }
-            val selfIdx =
-              if (lo > 0 && ids(lo - 1) == id) lo - 1 else -1
-            var qi = lo
+            // each unordered pair once: this row vs the queries with a
+            // LARGER id, inserted in both directions (pairs with smaller
+            // ids come from those rows' own iterations)
+            var qi = q.after(id)
+            val selfIdx = if (qi > 0 && q.ids(qi - 1) == id) qi - 1 else -1
             while (qi < nq) {
               val c = SimilarityKernel.cosinePrenormed(
-                vecs(qi), emb, norms(qi), rowNorm)
-              insert(qi, c, id)
-              if (selfIdx >= 0) insert(selfIdx, c, ids(qi))
+                q.vecs(qi), emb, q.norms(qi), rowNorm)
+              bufs(qi).insert(c, id)
+              if (selfIdx >= 0) bufs(selfIdx).insert(c, q.ids(qi))
               qi += 1
             }
           } else {
             var qi = 0
             while (qi < nq) {
-              if (ids(qi) != id)
-                insert(qi, SimilarityKernel.cosinePrenormed(
-                  vecs(qi), emb, norms(qi), rowNorm), id)
+              if (q.ids(qi) != id)
+                bufs(qi).insert(SimilarityKernel.cosinePrenormed(
+                  q.vecs(qi), emb, q.norms(qi), rowNorm), id)
               qi += 1
             }
           }
         }
-        (0 until nq).iterator.flatMap { qi =>
-          (0 until len(qi)).iterator.map(j =>
-            (ids(qi), idBuf(qi)(j), cosBuf(qi)(j)))
-        }
+        Iterator.range(0, nq).flatMap(qi => bufs(qi).rows(q.ids(qi)))
       }
       .toDF("query_id", "neighbor_id", "cos")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    partial
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
+    ExactScore.rank(partial, k)
   }
 
   /** Exact all-pairs cosine near-duplicates (a < b, cos ≥ threshold).
-    * The exact twin of [[cosineNearDups]] and the auto-routed small-n
+    * The exact twin of [[cosineNearDups]] and its auto-routed small-n
     * path: quadratic — run on samples or below the crossover, NOT at
-    * 10^12 rows. One side is collected and broadcast (as a broadcast
+    * 10^12 rows. The corpus is collected and broadcast (as a broadcast
     * join would), each task streams its corpus slice against it in a
     * primitive loop — no per-pair row materialization. */
   def exactCosineNearDups(corpus: DataFrame, threshold: Double,
-      broadcastBudget: Long = DefaultBroadcastBudgetBytes,
-      preChecked: Boolean = false): DataFrame = {
+      broadcastBudget: Long = DefaultBroadcastBudgetBytes): DataFrame =
+    exactPairs(corpus, threshold, broadcastBudget, guarded = true)
+
+  /** [[exactCosineNearDups]]; `guarded = false` for the auto route, which
+    * already sized the corpus with [[ExactScore.fits]]. */
+  private def exactPairs(corpus: DataFrame, threshold: Double,
+      broadcastBudget: Long, guarded: Boolean): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val rows = corpus
-      .select(col("vec_id"), col("embedding").cast("array<float>"))
+    val bc = ExactScore.block(corpus, broadcastBudget,
+      "exact all-pairs corpus", "use cosineNearDups' indexed path", guarded)
+    corpus.select(col("vec_id"), col("embedding").cast("array<float>"))
       .as[(Long, Array[Float])]
-    // pre-collect bound (skipped when the auto route already asserted
-    // routesToBrute against the same budget) — see bruteTopKImpl
-    if (!preChecked) {
-      val est = embeddingBytes(corpus)
-      require(est <= broadcastBudget,
-        s"exact all-pairs corpus is $est B > broadcast budget " +
-          s"$broadcastBudget B — use cosineNearDups' indexed path")
-    }
-    val all = rows.collect().sortBy(_._1)
-    val allBytes = all.iterator.map(t =>
-      if (t._2 == null) 0L else t._2.length * 4L).sum
-    require(allBytes <= broadcastBudget,
-      s"exact all-pairs corpus is $allBytes B > broadcast budget " +
-        s"$broadcastBudget B — use cosineNearDups' indexed path")
-    val bc = spark.sparkContext.broadcast(
-      (all.map(_._1), all.map(_._2), all.map(r => SimilarityKernel.sqrtNorm(r._2))))
-    rows.mapPartitions { it =>
-      val (ids, vecs, norms) = bc.value
-      it.flatMap { case (a, va) =>
-        val na = SimilarityKernel.sqrtNorm(va)
-        // first index with id > a (ids sorted): binary search
-        var lo = 0; var hi = ids.length
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (ids(mid) <= a) lo = mid + 1 else hi = mid
+      .mapPartitions { it =>
+        val all = bc.value
+        it.flatMap { case (a, va) =>
+          val na = SimilarityKernel.sqrtNorm(va)
+          Iterator.range(all.after(a), all.ids.length).flatMap { j =>
+            val c = SimilarityKernel.cosinePrenormed(va, all.vecs(j), na,
+              all.norms(j))
+            if (c >= threshold) Iterator.single((a, all.ids(j), c))
+            else Iterator.empty
+          }
         }
-        (lo until ids.length).iterator.flatMap { j =>
-          val c = SimilarityKernel.cosinePrenormed(va, vecs(j), na, norms(j))
-          if (c >= threshold) Iterator.single((a, ids(j), c))
-          else Iterator.empty
-        }
-      }
-    }.toDF("a", "b", "cos")
+      }.toDF("a", "b", "cos")
   }
 
   /** Byte budget for the collect-and-broadcast exact kernels
@@ -242,23 +143,18 @@ object Similarity {
     * could otherwise OOM the driver where the indexed path would not.
     * 256 MB ≈ the crossover row counts × dim 2048 × 4 B, comfortably
     * inside a default driver heap; auto routes fall through to the
-    * indexed path when the corpus exceeds it. */
+    * indexed path when the corpus exceeds it. The one collect budget of
+    * the operators: [[JaccardExact]]'s key block and
+    * [[IncrementalDedup]]'s broadcast Bloom filters default to it too. */
   val DefaultBroadcastBudgetBytes: Long = 256L << 20
 
-  /** Embedding dimension from one row (a 1-row head job — only probed
-    * when n is already below a row crossover, never on the large-corpus
-    * path); 0 for an empty corpus. */
-  private[ops] def embDim(corpus: DataFrame): Int = {
-    val rows = corpus.select(size(col("embedding")).as("d")).head(1)
-    if (rows.isEmpty) 0 else rows(0).getInt(0)
-  }
-
-  /** The auto-route decision, pure for unit testing: brute only when the
-    * corpus is below BOTH the row crossover AND the broadcast byte
-    * budget. */
+  /** The auto-route and ranking-gate size decision, pure for unit
+    * testing: n vectors of `dim` floats (at least 4 B a row) fit the
+    * broadcast byte budget and n is below the row crossover. Callers go
+    * through [[ExactScore.fits]], which probes the dim. */
   private[ops] def routesToBrute(n: Long, dim: Int, crossover: Long,
       budget: Long): Boolean =
-    n < crossover && n * dim.toLong * 4L <= budget
+    n >= 0L && n < crossover && n * math.max(dim, 1).toLong * 4L <= budget
 
   /** Default expected within-bucket population the bit count aims for. */
   val TargetBucketSize = 64
@@ -389,129 +285,6 @@ object Similarity {
       .agg(min(col("vec_id")).as("vec_id"))
       .select(col("vec_id"), col("embedding"))
 
-  /** Join both embeddings back onto an id-pair table. */
-  private def withEmbeddings(pairs: DataFrame, corpus: DataFrame,
-      aCol: String, bCol: String): DataFrame = {
-    val embA = corpus.select(col("vec_id").as(aCol), col("embedding").as("emb_a"))
-    val embB = corpus.select(col("vec_id").as(bCol), col("embedding").as("emb_b"))
-    pairs.join(embA, Seq(aCol)).join(embB, Seq(bCol))
-  }
-
-  /** Rank deduped candidate (query, neighbor) pairs to per-query top-k
-    * via a BROADCAST id→vector map instead of two embedding join-backs:
-    * each task scores its pairs against the broadcast block (cosine
-    * bit-identical to the join path — [[SimilarityKernel.cosinePrenormed]]
-    * vs GraftCosine is OpsSpec-pinned) and keeps a bounded per-query
-    * partial top-k, so the ranking window sorts ≤ tasks × queries × k
-    * partial rows instead of every candidate pair carrying two
-    * dim-sized arrays. Callers gate on a KNOWN corpus byte size (the
-    * broadcast-budget discipline) and keep the join path beyond it.
-    * Output identical: a pair outside its task's per-query top-k can
-    * never enter the global top-k under the same total order
-    * (cos desc, neighbor_id asc).
-    *
-    * `pairs` need NOT be globally distinct: a duplicate sighting can
-    * never occupy two top-k slots because the insert scans the ≤k
-    * buffer entries for its neighbor id first (O(k), no unbounded
-    * per-task seen-structure — the dropDuplicates exchange this
-    * replaces could at least spill), and the window input is deduped
-    * over the PARTIAL rows — tasks × queries × k instead of the full
-    * candidate multiset. Cross-task duplicates carry identical cos
-    * values, so the surviving row is unambiguous.
-    *
-    * Collect safety: callers pre-gate the corpus via knownN × dim ×
-    * 4 ≤ budget; both blocks additionally assert their ACTUAL byte size
-    * right after collect (a stale knownN or an oversized caller-supplied
-    * queries frame fails loudly instead of broadcasting). When `qEmb eq
-    * nEmb` (self-query) the block is collected and broadcast once. */
-  private[ops] def rankPairsTopKBroadcast(pairs: DataFrame,
-      qEmb: DataFrame, nEmb: DataFrame, k: Int,
-      broadcastBudget: Long = DefaultBroadcastBudgetBytes): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    if (k <= 0) // join-path parity: rank <= 0 filters everything
-      return spark.emptyDataFrame
-        .select(lit(0L).as("query_id"), lit(0L).as("neighbor_id"),
-          lit(0.0).as("cos"), lit(0).as("rank"))
-    def block(df: DataFrame): (Array[Long], Array[Array[Float]], Array[Double]) = {
-      val rows = df.select(col("vec_id"),
-          col("embedding").cast("array<float>"))
-        .as[(Long, Array[Float])].collect().sortBy(_._1)
-      val bytes = rows.iterator.map(r =>
-        if (r._2 == null) 0L else r._2.length * 4L).sum
-      require(bytes <= broadcastBudget,
-        s"ranking block is $bytes B > broadcast budget $broadcastBudget " +
-          "B — the caller's knownN understated the corpus (or the " +
-          "queries frame is oversized); use the join ranking path")
-      (rows.map(_._1), rows.map(_._2),
-        rows.map(r => SimilarityKernel.sqrtNorm(r._2)))
-    }
-    val bcQ = spark.sparkContext.broadcast(block(qEmb))
-    val bcN = if (qEmb eq nEmb) bcQ
-      else spark.sparkContext.broadcast(block(nEmb))
-    val partial = pairs
-      .select(col("query_id"), col("neighbor_id"))
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        val (qIds, qVecs, qNorms) = bcQ.value
-        val (nIds, nVecs, nNorms) = bcN.value
-        def idxOf(ids: Array[Long], id: Long): Int = {
-          val i = java.util.Arrays.binarySearch(ids, id)
-          require(i >= 0, s"pair references unknown vec_id $id")
-          i
-        }
-        // per-query bounded buffers: (cos desc, neighbor_id asc)
-        val bufs = new java.util.HashMap[Long, (Array[Double], Array[Long], Array[Int])]()
-        it.foreach { case (q, nId) =>
-          val qi = idxOf(qIds, q)
-          val ni = idxOf(nIds, nId)
-          val c = SimilarityKernel.cosinePrenormed(
-            qVecs(qi), nVecs(ni), qNorms(qi), nNorms(ni))
-          var b = bufs.get(q)
-          if (b == null) {
-            b = (new Array[Double](k), new Array[Long](k), new Array[Int](1))
-            bufs.put(q, b)
-          }
-          val (cb, ib, lenBox) = b
-          val l = lenBox(0)
-          if (l < k || c > cb(l - 1) || (c == cb(l - 1) && nId < ib(l - 1))) {
-            // duplicate sighting (same pair from another bucket/table):
-            // already buffered → skip, so it can never hold two slots.
-            // A duplicate NOT in the buffer was evicted by k better
-            // pairs and fails the threshold above by construction.
-            var dup = false
-            var s = 0
-            while (!dup && s < l) { dup = ib(s) == nId && cb(s) == c; s += 1 }
-            if (!dup) {
-              var pos = if (l < k) l else k - 1
-              while (pos > 0 && (c > cb(pos - 1) ||
-                  (c == cb(pos - 1) && nId < ib(pos - 1)))) {
-                cb(pos) = cb(pos - 1); ib(pos) = ib(pos - 1); pos -= 1
-              }
-              cb(pos) = c; ib(pos) = nId
-              if (l < k) lenBox(0) = l + 1
-            }
-          }
-        }
-        import scala.jdk.CollectionConverters._
-        bufs.entrySet().iterator().asScala.flatMap { e =>
-          val (cb, ib, lenBox) = e.getValue
-          (0 until lenBox(0)).iterator.map(j => (e.getKey.longValue(), ib(j), cb(j)))
-        }
-      }
-      .toDF("query_id", "neighbor_id", "cos")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    partial
-      // cross-task duplicate sightings (identical cos) collapse here —
-      // over the partial rows, never the full candidate multiset
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
-  }
-
   /** ANN top-k — the SHIPPED entry point is auto mode (`signBits <= 0`):
     * count the corpus once, route to the exact brute pass below
     * [[lshCrossover]] (exact AND ~25× faster there), otherwise derive
@@ -535,58 +308,23 @@ object Similarity {
     val auto = signBits <= 0
     val tablesForCross = if (tables > 0) tables else DefaultTables
     val n = if (!auto) -1L else if (knownN >= 0L) knownN else corpus.count()
-    if (auto && n < lshCrossover(tablesForCross) &&
-        routesToBrute(n, embDim(corpus), lshCrossover(tablesForCross),
-          broadcastBudget))
-      return if (queries == null)
-        bruteCosineTopKSelf(corpus, k, broadcastBudget, preChecked = true)
-      else
-        // `queries` is CALLER-SUPPLIED and nothing enforces the
-        // queries ⊆ corpus shape the routing bound assumed — keep the
-        // pre-collect byte guard on this route (one cheap aggregate
-        // job) so an oversized query frame fails fast instead of
-        // materializing on the driver first
-        bruteTopKImpl(corpus, queries, k, self = false, broadcastBudget,
-          preChecked = false)
+    if (auto && ExactScore.fits(corpus, n, broadcastBudget,
+        lshCrossover(tablesForCross)))
+      // a caller-supplied `queries` frame keeps bruteCosineTopK's
+      // pre-collect guard: nothing enforces the queries ⊆ corpus shape
+      // the route sized
+      return if (queries == null) bruteCosineTopKSelf(corpus, k, broadcastBudget)
+        else bruteCosineTopK(corpus, queries, k, broadcastBudget)
     val bits = if (auto) signBitsFor(n) else signBits
     val tbl = if (tables > 0) tables else if (auto) tablesFor(bits)
       else DefaultTables
-    // Candidate ranking: when the caller KNOWS the corpus is inside the
-    // broadcast byte budget (knownN ≥ 0, e.g. the forced-machinery
-    // recall gate probing a counted corpus), the pairs are scored
-    // against a broadcast id→vector block with per-task partial top-k —
-    // no per-pair array materialization through two join-backs, a
-    // partial-sized ranking window, and no full-pair-set dedup
-    // exchange (the kernel dedups intra-task + over partials).
-    // Unknown/large corpora keep the join path (identical output,
-    // OpsSpec-pinned cosine).
-    // row-count pre-filter BEFORE the 1-row embDim head-probe: a corpus
-    // whose row count alone exceeds the budget (4 B/row floor) must not
-    // partially execute its lineage just to learn the dim (embDim's
-    // contract: never on the large-corpus path)
-    val effN = if (auto) n else knownN
-    val useBroadcastRanking = effN >= 0L &&
-      effN * 4L <= broadcastBudget &&
-      effN * math.max(embDim(corpus), 1).toLong * 4L <= broadcastBudget
-    val pairs = candidatePairs(corpus, bits, tbl, n,
-      symmetric = true, bucketCap, queryIds = queries,
-      dedupPairs = !useBroadcastRanking)
-      .select(col("a").as("query_id"), col("b").as("neighbor_id"))
-    if (useBroadcastRanking) {
-      val nEmbF = corpus.select(col("vec_id"), col("embedding"))
-      // same reference when self-querying → ONE collected block
-      val qEmbF = if (queries == null) nEmbF
-        else queries.select(col("vec_id"), col("embedding"))
-      rankPairsTopKBroadcast(pairs, qEmbF, nEmbF, k, broadcastBudget)
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("neighbor_id").asc)
-      withEmbeddings(pairs, corpus, "query_id", "neighbor_id")
-        .withColumn("cos", cosineFast(col("emb_a"), col("emb_b")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
+    // a corpus of known size inside the budget (auto mode's n, or the
+    // caller's knownN) ranks on the broadcast path
+    ExactScore.rankPairs(corpus, if (auto) n else knownN, k,
+        broadcastBudget, qBroadcast = queries, qJoin = null) { distinct =>
+      candidatePairs(corpus, bits, tbl, n, symmetric = true, bucketCap,
+        queryIds = queries, dedupPairs = distinct)
+        .select(col("a").as("query_id"), col("b").as("neighbor_id"))
     }
   }
 
@@ -609,19 +347,17 @@ object Similarity {
     val tablesForCross = if (tables > 0) tables else DefaultTables
     // n for the crossover is the SURVIVOR count (what the index sees)
     val n = if (!auto) -1L else if (knownN >= 0L) knownN else base.count()
-    // && short-circuit keeps the embDim head-probe off the large-corpus
-    // path (base is a groupBy plan — never partially execute it at scale)
-    if (auto && n < lshCrossover(tablesForCross) &&
-        routesToBrute(n, embDim(base), lshCrossover(tablesForCross),
-          broadcastBudget))
-      return exactCosineNearDups(base, threshold, broadcastBudget,
-        preChecked = true)
+    // fits tests n before its dim probe: base is a groupBy plan — never
+    // partially execute it at scale
+    if (auto && ExactScore.fits(base, n, broadcastBudget,
+        lshCrossover(tablesForCross)))
+      return exactPairs(base, threshold, broadcastBudget, guarded = false)
     val bits = if (auto) signBitsFor(n) else signBits
     val tbl = if (tables > 0) tables else if (auto) tablesFor(bits)
       else DefaultTables
-    val pairs = candidatePairs(base, bits, tbl, n,
-      symmetric = false, bucketCap)
-    withEmbeddings(pairs, base, "a", "b")
+    candidatePairs(base, bits, tbl, n, symmetric = false, bucketCap)
+      .join(base.select(col("vec_id").as("a"), col("embedding").as("emb_a")), Seq("a"))
+      .join(base.select(col("vec_id").as("b"), col("embedding").as("emb_b")), Seq("b"))
       .withColumn("cos", cosineFast(col("emb_a"), col("emb_b")))
       .filter(col("cos") >= threshold)
       .select(col("a"), col("b"), col("cos"))
@@ -642,14 +378,7 @@ object SimilarityKernel {
       out
   }
 
-  /** Left-to-right double-precision cosine — the exact fold the DuckDB
-    * oracle computes (list_inner_product over DOUBLE[]). */
-  def cosineDouble(av: Seq[Float], bv: Seq[Float]): Double = {
-    if (av == null || bv == null) return 0.0
-    cosineDoubleArr(toFloatArray(av), toFloatArray(bv))
-  }
-
-  /** sqrt of the norm fold of [[cosineDouble]] — precompute once per
+  /** sqrt of the left-to-right double norm fold — precompute once per
     * vector; dividing by the product of two precomputed sqrts is
     * bit-identical to computing them inline per pair. */
   def sqrtNorm(a: Array[Float]): Double = {
@@ -660,9 +389,11 @@ object SimilarityKernel {
     math.sqrt(na)
   }
 
-  /** [[cosineDouble]] with both sqrt-norms precomputed: same dot fold,
-    * same `dot / (sqrt(na) * sqrt(nb))` expression, same zero guard —
-    * one loop per pair instead of three. */
+  /** Left-to-right double-precision cosine with both sqrt-norms
+    * precomputed — the exact fold the DuckDB oracle computes
+    * (list_inner_product over DOUBLE[]): the same `dot / (sqrt(na) *
+    * sqrt(nb))` expression and zero guard as GraftKernels.cosineF, one
+    * loop per pair instead of three. */
   def cosinePrenormed(a: Array[Float], b: Array[Float],
       sqrtNa: Double, sqrtNb: Double): Double = {
     if (a == null || b == null) return 0.0
@@ -675,26 +406,6 @@ object SimilarityKernel {
       i += 1
     }
     if (sqrtNa == 0.0 || sqrtNb == 0.0) 0.0 else dot / (sqrtNa * sqrtNb)
-  }
-
-  /** [[cosineDouble]] on primitive arrays (the broadcast-block brute
-    * kernels call this once per pair — no Seq wrapper). */
-  def cosineDoubleArr(a: Array[Float], b: Array[Float]): Double = {
-    if (a == null || b == null) return 0.0
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y
-      i += 1
-    }
-    i = 0
-    while (i < a.length) { val x = a(i).toDouble; na += x * x; i += 1 }
-    i = 0
-    while (i < b.length) { val y = b(i).toDouble; nb += y * y; i += 1 }
-    val den = math.sqrt(na) * math.sqrt(nb)
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / den
   }
 
   /** Rademacher hyperplane signs, packed one plane per long-bitset word

@@ -73,13 +73,19 @@ object PdfParser {
   /** One indirect object: its dict text and, for a stream object, the
     * extent of its raw payload in the input (no copy). `stream` decodes
     * the payload on first use and keeps the result; it is None for a
-    * dict-only object or a stream that does not decode. */
+    * dict-only object or a stream that does not decode. The String copy
+    * is charged to the budget before it is made, so a stream that
+    * decodes to most of the budget fails before the copy and the
+    * interpreter's scan of it. */
   private[pdf] final class PdfObj(val dict: String, src: Array[Byte] = null,
       from: Int = 0, until: Int = 0, budget: DecodeBudget = null) {
     lazy val stream: Option[String] =
       if (src == null) None
       else Option(decodeStream(dict, java.util.Arrays.copyOfRange(src, from, until),
-        budget)).map(new String(_, java.nio.charset.StandardCharsets.ISO_8859_1))
+        budget)).map { b =>
+        budget.charge(b.length)
+        new String(b, java.nio.charset.StandardCharsets.ISO_8859_1)
+      }
   }
 
   private val objHeader =
@@ -533,12 +539,15 @@ object PdfParser {
   }
 
   /** Bytes one document may decode, summed over every expanding stage
-    * (Flate, LZW, RunLength, ASCII85) of every stream it decodes:
-    * `DecodeMultiple` × its input size, at most `DecodeCeiling`. The
-    * largest decoded/input ratio measured over the golden fixture, the
-    * benchmark's seed-7 PDFs and the PDF kernel spec is 2.18 (a
-    * benchmark PDF whose content is ASCII85 over Flate): 64 leaves ~30×
-    * headroom, while a deflated run of zeros (~1000×) stops early. */
+    * (Flate, LZW, RunLength, ASCII85) of every stream it decodes and
+    * each decoded stream's String copy: `DecodeMultiple` × its input
+    * size, at most `DecodeCeiling`. The largest decoded/input ratio
+    * measured over the golden fixture, the benchmark's seed-7 PDFs and
+    * the PDF kernel spec is 2.18 (a benchmark PDF whose content is
+    * ASCII85 over Flate). The String copies add at most that again plus
+    * the unfiltered streams' raw bytes (at most the input), so such a
+    * document charges under 5.4× its input: 64 leaves ~12× headroom,
+    * while a deflated run of zeros (~1000×) stops early. */
   private[graft] val DecodeMultiple = 64L
   private[graft] val DecodeCeiling = 32L << 20
 

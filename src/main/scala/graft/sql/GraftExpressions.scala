@@ -127,7 +127,8 @@ object GraftKernels {
 
   /** Cosine over two float arrays, accumulated left-to-right in double —
     * bit-identical to the DuckDB oracle's list_inner_product fold and to
-    * SimilarityKernel.cosineDouble. Operates on ArrayData directly
+    * SimilarityKernel.cosinePrenormed, the broadcast-block kernels'
+    * form over precomputed sqrt-norms. Operates on ArrayData directly
     * (primitive getFloat, no per-element boxing, no Seq conversion —
     * the UDF variant paid ~50 us/pair in converter overhead). */
   def cosineF(a: ArrayData, b: ArrayData): Double = {

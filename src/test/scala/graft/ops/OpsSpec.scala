@@ -845,7 +845,7 @@ class OpsSpec extends AnyFunSuite {
       graft.sql.GraftFunctions.graft_cosine($"ea", $"eb").as("c"))
       .as[Double].collect()
     val viaHof = pairs.select(
-      Similarity.cosine($"ea", $"eb").as("c")).as[Double].collect()
+      KernelReferences.cosine($"ea", $"eb").as("c")).as[Double].collect()
     assert(viaUdf.length == viaHof.length)
     viaUdf.zip(viaHof).foreach { case (u, h) =>
       assert(java.lang.Double.doubleToLongBits(u) ==
