@@ -28,26 +28,15 @@ object ExtractJob {
       "--lineage <dir> --run-id <id> [--buckets B] [--narrow true] " +
       "[--warc-split-mb M] [--wet <dir>] [--cdx true] [--jsonl <dir>]"
 
+  private def fail(msg: String): Nothing = {
+    System.err.println(s"$msg; $Usage")
+    sys.exit(2)
+  }
+
   def main(args: Array[String]): Unit = {
-    // strict parsing: a dangling or unknown flag must not silently fall
-    // back to defaults (it would resume someone else's lineage dir)
-    if (args.length % 2 != 0 || args.grouped(2).exists(p =>
-        !p(0).startsWith("--") || !KnownOpts.contains(p(0).drop(2)))) {
-      System.err.println(Usage)
-      sys.exit(2)
-    }
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
-    // strict like the other options: a non-boolean value exits through
-    // the usage path, not a stack trace
-    def flag(name: String): Boolean = opts.get(name) match {
-      case None | Some("false") => false
-      case Some("true") => true
-      case Some(other) =>
-        System.err.println(s"--$name must be true or false (got '$other'); $Usage")
-        sys.exit(2)
-    }
+    val opts = JobArgs.parse(args, KnownOpts).fold(fail, identity)
+    def flag(name: String): Boolean =
+      JobArgs.flag(opts, name).fold(fail, identity)
 
     val input = opts.getOrElse("input", "synth:100000")
     val output = opts.getOrElse("output", "/tmp/graft-out")
@@ -58,10 +47,7 @@ object ExtractJob {
       .appName(s"graft-extract-$runId")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-    // spark-submit injects the master; default to local[*] for bare runs
-    val spark =
-      (if (sys.props.contains("spark.master")) builder
-       else builder.master("local[*]")).getOrCreate()
+    val spark = JobArgs.session(builder)
     spark.sparkContext.setLogLevel("WARN")
 
     val defaultBuckets =
@@ -69,10 +55,8 @@ object ExtractJob {
     val buckets = opts.get("buckets") match {
       case None => defaultBuckets
       case Some(v) =>
-        scala.util.Try(v.toInt).filter(_ > 0).getOrElse {
-          System.err.println(s"--buckets must be a positive int (got '$v')")
-          sys.exit(2)
-        }
+        scala.util.Try(v.toInt).filter(_ > 0)
+          .getOrElse(fail(s"--buckets must be a positive int (got '$v')"))
     }
 
     val pages =
@@ -86,11 +70,8 @@ object ExtractJob {
         // sub-file work units (exact gzip-member attribution) for rogue
         // giants.
         val unitBytes = opts.get("warc-split-mb").fold(Warc.WholeFiles) { v =>
-          val mb = scala.util.Try(v.toLong).filter(_ > 0).getOrElse {
-            System.err.println(
-              s"--warc-split-mb must be a positive int (got '$v')")
-            sys.exit(2)
-          }
+          val mb = scala.util.Try(v.toLong).filter(_ > 0).getOrElse(
+            fail(s"--warc-split-mb must be a positive int (got '$v')"))
           mb << 20
         }
         Warc.warcSplitFiles(spark,
@@ -105,20 +86,16 @@ object ExtractJob {
     // WET-style conversion records (the format downstream CC-WET
     // consumers already read). Needs warc_ts → wide output only.
     val wetDir = opts.get("wet")
-    if (wetDir.isDefined && narrow) {
-      System.err.println("--wet requires the wide output (drop --narrow: " +
+    if (wetDir.isDefined && narrow)
+      fail("--wet requires the wide output (drop --narrow: " +
         "WET records carry warc_ts, which narrow mode prunes)")
-      sys.exit(2)
-    }
     // --cdx true: also write one CDX sidecar per WET part file (the
     // Common-Crawl index layout — urlkey, ts14, exact byte extents for
     // wayback-style random access)
     val cdx = flag("cdx")
-    if (cdx && wetDir.isEmpty) {
-      System.err.println("--cdx true requires --wet <dir> (the sidecars " +
+    if (cdx && wetDir.isEmpty)
+      fail("--cdx true requires --wet <dir> (the sidecars " +
         "index the WET output)")
-      sys.exit(2)
-    }
     // --jsonl <dir>: additionally publish the run's text as gzipped
     // JSONL (one JSON object per line — the LLM-corpus interchange
     // format). Works in both wide and narrow modes (url/text/status

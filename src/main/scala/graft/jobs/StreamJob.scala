@@ -34,24 +34,18 @@ object StreamJob {
       "--checkpoint <dir> [--watermark '10 minutes'] " +
       "[--dedup watermark|first-seen]"
 
+  private def fail(msg: String): Nothing = {
+    System.err.println(s"$msg; $Usage")
+    sys.exit(2)
+  }
+
   def main(args: Array[String]): Unit = {
-    // strict parsing, same contract as ExtractJob: an unknown flag must
-    // not silently fall back (it would drain into the wrong sink)
-    if (args.length % 2 != 0 || args.grouped(2).exists(p =>
-        !p(0).startsWith("--") || !KnownOpts.contains(p(0).drop(2)))) {
-      System.err.println(Usage)
-      sys.exit(2)
-    }
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+    val opts = JobArgs.parse(args, KnownOpts).fold(fail, identity)
     val input = opts.get("input")
     val output = opts.get("output")
     val checkpoint = opts.get("checkpoint")
-    if (input.isEmpty || output.isEmpty || checkpoint.isEmpty) {
-      System.err.println(Usage)
-      sys.exit(2)
-    }
+    if (input.isEmpty || output.isEmpty || checkpoint.isEmpty)
+      fail("--input, --output and --checkpoint are required")
     val watermark = opts.getOrElse("watermark", "10 minutes")
     // --dedup first-seen: unbounded exactly-once per url via the
     // stateful filter (suppresses re-crawls too, state lives in the
@@ -59,18 +53,13 @@ object StreamJob {
     // redeliveries only. Strict like every other flag.
     val dedup = opts.getOrElse("dedup", "watermark") match {
       case m @ ("watermark" | "first-seen") => m
-      case other =>
-        System.err.println(
-          s"--dedup must be watermark or first-seen (got '$other'); " + Usage)
-        sys.exit(2)
+      case other => fail(s"--dedup must be watermark or first-seen (got '$other')")
     }
 
     val builder = SparkSession.builder()
       .appName("graft-stream-extract")
       .config("spark.sql.session.timeZone", "UTC")
-    val spark =
-      (if (sys.props.contains("spark.master")) builder
-       else builder.master("local[*]")).getOrCreate()
+    val spark = JobArgs.session(builder)
     spark.sparkContext.setLogLevel("WARN")
 
     val pagesIn = StreamingExtract.readPages(spark, input.get)

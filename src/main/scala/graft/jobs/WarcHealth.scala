@@ -17,33 +17,21 @@ object WarcHealth {
   private val Usage =
     "usage: WarcHealth --input <warc glob> [--only-damaged true]"
 
+  private def fail(msg: String): Nothing = {
+    System.err.println(s"$msg; $Usage")
+    sys.exit(2)
+  }
+
   def main(args: Array[String]): Unit = {
-    if (args.length % 2 != 0 || args.grouped(2).exists(p =>
-        !p(0).startsWith("--") || !KnownOpts.contains(p(0).drop(2)))) {
-      System.err.println(Usage)
-      sys.exit(2)
-    }
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
-    val input = opts.getOrElse("input", {
-      System.err.println(Usage); sys.exit(2)
-    })
-    val onlyDamaged = opts.get("only-damaged") match {
-      case None | Some("false") => false
-      case Some("true") => true
-      case Some(other) =>
-        System.err.println(
-          s"--only-damaged must be true or false (got '$other'); " + Usage)
-        sys.exit(2)
-    }
+    val opts = JobArgs.parse(args, KnownOpts).fold(fail, identity)
+    val input = opts.getOrElse("input", fail("--input is required"))
+    val onlyDamaged =
+      JobArgs.flag(opts, "only-damaged").fold(fail, identity)
 
     val builder = SparkSession.builder()
       .appName("graft-warc-health")
       .config("spark.sql.session.timeZone", "UTC")
-    val spark =
-      (if (sys.props.contains("spark.master")) builder
-       else builder.master("local[*]")).getOrCreate()
+    val spark = JobArgs.session(builder)
     spark.sparkContext.setLogLevel("WARN")
 
     val rows = graft.sources.Warc.warcFileSummaries(spark, input).collect()

@@ -34,11 +34,7 @@ object BpeTrain {
     * dropped. The ONE pass over the corpus; everything after runs on
     * this reduction. */
   def wordFrequencies(docs: DataFrame, textCol: String): DataFrame =
-    docs
-      .select(explode(filter(split(col(textCol), " "),
-        t => length(t) > 0)).as("word"))
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("freq"))
+    WordTokens.counts(docs, textCol, "word", "freq")
 
   /** Byte budget for collecting the word-frequency table driver-side
     * (the [[Similarity.DefaultBroadcastBudgetBytes]] discipline).
@@ -337,9 +333,7 @@ object BpeTrain {
     val spark: SparkSession = docs.sparkSession
     val bc = spark.sparkContext.broadcast(merges)
     val countUdf = udf { text: String =>
-      val ws =
-        if (text == null || text.isEmpty) Array.empty[String]
-        else text.split(" ", -1).filter(_.nonEmpty)
+      val ws = WordTokens.tokens(text)
       val m = bc.value
       val bcId = bc.id
       memoFor(bcId)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Benchmark decontamination: flag (and drop) training documents that
@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions._
   * smaller n to be non-degenerate).
   *
   * A document is CONTAMINATED when any of its word n-grams appears in
-  * the benchmark's n-gram set. Tokenization is single-space words with
-  * empties dropped, n-grams joined back with a single space — plain
-  * `string_split` + list slicing in any SQL engine, which is what the
-  * oracle recomputes.
+  * the benchmark's n-gram set. The n-grams are [[WordTokens.ngrams]]
+  * (single-space words, empties dropped, joined back with a single
+  * space) — plain `string_split` + list slicing in any SQL engine,
+  * which is what the oracle recomputes.
   *
   * Scale shape: evaluation sets are small (MBs) next to the corpus, so
   * the benchmark n-gram set is collected once — bounded by
@@ -26,27 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Decontaminate {
 
-  /** Word n-grams of `text` (space-joined), as the kernel computes
-    * them. */
-  private[ops] def ngramsOf(text: String, n: Int): Array[String] = {
-    val ws =
-      if (text == null || text.isEmpty) Array.empty[String]
-      else text.split(" ", -1).filter(_.nonEmpty)
-    if (ws.length < n) Array.empty[String]
-    else Array.tabulate(ws.length - n + 1)(i =>
-      ws.slice(i, i + n).mkString(" "))
-  }
-
-  /** Declarative n-gram column over `textCol` — the same construction
-    * as [[ngramsOf]] in `functions._` form (what the oracle mirrors):
-    * filter-split → slice windows → space-join. */
-  def ngramsCol(textCol: Column, n: Int): Column = {
-    val ws = filter(split(textCol, " "), t => length(t) > 0)
-    when(size(ws) < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), size(ws) - n),
-        i => array_join(slice(ws, i + 1, lit(n)), " ")))
-  }
-
   /** Distinct benchmark n-grams, collected under an asserted bound and
     * returned as a Set. The count check runs as its own aggregate BEFORE
     * the collect, so an oversized benchmark fails fast without
@@ -55,7 +34,7 @@ object Decontaminate {
       maxBenchNgrams: Long = 10000000L): Set[String] = {
     require(n > 0, s"n must be positive (got $n)")
     val grams = bench
-      .select(explode(ngramsCol(col(textCol), n)).as("g"))
+      .select(explode(WordTokens.ngramsCol(col(textCol), n)).as("g"))
       .distinct()
     val cnt = grams.count()
     require(cnt <= maxBenchNgrams,
@@ -75,15 +54,8 @@ object Decontaminate {
     val bc = docs.sparkSession.sparkContext.broadcast(benchNgrams)
     val nn = n
     val statsUdf = udf { text: String =>
-      val set = bc.value
-      val gs = ngramsOf(text, nn)
-      var hits = 0L
-      var i = 0
-      while (i < gs.length) {
-        if (set.contains(gs(i))) hits += 1
-        i += 1
-      }
-      (gs.length.toLong, hits)
+      val gs = WordTokens.ngrams(text, nn)
+      (gs.length.toLong, gs.count(bc.value.contains).toLong)
     }
     docs
       .withColumn("__c", statsUdf(col(textCol)))
@@ -108,9 +80,9 @@ object Decontaminate {
     require(n > 0, s"n must be positive (got $n)")
     val grams = docs
       .select(col(idCol),
-        explode_outer(ngramsCol(col(textCol), n)).as("g"))
+        explode_outer(WordTokens.ngramsCol(col(textCol), n)).as("g"))
     val benchGrams = bench
-      .select(explode(ngramsCol(col(benchTextCol), n)).as("g"))
+      .select(explode(WordTokens.ngramsCol(col(benchTextCol), n)).as("g"))
       .distinct()
       .withColumn("__hit", lit(1L))
     grams

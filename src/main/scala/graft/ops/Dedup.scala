@@ -49,16 +49,18 @@ object Dedup {
   val Bands = 16 // 16 bands × 4 rows
   val RowsPerBand: Int = NumPerm / Bands
 
+  val ShingleSize = 3 // words per shingle, signature and verify alike
+
   /** 64-perm MinHash signature per doc (narrow map; one text pass). */
-  def minhashSignatures(docs: DataFrame, shingleSize: Int = 3): DataFrame = {
+  def minhashSignatures(docs: DataFrame): DataFrame = {
     val sigUdf = udf((text: String) =>
-      MinHashKernel.signature(text, shingleSize, NumPerm))
+      MinHashKernel.signature(text, ShingleSize, NumPerm))
     docs.select(col("doc_id"), sigUdf(col("text")).as("sig"))
   }
 
   /** One (band, band_hash, doc_id) row per band of each signature. */
-  private def banded(docs: DataFrame, shingleSize: Int): DataFrame =
-    minhashSignatures(docs, shingleSize).select(
+  private def banded(docs: DataFrame): DataFrame =
+    minhashSignatures(docs).select(
       col("doc_id"),
       posexplode(bandHashes(col("sig"))).as(Seq("band", "band_hash")))
 
@@ -69,9 +71,9 @@ object Dedup {
     * bucket cap ([[Buckets]]) → bucket self-join with `a < b`. No
     * collected id arrays, no m² UDF — the join output is bounded by
     * cap²/2 per bucket and every row is (long, long). */
-  def minhashCandidates(docs: DataFrame, shingleSize: Int = 3,
-      bucketCap: Int = Buckets.Text.size): DataFrame = {
-    val capped = Buckets.cap(banded(docs, shingleSize), bandKeys,
+  def minhashCandidates(docs: DataFrame, bucketCap: Int = Buckets.Text.size)
+      : DataFrame = {
+    val capped = Buckets.cap(banded(docs), bandKeys,
       Buckets.Text.order("doc_id"), bucketCap)
     val left = capped.select(col("band"), col("band_hash"),
       col("doc_id").as("a"))
@@ -86,9 +88,9 @@ object Dedup {
   /** Rows the bucket cap drops across all (band, band_hash) buckets —
     * `log()` this next to the candidate count so a silent recall loss
     * never reads as full coverage. */
-  def minhashBucketDrops(docs: DataFrame, shingleSize: Int = 3,
+  def minhashBucketDrops(docs: DataFrame,
       bucketCap: Int = Buckets.Text.size): Long =
-    Buckets.drops(banded(docs, shingleSize), bandKeys, bucketCap)
+    Buckets.drops(banded(docs), bandKeys, bucketCap)
 
   /** Near-dup pairs with estimated Jaccard ≥ threshold (from signature
     * agreement), then exact n-gram Jaccard verification.
@@ -99,13 +101,13 @@ object Dedup {
     * the exact-dedup operator's output, not near-dup pairs). Pairs are
     * then reported between surviving representatives only. */
   def minhashNearDups(docs: DataFrame, threshold: Double = 0.8,
-      shingleSize: Int = 3, exactPrepass: Boolean = true,
+      exactPrepass: Boolean = true,
       bucketCap: Int = Buckets.Text.size): DataFrame = {
     val base = if (exactPrepass) exactSurvivors(docs) else docs
-    val cand = minhashCandidates(base, shingleSize, bucketCap)
+    val cand = minhashCandidates(base, bucketCap)
     val texts = base.select(col("doc_id"), col("text"))
     val jacUdf = udf((t1: String, t2: String) =>
-      MinHashKernel.exactJaccard(t1, t2, shingleSize))
+      MinHashKernel.exactJaccard(t1, t2, ShingleSize))
     cand
       .join(texts.withColumnRenamed("doc_id", "a")
         .withColumnRenamed("text", "text_a"), Seq("a"))

@@ -33,32 +33,15 @@ import org.apache.spark.sql.functions._
   */
 object Dsir {
 
-  /** Unigram counts of a corpus: (token, cnt). One map-combined
-    * shuffle. */
-  def unigramCounts(docs: DataFrame, textCol: String): DataFrame =
-    docs
-      .select(explode(filter(split(col(textCol), " "),
-        t => length(t) > 0)).as("token"))
-      .groupBy(col("token"))
-      .agg(count(lit(1)).as("cnt"))
-
   /** Per-token importance weights from the two corpora:
     * (token, weight_e6) over the RAW vocabulary, with add-one smoothing
     * on both counts. Tokens the target never saw get
     * `1e6 DIV (cnt_raw + 1)` (≈ 0 for common raw tokens); tokens the
     * raw pool barely has but the target loves score ≫ 1e6. */
   def importanceWeights(raw: DataFrame, target: DataFrame,
-      textCol: String): DataFrame = {
-    val rawCnt = unigramCounts(raw, textCol)
-      .withColumnRenamed("cnt", "cnt_raw")
-    val tgtCnt = unigramCounts(target, textCol)
-      .withColumnRenamed("cnt", "cnt_target")
-    rawCnt
-      .join(tgtCnt, Seq("token"), "left")
-      .select(col("token"),
-        expr("(coalesce(cnt_target, 0) + 1) * 1000000 DIV (cnt_raw + 1)")
-          .as("weight_e6"))
-  }
+      textCol: String): DataFrame =
+    ratioWeights(WordTokens.counts(raw, textCol, "token", "cnt"),
+      WordTokens.counts(target, textCol, "token", "cnt"), "token")
 
   /** Hashing-trick variant: fold the vocabulary into `buckets` rows by
     * summing counts within `pmod(hash(token), buckets)` — the published
@@ -68,18 +51,23 @@ object Dsir {
   def hashedWeights(raw: DataFrame, target: DataFrame, textCol: String,
       buckets: Int): DataFrame = {
     require(buckets > 0, s"buckets must be positive (got $buckets)")
-    def bucketCounts(docs: DataFrame) = unigramCounts(docs, textCol)
+    def bucketCounts(docs: DataFrame) =
+      WordTokens.counts(docs, textCol, "token", "cnt")
       .groupBy(pmod(hash(col("token")), lit(buckets)).cast("long")
         .as("bucket"))
       .agg(sum(col("cnt")).as("cnt"))
-    val rawCnt = bucketCounts(raw).withColumnRenamed("cnt", "cnt_raw")
-    val tgtCnt = bucketCounts(target).withColumnRenamed("cnt", "cnt_target")
-    rawCnt
-      .join(tgtCnt, Seq("bucket"), "left")
-      .select(col("bucket"),
+    ratioWeights(bucketCounts(raw), bucketCounts(target), "bucket")
+  }
+
+  /** (key, weight_e6) over the raw side's keys: the add-one-smoothed
+    * ratio of two (key, cnt) count tables. */
+  private def ratioWeights(raw: DataFrame, target: DataFrame,
+      key: String): DataFrame =
+    raw.withColumnRenamed("cnt", "cnt_raw")
+      .join(target.withColumnRenamed("cnt", "cnt_target"), Seq(key), "left")
+      .select(col(key),
         expr("(coalesce(cnt_target, 0) + 1) * 1000000 DIV (cnt_raw + 1)")
           .as("weight_e6"))
-  }
 
   /** Score documents: per-doc mean token weight,
     * `score = sum(n_t * w(t)) DIV n_tokens` (0 for empty documents).
@@ -91,8 +79,7 @@ object Dsir {
       weights: DataFrame): DataFrame = {
     val tokenCounts = docs
       .select(col(idCol),
-        explode(filter(split(col(textCol), " "),
-          t => length(t) > 0)).as("token"))
+        explode(WordTokens.tokensCol(col(textCol))).as("token"))
       .groupBy(col(idCol), col("token"))
       .agg(count(lit(1)).as("n"))
     val scored = tokenCounts

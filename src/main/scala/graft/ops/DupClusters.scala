@@ -45,6 +45,8 @@ object DupClusters {
     * pinned in DupClustersSpec). */
   val LocalEdgeThreshold: Long = 4L << 20
 
+  private val MaxRounds = 50 // star rounds; O(log² n) are expected
+
   /** Connected components over an undirected edge list.
     *
     * @param pairs edges with long columns `a`, `b` (self-loops ignored)
@@ -54,9 +56,8 @@ object DupClusters {
     * @return one row per distinct node: (id, component) where component
     *         is the minimum node id reachable from `id`
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
-      localEdgeThreshold: Long = LocalEdgeThreshold)
-      : DataFrame = {
+  def connectedComponents(pairs: DataFrame,
+      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
     val raw = pairs
       .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
     // nodes come from the RAW pair list so a self-paired id still gets
@@ -92,7 +93,7 @@ object DupClusters {
     var converged = false
     var iter = 0
     var stale: DataFrame = null
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < MaxRounds) {
       val next = smallStar(largeStar(edges)).localCheckpoint(false)
       val cur = edgeChecksum(next) // materializes `next`
       // previous-previous round is now unreachable — release its blocks
@@ -106,8 +107,8 @@ object DupClusters {
     }
     if (stale != null) stale.unpersist()
     require(converged,
-      s"connectedComponents did not converge in $maxIter rounds " +
-        "(O(log^2 n) expected; raise maxIter only after checking the input)")
+      s"connectedComponents did not converge in $MaxRounds rounds " +
+        "(O(log^2 n) expected; check the input)")
 
     // Converged edges form stars (hi -> component min). Nodes that are
     // component minima have no hi-side row and label themselves.

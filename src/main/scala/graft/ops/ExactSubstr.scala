@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Exact duplicated-span removal (the ExactSubstr recipe of Lee et al.,
   * "Deduplicating Training Data Makes Language Models Better", ACL
@@ -37,7 +38,6 @@ import org.apache.spark.sql.functions._
   *    per-row kernel over each doc's own drop-set — no global state.
   */
 object ExactSubstr {
-  import QualityTiers.tokensOf
 
   /** 64-bit FNV-1a over UTF-8 bytes — the gram key of the hashed
     * variant. Any stable 64-bit hash works (the key only has to GROUP
@@ -61,32 +61,17 @@ object ExactSubstr {
   def gramOccurrences(docs: DataFrame, idCol: String, textCol: String,
       n: Int, hashed: Boolean = true): DataFrame = {
     require(n > 0, s"n must be positive (got $n)")
-    if (hashed) {
-      val gramsUdf = udf { text: String =>
-        val ts = tokensOf(text)
-        if (ts.length < n) Array.empty[(Long, Long)]
-        else Array.tabulate(ts.length - n + 1) { i =>
-          // rebuild the gram string once per position; FNV over it
-          (i.toLong, fnv64(ts.slice(i, i + n).mkString(" ")))
-        }
+    def occurrences[K: TypeTag](key: String => K) = udf { text: String =>
+      WordTokens.ngrams(text, n).zipWithIndex.map { case (g, i) =>
+        (i.toLong, key(g))
       }
-      docs
-        .select(col(idCol), explode(gramsUdf(col(textCol))).as("__o"))
-        .select(col(idCol), col("__o._1").as("pos"),
-          col("__o._2").as("gram"))
-    } else {
-      val gramsUdf = udf { text: String =>
-        val ts = tokensOf(text)
-        if (ts.length < n) Array.empty[(Long, String)]
-        else Array.tabulate(ts.length - n + 1) { i =>
-          (i.toLong, ts.slice(i, i + n).mkString(" "))
-        }
-      }
-      docs
-        .select(col(idCol), explode(gramsUdf(col(textCol))).as("__o"))
-        .select(col(idCol), col("__o._1").as("pos"),
-          col("__o._2").as("gram"))
     }
+    val gramsUdf =
+      if (hashed) occurrences(fnv64) else occurrences(identity[String])
+    docs
+      .select(col(idCol), explode(gramsUdf(col(textCol))).as("__o"))
+      .select(col(idCol), col("__o._1").as("pos"),
+        col("__o._2").as("gram"))
   }
 
   /** Positions covered by a NON-WINNER occurrence of a duplicated gram:
@@ -121,7 +106,7 @@ object ExactSubstr {
       .groupBy(col(idCol))
       .agg(collect_set(col("position")).as("__drop"))
     val rebuildUdf = udf { (text: String, drop: Seq[Long]) =>
-      val ts = tokensOf(text)
+      val ts = WordTokens.tokens(text)
       if (drop == null || drop.isEmpty) (ts.length.toLong, 0L,
         ts.mkString(" "))
       else {

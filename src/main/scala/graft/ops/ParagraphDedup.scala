@@ -30,26 +30,19 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ParagraphDedup {
 
-  /** Explode text into (id, para_idx, para) rows. `sep` is a regex
-    * (default: blank-line paragraph breaks). Empty/whitespace-only
-    * fragments are dropped; `para_idx` is the fragment's 0-based
-    * position among the SURVIVING fragments of its document.
-    * "Whitespace" is what Spark's `trim` strips: the space 0x20 only.
-    * The default separator runs the native [[blankLineParagraphs]]
-    * splitter; any other separator goes through Spark's regex `split`. */
-  def paragraphs(docs: DataFrame, idCol: String, textCol: String,
-                 sep: String = BlankLines): DataFrame = {
-    val ps =
-      if (sep == BlankLines) graft.sql.GraftFunctions.graft_paragraphs(col(textCol))
-      else filter(split(col(textCol), sep), p => length(trim(p)) > 0)
+  /** Explode text into (id, para_idx, para) rows, splitting at blank
+    * lines (runs of two or more newlines) with the native
+    * [[blankLineParagraphs]] splitter. Empty/whitespace-only fragments
+    * are dropped; `para_idx` is the fragment's 0-based position among
+    * the SURVIVING fragments of its document. "Whitespace" is what
+    * Spark's `trim` strips: the space 0x20 only. */
+  def paragraphs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val ps = graft.sql.GraftFunctions.graft_paragraphs(col(textCol))
     // one select: over a computed array (not a column) the optimizer
     // infers no `size(ps) > 0 AND isnotnull(ps)` filter for the
     // generator, a filter that would evaluate the split twice more
     docs.select(col(idCol).as("id"), posexplode(ps).as(Seq("para_idx", "para")))
   }
-
-  /** The default paragraph separator: a run of two or more newlines. */
-  val BlankLines = "\n\n+"
 
   /** `filter(split(text, "\n\n+"), p => length(trim(p)) > 0)` in one
     * byte pass: a newline is the single byte 0x0A in UTF-8, so the
@@ -115,17 +108,16 @@ object ParagraphDedup {
       .select(col("id"), col("para_idx"), col("para"), col("keep"))
   }
 
-  /** Rebuild documents from surviving paragraphs (original order,
-    * original separator): (id, text, paras_total, paras_kept).
+  /** Rebuild documents from surviving paragraphs (original order, one
+    * blank line between them): (id, text, paras_total, paras_kept).
     * Documents whose every paragraph was seen earlier come back with
     * empty text — downstream filters drop them like any other
     * too-short document. EVERY input id survives: a document whose text
     * has no non-empty paragraph (empty/whitespace-only) emits no
     * paragraph rows, and rejoins as ('', 0, 0) rather than vanishing
     * (it used to be dropped, contradicting this contract). */
-  def dedup(docs: DataFrame, idCol: String, textCol: String,
-            sep: String = BlankLines, joinSep: String = "\n\n"): DataFrame = {
-    val marked = markDuplicates(paragraphs(docs, idCol, textCol, sep))
+  def dedup(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val marked = markDuplicates(paragraphs(docs, idCol, textCol))
     val rebuilt = marked
       .groupBy(col("id"))
       .agg(
@@ -136,7 +128,7 @@ object ParagraphDedup {
             array_sort(collect_list(
               when(col("keep"), struct(col("para_idx"), col("para"))))),
             s => s.getField("para")),
-          joinSep).as("text"))
+          "\n\n").as("text"))
       .select(col("id").as(idCol), col("text"),
         col("paras_total"), col("paras_kept"))
     docs.select(col(idCol))

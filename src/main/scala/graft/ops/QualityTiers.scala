@@ -38,21 +38,6 @@ import org.apache.spark.sql.functions._
   */
 object QualityTiers {
 
-  /** Single-space word tokens, empties dropped — the one tokenizer both
-    * the trainer and the scorer use (`string_split` + filter in SQL). */
-  private[ops] def tokensOf(text: String): Array[String] =
-    if (text == null || text.isEmpty) Array.empty[String]
-    else text.split(" ", -1).filter(_.nonEmpty)
-
-  /** Corpus unigram counts: (token, cnt). One shuffle, map-side
-    * combined. */
-  def tokenFrequencies(docs: DataFrame, textCol: String): DataFrame =
-    docs
-      .select(explode(filter(split(col(textCol), " "),
-        t => length(t) > 0)).as("token"))
-      .groupBy(col("token"))
-      .agg(count(lit(1)).as("cnt"))
-
   /** Deterministic top-K vocabulary (cnt desc, token asc): the
     * broadcastable LM. K bounds the driver collect at any corpus size. */
   def vocabulary(freqs: DataFrame, topK: Int): DataFrame = {
@@ -71,19 +56,17 @@ object QualityTiers {
     * the broadcast map, zero shuffles. Output adds
     * (sum_freq, n_tokens, score) — score = sum_freq DIV n_tokens (mean
     * token corpus frequency, floor; 0 for empty documents). OOV tokens
-    * count `oovCount` (default 1 — the +1-smoothing floor). */
+    * count 1 — the +1-smoothing floor. */
   def scoreDocs(docs: DataFrame, textCol: String,
-      vocab: Map[String, Long], oovCount: Long = 1L): DataFrame = {
-    require(oovCount >= 0, s"oovCount must be >= 0 (got $oovCount)")
+      vocab: Map[String, Long]): DataFrame = {
     val bc = docs.sparkSession.sparkContext.broadcast(vocab)
-    val oov = oovCount
     val scoreUdf = udf { text: String =>
       val v = bc.value
-      val ts = tokensOf(text)
+      val ts = WordTokens.tokens(text)
       var sum = 0L
       var i = 0
       while (i < ts.length) {
-        sum += v.getOrElse(ts(i), oov)
+        sum += v.getOrElse(ts(i), 1L)
         i += 1
       }
       (sum, ts.length.toLong, if (ts.length == 0) 0L else sum / ts.length)
@@ -97,11 +80,11 @@ object QualityTiers {
   }
 
   /** Train on the corpus itself and score it — the CC-Net
-    * self-supervised loop in one call. */
-  def scoreSelf(docs: DataFrame, textCol: String, topK: Int,
-      oovCount: Long = 1L): DataFrame =
-    scoreDocs(docs, textCol,
-      collectVocabulary(tokenFrequencies(docs, textCol), topK), oovCount)
+    * self-supervised loop in one call. The vocabulary is the top-K of
+    * the corpus unigram counts, (token, cnt). */
+  def scoreSelf(docs: DataFrame, textCol: String, topK: Int): DataFrame =
+    scoreDocs(docs, textCol, collectVocabulary(
+      WordTokens.counts(docs, textCol, "token", "cnt"), topK))
 
   /** Exact per-group tier assignment: ntile(n) over
     * (scoreCol desc, idCol asc) within each `groupCol` — tier 1 = head.

@@ -85,14 +85,14 @@ object SeqPack {
     * `slice` on the split array so nothing leaves codegen — and ONE
     * groupBy(seq_id) assembles every sequence from its pieces sorted by
     * stream offset. Output: (seq_id, n_docs, n_tokens, seq_text) —
-    * the tail sequence may be partial. Token identity is whatever
-    * whitespace tokenization of `textCol` yields (ids come from a real
+    * the tail sequence may be partial. Tokens are the [[WordTokens]] of
+    * `textCol` (ids come from a real
     * tokenizer upstream at cluster scale; the LAYOUT math is the
     * operator). */
   def materialize(docs: DataFrame, idCol: String, textCol: String,
       seqLen: Long, bucketSpan: Long = 1L << 20): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive (got $seqLen)")
-    val ws = filter(split(col(textCol), " "), t => length(t) > 0)
+    val ws = WordTokens.tokensCol(col(textCol))
     val packed = pack(
       docs.withColumn("__ws", ws)
         .withColumn("__n", size(col("__ws")).cast("long")),

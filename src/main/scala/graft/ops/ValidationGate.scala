@@ -63,17 +63,16 @@ object ValidationGate {
         avg(col("confidence")).as("mean_confidence"))
 
   /** Relational validation profile per `typeCol` (the SQL-oracle-able
-    * face of the gate): counts, empty/short text counts, exact-integer
-    * char totals, and a per-group `passed` verdict (no empties). Means
-    * are sum/count over exact integers — deterministic across partition
-    * orders, unlike float `avg`. */
-  def profile(batch: DataFrame, typeCol: String, textCol: String,
-      shortLen: Int = 50): DataFrame =
+    * face of the gate): counts, empty and short (< 50 chars) text
+    * counts, exact-integer char totals, and a per-group `passed` verdict
+    * (no empties). Means are sum/count over exact integers —
+    * deterministic across partition orders, unlike float `avg`. */
+  def profile(batch: DataFrame, typeCol: String, textCol: String): DataFrame =
     batch.groupBy(col(typeCol).as("gtype"))
       .agg(
         count(lit(1)).as("docs"),
         sum(when(length(col(textCol)) === 0, 1L).otherwise(0L)).as("n_empty"),
-        sum(when(length(col(textCol)) < shortLen, 1L).otherwise(0L))
+        sum(when(length(col(textCol)) < 50, 1L).otherwise(0L))
           .as("n_short"),
         sum(length(col(textCol)).cast("long")).as("sum_chars"))
       .withColumn("mean_chars_e2",
@@ -96,10 +95,10 @@ object ValidationGate {
     * per-type share + mean-metric delta with a share threshold):
     * one row per type with count shares (ppm), mean-metric deltas
     * (×100), and a `drifted` verdict when the share moved more than
-    * `shareThresholdPpm`. Types absent from one batch get share 0 there.
+    * 50,000 ppm (5 points). Types absent from one batch get share 0 there.
     * Two map-combined aggregations + a broadcast-sized outer join. */
   def drift(current: DataFrame, baseline: DataFrame, typeCol: String,
-      metricCol: String, shareThresholdPpm: Long = 50000L): DataFrame = {
+      metricCol: String): DataFrame = {
     val cur = shape(current, typeCol, metricCol)
       .select(col("gtype"), col("n").as("n_cur"),
         col("metric_sum").as("sum_cur"))
@@ -123,7 +122,7 @@ object ValidationGate {
       .withColumn("mean_delta_e2",
         round((meanCur - meanBase) * 100).cast("long"))
       .withColumn("drifted",
-        abs(col("share_delta_ppm")) > shareThresholdPpm)
+        abs(col("share_delta_ppm")) > 50000L)
       .select(col("gtype"), col("n_cur"), col("n_base"),
         col("share_cur_ppm"), col("share_base_ppm"),
         col("share_delta_ppm"), col("mean_delta_e2"), col("drifted"))

@@ -106,23 +106,20 @@ object Winnowing {
     java.util.Arrays.copyOf(selected, n2)
   }
 
-  private def fpUdf(k: Int, w: Int) =
-    udf((text: String) => fingerprints(text, k, w))
-
-  /** Per-document fingerprint column (narrow map; zero shuffles). */
-  def withFingerprints(docs: DataFrame, k: Int = DefaultK,
-      w: Int = DefaultW, textCol: String = "text",
-      outCol: String = "fps"): DataFrame =
-    docs.withColumn(outCol, fpUdf(k, w)(col(textCol)))
+  /** Per-document fingerprint column `fps` over `text` (narrow map;
+    * zero shuffles). */
+  def withFingerprints(docs: DataFrame): DataFrame = {
+    val fpUdf = udf((text: String) => fingerprints(text))
+    docs.withColumn("fps", fpUdf(col("text")))
+  }
 
   /** Candidate near-dup pairs: documents sharing ≥ `minShared` winnowed
     * fingerprints (a < b). Explode → text-policy capped fingerprint
     * bucket ([[Buckets]]) → ids-only self-join → shared-count filter.
     * Bytes on the wire per row: two longs. */
   def candidatePairs(docs: DataFrame, minShared: Int = 2,
-      k: Int = DefaultK, w: Int = DefaultW,
       bucketCap: Int = Buckets.Text.size): DataFrame = {
-    val fps = withFingerprints(docs.select(col("doc_id"), col("text")), k, w)
+    val fps = withFingerprints(docs.select(col("doc_id"), col("text")))
       .select(col("doc_id"), explode(col("fps")).as("fp"))
     val capped = Buckets.cap(fps, Seq(col("fp")),
       Buckets.Text.order("doc_id"), bucketCap)

@@ -153,85 +153,51 @@ object GraftKernels {
   }
 }
 
+/** A null-intolerant string → value kernel as a Catalyst expression:
+  * interpreted eval calls `f`, codegen calls the static method named
+  * `kernel` (the same function), so the expression stays inside
+  * whole-stage codegen. Serializable itself, so a task's copy keeps the
+  * constructor fields. */
+abstract class GraftStringKernel(kernel: String, f: UTF8String => Any,
+    outType: DataType)
+    extends UnaryExpression with ExpectsInputTypes with Serializable {
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = outType
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(v: Any): Any =
+    f(v.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"$kernel($c)")
+  override protected def withNewChildInternal(c: Expression): Expression =
+    makeCopy(Array[AnyRef](c))
+}
+
 /** sanitize_text as a native Catalyst expression (SURVEY §7.2 hardening of
   * T1; semantics in graft.text.Sanitizer, cited to ocr_engine.py:303-359). */
-case class GraftSanitize(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(v: Any): Any =
-    GraftKernels.sanitizeU(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.sql.GraftKernels.sanitizeU($c)")
-  override protected def withNewChildInternal(c: Expression): GraftSanitize = copy(c)
-}
+case class GraftSanitize(child: Expression) extends GraftStringKernel(
+  "graft.sql.GraftKernels.sanitizeU", GraftKernels.sanitizeU, StringType)
 
 /** 13–19-digit Luhn validity (T10; pan_candidates.py:129-147). */
-case class GraftLuhnValid(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(v: Any): Any =
-    GraftKernels.luhnValid(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.sql.GraftKernels.luhnValid($c)")
-  override protected def withNewChildInternal(c: Expression): GraftLuhnValid = copy(c)
-}
+case class GraftLuhnValid(child: Expression) extends GraftStringKernel(
+  "graft.sql.GraftKernels.luhnValid", GraftKernels.luhnValid, BooleanType)
 
 /** Confidence score (C1; confidence.py:17-57). */
-case class GraftConfidence(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(v: Any): Any =
-    GraftKernels.confidence(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.sql.GraftKernels.confidence($c)")
-  override protected def withNewChildInternal(c: Expression): GraftConfidence = copy(c)
-}
+case class GraftConfidence(child: Expression) extends GraftStringKernel(
+  "graft.sql.GraftKernels.confidence", GraftKernels.confidence, DoubleType)
 
 /** 64-bit SimHash (near-dup sketch). */
-case class GraftSimHash(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(v: Any): Any =
-    GraftKernels.simhash(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.sql.GraftKernels.simhash($c)")
-  override protected def withNewChildInternal(c: Expression): GraftSimHash = copy(c)
-}
+case class GraftSimHash(child: Expression) extends GraftStringKernel(
+  "graft.sql.GraftKernels.simhash", GraftKernels.simhash, LongType)
 
 /** Rolling-hash fingerprint (document fingerprinting). */
-case class GraftFingerprint(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(v: Any): Any =
-    GraftKernels.rollingFingerprint(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.sql.GraftKernels.rollingFingerprint($c)")
-  override protected def withNewChildInternal(c: Expression): GraftFingerprint = copy(c)
-}
+case class GraftFingerprint(child: Expression) extends GraftStringKernel(
+  "graft.sql.GraftKernels.rollingFingerprint", GraftKernels.rollingFingerprint,
+  LongType)
 
 /** One-pass C4-style quality proxy (e6-scaled long) — replaces the
   * two-regex-scan Column composition on every quality-gated path. */
-case class GraftQualityE6(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(v: Any): Any =
-    GraftKernels.qualityE6(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.sql.GraftKernels.qualityE6($c)")
-  override protected def withNewChildInternal(c: Expression): GraftQualityE6 = copy(c)
-}
+case class GraftQualityE6(child: Expression) extends GraftStringKernel(
+  "graft.sql.GraftKernels.qualityE6", GraftKernels.qualityE6, LongType)
 
 /** Gopher repetition signals as struct<_1: top_bigram_cover_e6,
   * _2: dup_{dupN}gram_cover_e6, _3: n_words> (see
@@ -266,17 +232,10 @@ case class GraftRepetitionSignals(child: Expression, dupN: Int)
 /** Blank-line paragraphs: `filter(split(text, "\n\n+"), p =>
   * length(trim(p)) > 0)` as one native pass
   * ([[graft.ops.ParagraphDedup.blankLineParagraphs]]). */
-case class GraftParagraphs(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(v: Any): Any =
-    graft.ops.ParagraphDedup.blankLineParagraphs(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.ParagraphDedup.blankLineParagraphs($c)")
-  override protected def withNewChildInternal(c: Expression): GraftParagraphs = copy(c)
-}
+case class GraftParagraphs(child: Expression) extends GraftStringKernel(
+  "graft.ops.ParagraphDedup.blankLineParagraphs",
+  graft.ops.ParagraphDedup.blankLineParagraphs,
+  ArrayType(StringType, containsNull = false))
 
 /** Cosine similarity over two array<float> columns (ANN hot loop). */
 case class GraftCosine(left: Expression, right: Expression)

@@ -9,11 +9,24 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source checks over `src/main/scala` that the compiler does not make. */
 class SourceLintSpec extends AnyFunSuite {
 
-  private def mainSources: Seq[Path] = {
-    val s = Files.walk(Paths.get("src/main/scala"))
+  private def sources(dir: String): Seq[Path] = {
+    val s = Files.walk(Paths.get(dir))
     try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList.sorted
     finally s.close()
   }
+
+  private def mainSources: Seq[Path] = sources("src/main/scala")
+
+  /** Code lines of `files` matching `pattern`, comments and trailing
+    * `//` comments left out, as `file:line: code`. */
+  private def offending(files: Seq[Path], pattern: scala.util.matching.Regex)
+      : Seq[String] = for {
+    f <- files
+    (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+    code = line.trim
+    if !code.startsWith("*") && !code.startsWith("/*") && !code.startsWith("//")
+    if pattern.findFirstIn(code.split(" // ")(0)).isDefined
+  } yield s"$f:${i + 1}: $code"
 
   test("String case mapping names its Locale") {
     // default-locale case mapping depends on the JVM: on a Turkish one
@@ -22,14 +35,21 @@ class SourceLintSpec extends AnyFunSuite {
     // locale-free and allowed.
     val call =
       """(?<!Character)\.to(?:Lower|Upper)Case\b(?!\s*\(\s*(?:java\.util\.)?Locale\.)""".r
-    val offenders = for {
-      f <- mainSources
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      code = line.trim
-      if !code.startsWith("*") && !code.startsWith("/*") && !code.startsWith("//")
-      if call.findFirstIn(code.split(" // ")(0)).isDefined
-    } yield s"$f:${i + 1}: $code"
+    val offenders = offending(mainSources, call)
     assert(mainSources.nonEmpty)
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("the operators' word tokenizer is written once, in WordTokens") {
+    // the empty-dropping single-space split, Column or Scala form; a
+    // second copy could drift from the SQL oracles' tokens unnoticed.
+    // A split that keeps empty tokens (ParagraphDedup.wordChunks) is
+    // another tokenizer and is not flagged.
+    val split = """filter\(split\(.*?,\s*" "\)|\.split\(" ",\s*-1\)""".r
+    val ops = sources("src/main/scala/graft/ops")
+    val offenders = offending(
+      ops.filterNot(_.getFileName.toString == "WordTokens.scala"), split)
+    assert(offending(ops, split).nonEmpty, "the rule matches nothing")
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 }

@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -18,30 +20,47 @@ class DecontaminateSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("ngramsOf: windows, short text, empties") {
-    assert(Decontaminate.ngramsOf("a b c d", 2).toSeq ==
+    assert(WordTokens.ngrams("a b c d", 2).toSeq ==
       Seq("a b", "b c", "c d"))
-    assert(Decontaminate.ngramsOf("a b", 3).isEmpty)
-    assert(Decontaminate.ngramsOf("a b c", 3).toSeq == Seq("a b c"))
-    assert(Decontaminate.ngramsOf(" a  b ", 2).toSeq == Seq("a b"))
-    assert(Decontaminate.ngramsOf("", 2).isEmpty)
-    assert(Decontaminate.ngramsOf(null, 2).isEmpty)
+    assert(WordTokens.ngrams("a b", 3).isEmpty)
+    assert(WordTokens.ngrams("a b c", 3).toSeq == Seq("a b c"))
+    assert(WordTokens.ngrams(" a  b ", 2).toSeq == Seq("a b"))
+    assert(WordTokens.ngrams("", 2).isEmpty)
+    assert(WordTokens.ngrams(null, 2).isEmpty)
   }
 
   test("ngramsCol equals the kernel on adversarial spacing") {
-    val texts = Seq("a b c d e", "  x ", "", "q w e r", "a a a a a a",
-      "one", " leading two  gaps   three ")
+    // the one word-token core, Scala form against Column form: tokens
+    // and n-grams over generated texts built from words and every kind
+    // of spacing (only 0x20 separates; \t, \n, U+00A0 and U+3000 stay
+    // inside tokens), plus fixed edge cases. A null text is a null
+    // column, which every caller reads as no tokens (explode emits no
+    // row, explode_outer one null gram that `count` skips).
+    val piece = Gen.frequency(
+      6 -> Gen.oneOf("a", "b", "cc", "dé", "x1"),
+      4 -> Gen.const(" "),
+      2 -> Gen.oneOf("  ", "    "),
+      2 -> Gen.oneOf("\t", "\n", "\u00a0", "\u3000", " \t ", "\n\n"))
+    val generated = Gen.listOfN(400, Gen.chooseNum(0, 24)
+      .flatMap(k => Gen.listOfN(k, piece)).map(_.mkString))
+      .apply(Gen.Parameters.default, Seed(14L)).get
+    val texts: Seq[String] = Seq("a b c d e", "  x ", "", "q w e r",
+      "a a a a a a", "one", " leading two  gaps   three ", "   ", " ",
+      "a\tb c", "a\nb  c", "x\u00a0y z", "x\u3000y  z", null) ++ generated
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
-    for (n <- Seq(1, 2, 3)) {
-      val declarative = df.select(col("id"),
-        Decontaminate.ngramsCol(col("text"), n).as("g"))
-        .collect().map(r => r.getLong(0) ->
-          r.getSeq[String](1).toSeq).toMap
-      texts.zipWithIndex.foreach { case (t, i) =>
-        assert(declarative(i.toLong) ==
-          Decontaminate.ngramsOf(t, n).toSeq, s"n=$n text='$t'")
-      }
+    val cols = WordTokens.tokensCol(col("text")) +:
+      Seq(1, 2, 3).map(n => WordTokens.ngramsCol(col("text"), n))
+    val got = df.select(col("id") +: cols: _*).collect().map(r =>
+      r.getLong(0) -> (1 to cols.length).map(j =>
+        Option(r.getSeq[String](j)).getOrElse(Nil).toSeq)).toMap
+    texts.zipWithIndex.foreach { case (t, i) =>
+      val want = WordTokens.tokens(t).toSeq +:
+        Seq(1, 2, 3).map(n => WordTokens.ngrams(t, n).toSeq)
+      assert(got(i.toLong) == want, s"text='$t'")
     }
+    assert(generated.exists(t => t.contains('\u3000') &&
+      WordTokens.tokens(t).length > 1), "generator degenerate")
   }
 
   test("hits count occurrences, not distinct grams") {

@@ -19,7 +19,7 @@ class QualityTiersSpec extends AnyFunSuite {
 
   test("tokenFrequencies counts space tokens, dropping empties") {
     val docs = Seq((0L, "a b a"), (1L, " a  c "), (2L, "")).toDF("id", "text")
-    val got = QualityTiers.tokenFrequencies(docs, "text")
+    val got = WordTokens.counts(docs, "text", "token", "cnt")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("a" -> 3L, "b" -> 1L, "c" -> 1L))
   }
