@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
@@ -24,12 +28,9 @@ object SparkEntry {
 
   /** Flagship: full extraction pipeline over the deterministic synthetic
     * pages corpus (FIXTURES.md) — driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame = {
-    val pages = ExtractPipeline.pages(spark, 500, 8)
-    ExtractPipeline.extract(pages, 8).toDF()
-      .select("url", "text", "document_type", "type_confidence", "layout_type",
-        "confidence", "status")
-  }
+  def entry(spark: SparkSession): DataFrame =
+    corpusResults(spark).select("url", "text", "document_type",
+      "type_confidence", "layout_type", "confidence", "status")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- relational operators over the oracle tables ------------------
@@ -235,9 +236,7 @@ object SparkEntry {
     // x_extract_analytics. REGENERATE constants only with a
     // Model.ExtractorVersion bump.
     "x_extract_pages" -> ((s, _) => {
-      val pages = ExtractPipeline.pages(s, 500, 8)
-      ExtractPipeline.extract(pages, 8).toDF()
-        .select(col("url"), col("text"), col("document_type"),
+      corpusResults(s).select(col("url"), col("text"), col("document_type"),
           col("type_confidence"), col("layout_type"), col("confidence"),
           col("status"), col("language_guess"))
         .agg(
@@ -258,15 +257,13 @@ object SparkEntry {
     // frames are covered by ExtractorSpec / the golden fixture.
     // REGENERATE constants only with a Model.ExtractorVersion bump.
     "x_extract_analytics" -> ((s, _) => {
-      val results = graft.pipeline.ExtractPipeline
-        .extract(graft.pipeline.ExtractPipeline.pages(s, 500, 8), 8).toDF()
       // ONE kernel pass: explode fields and read card stats in the same
       // projection, then aggregate both families in a single job (the
       // exploded multiplicity never touches the url-level card stats —
       // they are counted once per DISTINCT url via the min-expansion
       // trick: explode_outer keeps field-less urls, pos 0 marks the
       // first expansion of each url)
-      val expanded = results.select(col("url"),
+      val expanded = corpusResults(s).select(col("url"),
           posexplode_outer(col("fields")).as(Seq("pos", "f")),
           col("card_analysis.detected").as("det"),
           col("card_analysis.candidate_count").as("cc"),
@@ -431,11 +428,16 @@ object SparkEntry {
       // every action re-reads the parquet scan
       emb.cache()
       val sampleQ = emb.filter(col("vec_id") % 4 === 0)
-      // brute side: computed once per (JVM, sfDir) like the IVF
-      // centroids — the exact kernel is deterministic, so repeat gate
-      // runs reuse the pair set and join against a broadcast local
-      // frame (|sample|·k rows) instead of re-running the exact pass
-      val pairs = brutePairs(dir, emb, sampleQ)
+      // brute side: memoized per sf dir like the IVF centroids, and
+      // joined as a broadcast local frame (|sample|·k rows). The pair
+      // set is ≈ 1.25·n rows of two longs — driver-safe at every scale
+      // this gate runs at (the gate samples queries precisely so its
+      // cost stays bounded)
+      val pairs = memo("brute_pairs", dir) {
+        Similarity.bruteCosineTopK(emb, sampleQ, 5)
+          .select(col("query_id"), col("neighbor_id"))
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+      }
       val bruteRows = pairs.length.toLong
       val brute = broadcast(pairs.toSeq.toDF("query_id", "neighbor_id"))
       def recallE6(approx: DataFrame): Long = {
@@ -443,22 +445,18 @@ object SparkEntry {
           .join(brute, Seq("query_id", "neighbor_id")).count()
         math.round(hits.toDouble * 1000000.0 / math.max(bruteRows, 1L))
       }
-      // the two method measurements are independent DAGs — run their
-      // count actions concurrently so the gate's wall time is
-      // max(ivf, lsh) instead of the sum (results unchanged)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      // knownN unlocks the broadcast-block candidate ranking inside the
-      // forced-machinery probes (the corpus was just counted and is
-      // inside the broadcast budget at every gate scale)
-      val ivfF = Future(recallE6(graft.ops.IvfIndex.topK(emb,
-        ivfCentroids(dir, emb, n), 5, queries = sampleQ, knownN = n)))
-      val lshF = Future(recallE6(Similarity.lshCosineTopK(emb, 5,
-        signBits = Similarity.signBitsFor(n),
-        tables = Similarity.DefaultTables, queries = sampleQ, knownN = n)))
-      val ivfR = Await.result(ivfF, Duration.Inf)
-      val lshR = Await.result(lshF, Duration.Inf)
+      // the two method measurements are independent DAGs, run
+      // concurrently. knownN unlocks the broadcast-block candidate
+      // ranking inside the forced-machinery probes (the corpus was just
+      // counted and is inside the broadcast budget at every gate
+      // scale); the IVF centroids are trained once per sf dir
+      val (ivfR, lshR) = concurrently(
+        recallE6(graft.ops.IvfIndex.topK(emb,
+          memo("ivf_centroids", dir)(graft.ops.IvfIndex.train(emb, knownN = n)),
+          5, queries = sampleQ, knownN = n)),
+        recallE6(Similarity.lshCosineTopK(emb, 5,
+          signBits = Similarity.signBitsFor(n),
+          tables = Similarity.DefaultTables, queries = sampleQ, knownN = n)))
       emb.unpersist()
       Seq(("ivf", bruteRows, if (ivfR >= 900000L) 1L else 0L),
         ("lsh", bruteRows, if (lshR >= 900000L) 1L else 0L))
@@ -487,39 +485,27 @@ object SparkEntry {
           .select(col("doc_id"), col("text")))
       sample.cache()
       sample.count() // materialize the cache before the concurrent DAGs
-      // The four measurements are INDEPENDENT DAGs over the cached
-      // sample — run their collect actions concurrently (the
-      // x_ann_recall shape) so the gate's wall time is the max, not the
-      // sum; results unchanged.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      // exact shingle-Jaccard twin pairs (same shingles as the oracle) —
-      // the hashed-key broadcast-block kernel of x_jaccard_exact
-      val twinF = Future(
-        graft.ops.JaccardExact.pairsE6(jaccardShingleKeys(sample))
-          .filter(col("jac_e6") >= 500000L)
-          .select(col("a"), col("b")).as[(Long, Long)].collect().toSet)
-      val foundF = Future(
-        graft.ops.Dedup.minhashNearDups(sample, threshold = 0.5)
-          .select(col("a"), col("b")).as[(Long, Long)].collect().toSet)
+      def pairSet(pairs: DataFrame): Set[(Long, Long)] =
+        pairs.select(col("a"), col("b")).as[(Long, Long)].collect().toSet
       // simhash: banded candidates (≤3 bits) must EQUAL the exact
       // quadratic hamming pass (pigeonhole guarantee)
       val sk = sample.select(col("doc_id"),
         graft_simhash(col("text")).as("sk"))
       val sa = sk.select(col("doc_id").as("a"), col("sk").as("sk_a"))
       val sb = sk.select(col("doc_id").as("b"), col("sk").as("sk_b"))
-      val exactSimF = Future(
-        sa.join(broadcast(sb), col("a") < col("b"))
-          .filter(bit_count(col("sk_a").bitwiseXOR(col("sk_b"))) <= 3)
-          .select(col("a"), col("b")).as[(Long, Long)].collect().toSet)
-      val bandedF = Future(
-        graft.ops.Dedup.simhashNearDups(sample, maxDistance = 3)
-          .select(col("a"), col("b")).as[(Long, Long)].collect().toSet)
-      val twin = Await.result(twinF, Duration.Inf)
-      val found = Await.result(foundF, Duration.Inf)
-      val exactSim = Await.result(exactSimF, Duration.Inf)
-      val banded = Await.result(bandedF, Duration.Inf)
+      // the four measurements are independent DAGs over the cached
+      // sample, run concurrently. The minhash twin is the exact
+      // shingle-Jaccard pair set (same shingles as the oracle) from the
+      // hashed-key broadcast-block kernel of x_jaccard_exact
+      val ((twin, found), (exactSim, banded)) = concurrently(
+        concurrently(
+          pairSet(graft.ops.JaccardExact.pairsE6(jaccardShingleKeys(sample))
+            .filter(col("jac_e6") >= 500000L)),
+          pairSet(graft.ops.Dedup.minhashNearDups(sample, threshold = 0.5))),
+        concurrently(
+          pairSet(sa.join(broadcast(sb), col("a") < col("b"))
+            .filter(bit_count(col("sk_a").bitwiseXOR(col("sk_b"))) <= 3)),
+          pairSet(graft.ops.Dedup.simhashNearDups(sample, maxDistance = 3))))
       val mhOk = twin.isEmpty ||
         twin.count(found.contains).toDouble / twin.size >= 0.9
       sample.unpersist()
@@ -696,12 +682,7 @@ object SparkEntry {
         when(col("doc_id") % 3 === 0, lit(""))
           .otherwise(lit("item thing 9.99")), lit("\n"),
         lit("total 42.00"))
-      val countsUdf = udf((t: String) => graft.text.Normalizer.counts(t))
-      t(s, dir, "documents")
-        .select(col("doc_id"), countsUdf(txt).as("c"))
-        .select(col("doc_id"), col("c.n_sections").as("n_sections"),
-          col("c.n_txn_lines").as("n_txn_lines"),
-          col("c.n_receipt_items").as("n_receipt_items"))
+      normalizerCounts(t(s, dir, "documents"), "doc_id", txt)
         .orderBy(col("doc_id"))
     }),
 
@@ -734,21 +715,8 @@ object SparkEntry {
     // sfDir (the 500-page corpus is deterministic), so the DuckDB
     // oracle pins it against checked-in constants — a kernel regression
     // turns this row red driver-side, not just in the in-repo golden
-    // fixture. fp_sum is emitted as a STRING: the decimal(38,0) sum
-    // degrades to float64 through pandas, a string compares exactly.
-    "x_extract_md5" -> ((s, _) => {
-      val results = graft.pipeline.ExtractPipeline
-        .extract(graft.pipeline.ExtractPipeline.pages(s, 500, 8), 8).toDF()
-      val rowFp = xxhash64(col("url"), md5(col("text")), col("status"))
-      results.agg(
-        count(lit(1)).as("docs"),
-        // decimal(38,0) sum: a long sum of 64-bit hashes overflows under
-        // ANSI; decimal holds 10^12 rows × 2^63 with 7 digits to spare
-        sum(rowFp.cast("decimal(38,0)")).cast("string").as("fp_sum"),
-        bit_xor(rowFp).as("fp_xor"),
-        sum(length(col("text")).cast("long")).as("total_chars"),
-        sum(when(col("status") =!= "FAILED", 1L).otherwise(0L)).as("docs_ok"))
-    }),
+    // fixture.
+    "x_extract_md5" -> ((s, _) => extractFingerprint(corpusResults(s))),
 
     // ---- fintech normalizer over extracted text (constant-oracled) ------
     // aggregate form of the per-row Normalizer counts over the
@@ -759,13 +727,7 @@ object SparkEntry {
     // a row-level DuckDB recompute is impossible — this pins schema,
     // row identity and totals driver-side instead)
     "x_extract_normalized" -> ((s, _) => {
-      val results = graft.pipeline.ExtractPipeline
-        .extract(graft.pipeline.ExtractPipeline.pages(s, 500, 8), 8).toDF()
-      val countsUdf = udf((t: String) => graft.text.Normalizer.counts(t))
-      results.select(col("url"), countsUdf(col("text")).as("c"))
-        .select(col("url"), col("c.n_sections").as("n_sections"),
-          col("c.n_txn_lines").as("n_txn_lines"),
-          col("c.n_receipt_items").as("n_receipt_items"))
+      normalizerCounts(corpusResults(s), "url", col("text"))
         .agg(
           count(lit(1)).as("docs"),
           sum(col("n_sections")).cast("long").as("sections_sum"),
@@ -787,38 +749,23 @@ object SparkEntry {
     // exactly 500 with the x_extract_md5 fingerprint constants: a
     // kernel regression, lost/doubled rows, or first-seen state
     // dropping/duplicating turns this row red driver-side. Evaluated
-    // eagerly so the temp corpus/checkpoint dirs can be deleted before
+    // eagerly so the output/checkpoint dirs can be deleted before
     // returning.
-    "x_stream_extract" -> ((s, _) => {
+    "x_stream_extract" -> ((s, _) => withScratch(s, "graft_stream_") { base =>
       import s.implicits._
-      val base = scratchDir("graft_stream_")
-      try {
-        val results = graft.streaming.StreamingExtract.extractFirstSeen(
-          graft.streaming.StreamingExtract.readPages(s, streamCorpusDir(s)))
-        val q = graft.streaming.StreamingExtract
-          .writer(results, s"$base/out", s"$base/ck")
-          .start()
-        // bounded: a wedged query must fail the row, not hang the run
-        if (!q.awaitTermination(180000)) {
-          q.stop()
-          throw new RuntimeException("x_stream_extract: stream timed out")
-        }
-        val rowFp = xxhash64(col("url"), md5(col("text")), col("status"))
-        val r = s.read.parquet(s"$base/out").agg(
-          count(lit(1)).as("docs"),
-          sum(rowFp.cast("decimal(38,0)")).cast("string").as("fp_sum"),
-          bit_xor(rowFp).as("fp_xor"),
-          sum(length(col("text")).cast("long")).as("total_chars"),
-          sum(when(col("status") =!= "FAILED", 1L).otherwise(0L)).as("docs_ok")
-        ).as[(Long, String, Long, Long, Long)].head()
-        Seq(r).toDF("docs", "fp_sum", "fp_xor", "total_chars", "docs_ok")
-      } finally {
-        // the row is materialized (or the attempt failed) — drop the
-        // output and checkpoint either way
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+      val results = graft.streaming.StreamingExtract.extractFirstSeen(
+        graft.streaming.StreamingExtract.readPages(s, streamCorpusDir(s)))
+      val q = graft.streaming.StreamingExtract
+        .writer(results, s"$base/out", s"$base/ck")
+        .start()
+      // bounded: a wedged query must fail the row, not hang the run
+      if (!q.awaitTermination(180000)) {
+        q.stop()
+        throw new RuntimeException("x_stream_extract: stream timed out")
       }
+      val r = extractFingerprint(s.read.parquet(s"$base/out"))
+        .as[(Long, String, Long, Long, Long)].head()
+      Seq(r).toDF("docs", "fp_sum", "fp_xor", "total_chars", "docs_ok")
     }),
 
     // ---- WARC → kernel end-to-end (S9 ∘ O1, constant-oracled) -----------
@@ -834,14 +781,7 @@ object SparkEntry {
     // (lost/duplicated/mutated html) turns this row red driver-side.
     "x_warc_extract" -> ((s, _) => {
       val pages = graft.sources.Warc.warcFiles(s, warcCorpusDir(s) + "/*")
-      val results = graft.pipeline.ExtractPipeline.extract(pages, 8).toDF()
-      val rowFp = xxhash64(col("url"), md5(col("text")), col("status"))
-      results.agg(
-        count(lit(1)).as("docs"),
-        sum(rowFp.cast("decimal(38,0)")).cast("string").as("fp_sum"),
-        bit_xor(rowFp).as("fp_xor"),
-        sum(length(col("text")).cast("long")).as("total_chars"),
-        sum(when(col("status") =!= "FAILED", 1L).otherwise(0L)).as("docs_ok"))
+      extractFingerprint(ExtractPipeline.extract(pages, 8).toDF())
     }),
 
     // ---- WET output roundtrip (S9 sink half, constant-oracled) ----------
@@ -852,31 +792,15 @@ object SparkEntry {
     // total_chars pins against the same corpus constant as
     // x_extract_md5; the (url, text) xor pins encode→member→decode.
     // Evaluated eagerly so the temp dir is deleted before returning.
-    "x_wet_roundtrip" -> ((s, _) => {
+    "x_wet_roundtrip" -> ((s, _) => withScratch(s, "graft_wet_") { base =>
       import s.implicits._
-      val base = scratchDir("graft_wet_")
-      try {
-        val results = graft.pipeline.ExtractPipeline
-          .extract(graft.pipeline.ExtractPipeline.pages(s, 500, 8), 8).toDF()
-        val files = graft.sources.Warc.writeWet(
-          results.select(col("url"), col("warc_ts"), col("text")),
-          s"$base/wet")
-        val back = graft.sources.Warc.warcRecords(s, s"$base/wet/*")
-          .filter(col("warc_type") === "conversion")
-          .select(col("url"), col("payload").cast("string").as("text"))
-        val rowFp = xxhash64(col("url"), md5(col("text")))
-        val r = back.agg(
-          count(lit(1)).as("docs"),
-          bit_xor(rowFp).as("fp_xor"),
-          sum(length(col("text")).cast("long")).as("total_chars")
-        ).as[(Long, Long, Long)].head()
-        Seq((r._1, r._2, r._3, files.length.toLong))
-          .toDF("docs", "fp_xor", "total_chars", "wet_files")
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      val files = graft.sources.Warc.writeWet(
+        corpusResults(s).select(col("url"), col("warc_ts"), col("text")),
+        s"$base/wet")
+      val (docs, fpXor, chars) =
+        wetFingerprint(graft.sources.Warc.warcRecords(s, s"$base/wet/*"))
+      Seq((docs, fpXor, chars, files.length.toLong))
+        .toDF("docs", "fp_xor", "total_chars", "wet_files")
     }),
 
     // CDX-indexed random access: extraction text → WET + CDX sidecars →
@@ -885,43 +809,20 @@ object SparkEntry {
     // slice-by-slice read must reproduce the SAME corpus constants as
     // the full-scan x_wet_roundtrip. This is the wayback-style consumer
     // contract over our own index.
-    "x_cdx_roundtrip" -> ((s, _) => {
+    "x_cdx_roundtrip" -> ((s, _) => withScratch(s, "graft_cdx_") { base =>
       import s.implicits._
-      val base = scratchDir("graft_cdx_")
-      try {
-        val results = graft.pipeline.ExtractPipeline
-          .extract(graft.pipeline.ExtractPipeline.pages(s, 500, 8), 8).toDF()
-        graft.sources.Warc.writeWet(
-          results.select(col("url"), col("warc_ts"), col("text")),
-          s"$base/wet", cdx = true)
-        // the sidecar census and the slice-read aggregate are
-        // independent DAGs over the just-written files — run their
-        // actions concurrently (results unchanged)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val idx = graft.sources.Warc.cdxEntries(s, s"$base/wet/*.cdx.gz")
-        val cdxFilesF = Future(
-          idx.select(col("cdx_file")).distinct().count())
-        val back = graft.sources.Warc
-          .readCdxRecords(s, s"$base/wet/*.cdx.gz")
-          .filter(col("warc_type") === "conversion")
-          .select(col("url"), col("payload").cast("string").as("text"))
-        val rowFp = xxhash64(col("url"), md5(col("text")))
-        val rF = Future(back.agg(
-          count(lit(1)).as("docs"),
-          bit_xor(rowFp).as("fp_xor"),
-          sum(length(col("text")).cast("long")).as("total_chars")
-        ).as[(Long, Long, Long)].head())
-        val r = Await.result(rF, Duration.Inf)
-        val cdxFiles = Await.result(cdxFilesF, Duration.Inf)
-        Seq((r._1, r._2, r._3, cdxFiles))
-          .toDF("docs", "fp_xor", "total_chars", "cdx_files")
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      graft.sources.Warc.writeWet(
+        corpusResults(s).select(col("url"), col("warc_ts"), col("text")),
+        s"$base/wet", cdx = true)
+      // the sidecar census and the slice-read aggregate are independent
+      // DAGs over the just-written files, run concurrently
+      val (cdxFiles, (docs, fpXor, chars)) = concurrently(
+        graft.sources.Warc.cdxEntries(s, s"$base/wet/*.cdx.gz")
+          .select(col("cdx_file")).distinct().count(),
+        wetFingerprint(
+          graft.sources.Warc.readCdxRecords(s, s"$base/wet/*.cdx.gz")))
+      Seq((docs, fpXor, chars, cdxFiles))
+        .toDF("docs", "fp_xor", "total_chars", "cdx_files")
     }),
 
     // ---- incremental crawl dedup (bloom-accelerated, exact) -------------
@@ -945,8 +846,13 @@ object SparkEntry {
     // path that the TaskContext.partitionId bug hid in.
     "x_incremental_dedup_sharded" -> ((s, dir) => {
       val (all, seen) = incDedupFrames(s, dir)
-      graft.ops.IncrementalDedup
-        .newUrlsSharded(all, seen, bloomIndexDir(dir, seen), buckets = 8)
+      // the index is built once per sf dir (the build is deterministic)
+      val index = memo("bloom_index", dir) {
+        val d = scratchDirJvm(s, "graft_bloom_idx_").toString
+        graft.ops.IncrementalDedup.writeBloomIndex(seen, d, buckets = 8)
+        d
+      }
+      graft.ops.IncrementalDedup.newUrlsSharded(all, seen, index, buckets = 8)
         .orderBy(col("doc_id"))
     }),
 
@@ -1228,30 +1134,20 @@ object SparkEntry {
     // 60-bit md5 prefix) straight off the parquet table, so any
     // serialization, escaping, or commit loss flips the xor. Evaluated
     // eagerly so the temp dir is deleted before returning.
-    "x_jsonl_roundtrip" -> ((s, dir) => {
+    "x_jsonl_roundtrip" -> ((s, dir) => withScratch(s, "graft_jsonl_") { base =>
       import s.implicits._
-      val base = scratchDir("graft_jsonl_")
-      try {
-        // 4 partitions keyed on the raw doc_id (murmur3 spreads 500+
-        // docs over all 4 — deterministic, so jsonl_files pins at 4)
-        val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-          .repartition(4, col("doc_id"))
-        val files = graft.sources.Jsonl.write(docs, s"$base/out")
-        val back = s.read.schema("doc_id LONG, text STRING")
-          .json(s"$base/out")
-        val fp = expr("conv(substring(md5(concat(cast(doc_id AS string), " +
-          "':', text)), 1, 15), 16, 10)").cast("long")
-        val r = back.agg(
-          count(lit(1)).as("docs"),
-          sum(length(col("text")).cast("long")).as("total_chars"),
-          bit_xor(fp).as("fp_xor")).as[(Long, Long, Long)].head()
-        Seq((r._1, r._2, r._3, files.length.toLong))
-          .toDF("docs", "total_chars", "fp_xor", "jsonl_files")
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      // 4 partitions keyed on the raw doc_id (murmur3 spreads 500+
+      // docs over all 4 — deterministic, so jsonl_files pins at 4)
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+        .repartition(4, col("doc_id"))
+      val files = graft.sources.Jsonl.write(docs, s"$base/out")
+      val back = s.read.schema("doc_id LONG, text STRING").json(s"$base/out")
+      val fp = expr("conv(substring(md5(concat(cast(doc_id AS string), " +
+        "':', text)), 1, 15), 16, 10)").cast("long")
+      val r = back.agg(count(lit(1)), sum(length(col("text")).cast("long")),
+        bit_xor(fp)).as[(Long, Long, Long)].head()
+      Seq((r._1, r._2, r._3, files.length.toLong))
+        .toDF("docs", "total_chars", "fp_xor", "jsonl_files")
     }),
 
     // ---- token-budget mixture rates ---------------------------------------
@@ -1354,43 +1250,117 @@ object SparkEntry {
     })
   )
 
-  /** Scratch directory for the eager roundtrip queries (stream, WET,
-    * CDX, JSONL) and the per-JVM corpora: tmpfs when available — the
-    * same placement Bench uses for shuffle files (guide §6: scratch
-    * I/O layout, not results; every query still computes from its
-    * inputs and the dirs are deleted on exit of the query). Falls back
-    * to the default tmp dir. */
-  private def scratchDir(prefix: String): java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) &&
-        java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, prefix)
-    else java.nio.file.Files.createTempDirectory(prefix)
+  /** Runs `body` in a fresh `prefix` dir under the session's scratch
+    * root and deletes the dir afterwards, whether `body` returns or
+    * throws. The eager roundtrip queries (stream, WET, CDX, JSONL) write
+    * their sinks here: scratch I/O layout, not results. */
+  private[graft] def withScratch[A](s: SparkSession, prefix: String)(
+      body: Path => A): A = {
+    val dir = Files.createTempDirectory(scratchRoot(s), prefix)
+    try body(dir) finally deleteTree(dir)
   }
 
-  /** [[scratchDir]] for the per-JVM corpora (warc/stream/bloom): the
-    * query-scoped dirs delete themselves in their finally blocks, but
-    * these live for the JVM — a shutdown hook reclaims the tmpfs bytes
-    * so repeated bench JVMs cannot accrete in /dev/shm. */
-  private def scratchDirJvm(prefix: String): java.nio.file.Path = {
-    val d = scratchDir(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }))
+  /** The session's first configured local dir, in Spark's own order:
+    * `SPARK_LOCAL_DIRS`, then `spark.local.dir`, then `java.io.tmpdir`.
+    * Scratch lands where the cluster (or a bench session) puts its
+    * shuffle files. */
+  private[graft] def scratchRoot(s: SparkSession): Path = {
+    val dirs = sys.env.get("SPARK_LOCAL_DIRS").filter(_.trim.nonEmpty)
+      .getOrElse(s.sparkContext.getConf.get("spark.local.dir",
+        System.getProperty("java.io.tmpdir")))
+    Files.createDirectories(Paths.get(dirs.split(",")(0).trim))
+  }
+
+  private def deleteTree(dir: Path): Unit = {
+    val paths = Files.walk(dir)
+    try paths.iterator().asScala.toList.reverse.foreach(Files.deleteIfExists)
+    finally paths.close()
+  }
+
+  /** A scratch dir that lives for the JVM (the per-JVM corpora): a
+    * shutdown hook deletes it, so repeated bench JVMs cannot accrete. */
+  private def scratchDirJvm(s: SparkSession, prefix: String): Path = {
+    val d = Files.createTempDirectory(scratchRoot(s), prefix)
+    sys.addShutdownHook(scala.util.Try(deleteTree(d)))
     d
+  }
+
+  /** Per-JVM results of deterministic builds (scratch corpora, trained
+    * models, the brute pair set): one entry per cache `name`, rebuilt
+    * when its `key` (the sf dir) changes. Every build runs under the
+    * one re-entrant object lock. No cached value changes a result; the
+    * cache removes fixed costs from repeat runs (bench warm-up and
+    * min-of-2 passes), as a production pipeline trains once and applies
+    * many times. */
+  private val memos = collection.mutable.HashMap.empty[String, (String, Any)]
+  private def memo[A](name: String, key: String)(build: => A): A =
+    synchronized {
+      memos.get(name) match {
+        case Some((`key`, v)) => v.asInstanceOf[A]
+        case _ => val v = build; memos(name) = (key, v); v
+      }
+    }
+
+  /** Runs two independent actions concurrently (`a` on a pool thread,
+    * `b` on the caller's), so the caller waits for the slower one, not
+    * the sum. Results are those of running them one after the other. */
+  private def concurrently[A, B](a: => A, b: => B): (A, B) = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val fa = Future(a)
+    val rb = b
+    (Await.result(fa, scala.concurrent.duration.Duration.Inf), rb)
+  }
+
+  /** The 500-page deterministic corpus through the full extraction
+    * pipeline: the input of every extraction-kernel query. */
+  private def corpusResults(s: SparkSession): DataFrame =
+    ExtractPipeline.extract(ExtractPipeline.pages(s, 500, 8), 8).toDF()
+
+  /** The extraction-kernel fingerprint (docs, fp_sum, fp_xor,
+    * total_chars, docs_ok) over (url, text, status): order-independent,
+    * byte-stable across partitioning, pinned by the oracle against
+    * checked-in constants. fp_sum is a decimal(38,0) sum (a long sum of
+    * 64-bit hashes overflows under ANSI; decimal holds 10^12 rows ×
+    * 2^63 with 7 digits to spare) emitted as a STRING: through pandas
+    * the decimal degrades to float64, a string compares exactly. */
+  private def extractFingerprint(results: DataFrame): DataFrame = {
+    val rowFp = xxhash64(col("url"), md5(col("text")), col("status"))
+    results.agg(
+      count(lit(1)).as("docs"),
+      sum(rowFp.cast("decimal(38,0)")).cast("string").as("fp_sum"),
+      bit_xor(rowFp).as("fp_xor"),
+      sum(length(col("text")).cast("long")).as("total_chars"),
+      sum(when(col("status") =!= "FAILED", 1L).otherwise(0L)).as("docs_ok"))
+  }
+
+  /** (docs, fp_xor, total_chars) of the conversion records read back
+    * from a WET sink: the (url, text) fingerprint both sink roundtrips
+    * pin against the extraction corpus constants. */
+  private def wetFingerprint(records: Dataset[_]): (Long, Long, Long) = {
+    import records.sparkSession.implicits._
+    val back = records.filter(col("warc_type") === "conversion")
+      .select(col("url"), col("payload").cast("string").as("text"))
+    back.agg(count(lit(1)), bit_xor(xxhash64(col("url"), md5(col("text")))),
+      sum(length(col("text")).cast("long"))).as[(Long, Long, Long)].head()
+  }
+
+  /** `key` plus the real Normalizer counts of `text` (n_sections,
+    * n_txn_lines, n_receipt_items), from ONE struct-returning UDF: one
+    * text pass. */
+  private def normalizerCounts(df: DataFrame, key: String, text: Column)
+      : DataFrame = {
+    val countsUdf = udf((t: String) => graft.text.Normalizer.counts(t))
+    df.select(col(key), countsUdf(text).as("c")).select(col(key), col("c.*"))
   }
 
   /** The 500-page corpus as real WARC files, written once per JVM (8
     * files; even files per-record-gzip-membered, odd plain; bodies
     * chunked / Content-Encoding-gzipped on the same i%5 / i%3 mix as
     * x_warc_ingest) — the input of the x_warc_extract seam gate. */
-  @volatile private var warcCorpus: String = _
-  private def warcCorpusDir(s: SparkSession): String = synchronized {
-    if (warcCorpus == null) {
-      val d = scratchDirJvm("graft_warc_corpus_")
+  private def warcCorpusDir(s: SparkSession): String =
+    memo("warc_corpus", "") {
+      val d = scratchDirJvm(s, "graft_warc_corpus_")
       (0 until 8).foreach { f =>
         val name = if (f % 2 == 0) s"part-$f.warc.gz" else s"part-$f.warc"
         val out = new java.io.BufferedOutputStream(
@@ -1407,24 +1377,21 @@ object SparkEntry {
           }
         } finally out.close()
       }
-      warcCorpus = d.toString
+      d.toString
     }
-    warcCorpus
-  }
 
   /** Deterministic 500-page corpus + 500 duplicate rows materialized as
-    * parquet once per JVM (it never changes within a process — the
-    * bench times the streaming job three times and should not pay the
-    * synth+write each pass). Duplicates: even ids redelivered verbatim
-    * (at-least-once queue), odd ids re-crawled one hour later with
-    * byte-identical html — the stateful first-seen filter must drop all
-    * 500 for x_stream_extract's constants to hold. */
-  @volatile private var streamCorpus: String = _
-  private def streamCorpusDir(s: SparkSession): String = synchronized {
-    if (streamCorpus == null) {
+    * parquet once per JVM (the bench times the streaming job three
+    * times and should not pay the synth+write each pass). Duplicates:
+    * even ids redelivered verbatim (at-least-once queue), odd ids
+    * re-crawled one hour later with byte-identical html — the stateful
+    * first-seen filter must drop all 500 for x_stream_extract's
+    * constants to hold. */
+  private def streamCorpusDir(s: SparkSession): String =
+    memo("stream_corpus", "") {
       import s.implicits._
-      val d = scratchDirJvm("graft_stream_corpus_").toString + "/pages"
-      graft.pipeline.ExtractPipeline.pages(s, 500, 8).write.parquet(d)
+      val d = scratchDirJvm(s, "graft_stream_corpus_").toString + "/pages"
+      ExtractPipeline.pages(s, 500, 8).write.parquet(d)
       s.range(0L, 500L, 1L, 8).filter(_ % 2 == 0)
         .map(i => graft.pipeline.PagesSynth.row(i))
         .write.mode("append").parquet(d)
@@ -1434,39 +1401,16 @@ object SparkEntry {
           p.copy(warc_ts = new java.sql.Timestamp(p.warc_ts.getTime + 3600000L))
         }
         .write.mode("append").parquet(d)
-      streamCorpus = d
+      d
     }
-    streamCorpus
-  }
 
-  /** BPE merges cached per (JVM, sfDir): training is deterministic, so
-    * x_bpe_train and x_bpe_tokens share one 12-round train instead of
-    * each paying it (a production pipeline trains the tokenizer once
-    * and applies it everywhere — same shape as the IVF centroid
-    * cache). */
-  @volatile private var bpeTrained: (String, Seq[(String, String)]) = _
-  private def bpeMerges(s: SparkSession, dir: String)
-      : Seq[(String, String)] = synchronized {
-    if (bpeTrained == null || bpeTrained._1 != dir) {
-      val docs = t(s, dir, "documents").select(col("text"))
-      bpeTrained = (dir, graft.ops.BpeTrain.trainMerges(
-        graft.ops.BpeTrain.wordFrequencies(docs, "text"), numMerges = 12))
+  /** BPE merges per sf dir: x_bpe_train and x_bpe_tokens share one
+    * 12-round train. */
+  private def bpeMerges(s: SparkSession, dir: String): Seq[(String, String)] =
+    memo("bpe_merges", dir) {
+      graft.ops.BpeTrain.trainMerges(graft.ops.BpeTrain.wordFrequencies(
+        t(s, dir, "documents").select(col("text")), "text"), numMerges = 12)
     }
-    bpeTrained._2
-  }
-
-  /** IVF centroids trained once per (JVM, sfDir) — training is
-    * deterministic (hash-sampled Lloyd), so the cache changes no
-    * result; it removes the fixed train-collect overhead from repeat
-    * x_ann_recall runs (a production recall gate trains once and
-    * probes many times — same shape). */
-  @volatile private var ivfTrained: (String, Array[Array[Float]]) = _
-  private def ivfCentroids(dir: String, emb: DataFrame, n: Long)
-      : Array[Array[Float]] = synchronized {
-    if (ivfTrained == null || ivfTrained._1 != dir)
-      ivfTrained = (dir, graft.ops.IvfIndex.train(emb, knownN = n))
-    ivfTrained._2
-  }
 
   /** (batch, seen) frames for the incremental-dedup rows: urls
     * synthesized from doc_id with the expression the oracle repeats. */
@@ -1476,40 +1420,6 @@ object SparkEntry {
       concat(lit("https://"), col("source"), lit(".synth.example/doc/"),
         col("doc_id").cast("string")).as("url"))
     (all, all.filter(col("doc_id") % 3 =!= 0).select(col("url")))
-  }
-
-  /** Sharded bloom index for the x_incremental_dedup_sharded row,
-    * built once per (JVM, sfDir) — the build is deterministic, so the
-    * cache changes no result. */
-  @volatile private var bloomIdx: (String, String) = _
-  private def bloomIndexDir(dir: String, seen: DataFrame): String =
-    synchronized {
-      if (bloomIdx == null || bloomIdx._1 != dir) {
-        val d = scratchDirJvm("graft_bloom_idx_").toString
-        graft.ops.IncrementalDedup.writeBloomIndex(seen, d, buckets = 8)
-        bloomIdx = (dir, d)
-      }
-      bloomIdx._2
-    }
-
-  /** Brute top-k (query_id, neighbor_id) pairs for the ANN recall
-    * gate, computed once per (JVM, sfDir) — the exact kernel is
-    * deterministic, so the cache changes no result; repeat gate runs
-    * (bench warm-up + min-of-2 passes) skip the exact pass entirely.
-    * The pair set is |sample|·k ≈ 1.25·n rows of two longs — driver-
-    * safe at every scale this gate runs at (the gate itself samples
-    * queries precisely so its cost stays bounded; a 10^12-row corpus
-    * would cap the sample further, not collect more). */
-  @volatile private var brutePairCache: (String, Array[(Long, Long)]) = _
-  private def brutePairs(dir: String, emb: DataFrame,
-      sampleQ: DataFrame): Array[(Long, Long)] = synchronized {
-    if (brutePairCache == null || brutePairCache._1 != dir) {
-      val rows = Similarity.bruteCosineTopK(emb, sampleQ, 5)
-        .select(col("query_id"), col("neighbor_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      brutePairCache = (dir, rows)
-    }
-    brutePairCache._2
   }
 
   /** Deterministic adversarial sanitize-corpus row (the DiffGen fuzz

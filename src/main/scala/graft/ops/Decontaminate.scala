@@ -17,9 +17,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: evaluation sets are small (MBs) next to the corpus, so
   * the benchmark n-gram set is collected once — bounded by
-  * `maxBenchNgrams`, the [[Similarity]] pre-collect discipline:
-  * the bound is asserted with ONE aggregate job BEFORE anything is
-  * collected — and broadcast; scanning is then a per-row kernel, zero
+  * `maxBenchNgrams` (one collect of at most `maxBenchNgrams + 1`
+  * grams) — and broadcast; scanning is then a per-row kernel, zero
   * shuffles, one map stage with the scan. For blocklists too big to
   * broadcast, [[contaminationJoined]] is the shuffle twin (explode +
   * ids-only aggregate) with identical output, spec-pinned.
@@ -27,21 +26,22 @@ import org.apache.spark.sql.functions._
 object Decontaminate {
 
   /** Distinct benchmark n-grams, collected under an asserted bound and
-    * returned as a Set. The count check runs as its own aggregate BEFORE
-    * the collect, so an oversized benchmark fails fast without
-    * materializing on the driver. */
+    * returned as a Set. One bounded collect evaluates the distinct set
+    * once: at most `maxBenchNgrams + 1` grams reach the driver, so an
+    * oversized benchmark fails without materializing there. */
   def collectBenchNgrams(bench: DataFrame, textCol: String, n: Int,
       maxBenchNgrams: Long = 10000000L): Set[String] = {
     require(n > 0, s"n must be positive (got $n)")
     val grams = bench
       .select(explode(WordTokens.ngramsCol(col(textCol), n)).as("g"))
       .distinct()
-    val cnt = grams.count()
-    require(cnt <= maxBenchNgrams,
-      s"benchmark n-gram set has $cnt distinct grams > bound " +
-        s"$maxBenchNgrams — raise maxBenchNgrams or use " +
-        "contaminationJoined (the non-broadcast twin)")
-    grams.collect().map(_.getString(0)).toSet
+      .limit(math.min(maxBenchNgrams, Int.MaxValue - 1L).toInt + 1)
+      .collect()
+    require(grams.length <= maxBenchNgrams,
+      s"benchmark n-gram set has more than $maxBenchNgrams distinct grams " +
+        "— raise maxBenchNgrams or use contaminationJoined (the " +
+        "non-broadcast twin)")
+    grams.map(_.getString(0)).toSet
   }
 
   /** Per-document contamination stats against a broadcast benchmark

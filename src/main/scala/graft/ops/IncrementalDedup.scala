@@ -113,26 +113,33 @@ object IncrementalDedup {
       .drop("__maybe_seen")
     val candidates = flagged.filter(col("__maybe_seen"))
       .drop("__maybe_seen")
+    withUnseenCandidates(definiteNew, candidates, seenUrls, urlCol, fpp,
+      filterBudgetBytes)
+  }
 
-    // candidate-side filter (tiny: true dups + fpp of the batch) cuts
-    // the seen side of the exact join from the whole index to
-    // ~|candidates| + fpp·|seen| rows before the shuffle
+  /** `definiteNew` plus the `candidates` whose url is absent from
+    * `seenUrls`: the exact tail of both forms. A candidate-side filter
+    * (tiny: true dups + fpp of the batch) first cuts the seen side of
+    * the exact anti-join from the whole index to ~|candidates| +
+    * fpp·|seen| rows before the shuffle. */
+  private def withUnseenCandidates(definiteNew: DataFrame,
+      candidates: DataFrame, seenUrls: DataFrame, urlCol: String,
+      fpp: Double, budgetBytes: Long): DataFrame = {
     val nCand = candidates.select(col(urlCol)).count()
     val seenPruned =
       if (nCand == 0L) seenUrls.limit(0) // no candidates: nothing to check
       else {
-        budgetGuard(nCand, fpp, filterBudgetBytes, "candidate-side")
+        budgetGuard(nCand, fpp, budgetBytes, "candidate-side")
         // stat.bloomFilter on an EMPTY frame returns an unreadable
         // filter (NPE at readFrom) — the nCand==0 branch avoids it
         val candBf = candidates.select(col(urlCol))
           .stat.bloomFilter(urlCol, math.max(nCand, 1L), fpp)
         seenUrls.filter(mightContainCol(seenUrls, candBf, urlCol))
       }
-
-    // using-column joins move the key first; restore the batch's column
-    // order so the union is positionally correct
+    // using-column joins move the key first; restore the candidates'
+    // column order so the union is positionally correct
     val checked = candidates.join(seenPruned, Seq(urlCol), "left_anti")
-      .select(newBatch.columns.map(col).toIndexedSeq: _*)
+      .select(candidates.columns.map(col).toIndexedSeq: _*)
     definiteNew.union(checked)
   }
 
@@ -203,24 +210,12 @@ object IncrementalDedup {
             filters.getOrElseUpdate(bucket, BloomFilter.create(perBucket, fpp))
               .putString(url)
           }
-          var n = 0L
           filters.foreach { case (bucket, bf) =>
-            val fin = bloomPath(dir, bucket)
-            val tmp =
-              new Path(f"$dir/_bloom_tmp/bloom-$bucket%05d-$attemptUid.bin")
-            val fs = fin.getFileSystem(conf.conf)
-            val out = fs.create(tmp, true)
-            var ok = false
-            try { bf.writeTo(out); ok = true }
-            finally { out.close(); if (!ok) fs.delete(tmp, false) }
-            if (!fs.rename(tmp, fin)) {
-              fs.delete(tmp, false)
-              if (!fs.exists(fin))
-                throw new java.io.IOException(s"bloom commit failed for $fin")
-            }
-            n += 1
+            graft.sources.PartFiles.commit(bloomPath(dir, bucket),
+              new Path(f"$dir/_bloom_tmp/bloom-$bucket%05d-$attemptUid.bin"),
+              Nil, conf.conf)(identity) { out => bf.writeTo(out); 1L }
           }
-          Iterator.single(n)
+          Iterator.single(filters.size.toLong)
         }
       }.collect().sum
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -321,27 +316,10 @@ object IncrementalDedup {
     val definiteNew = flagged.filter(!col("__maybe_seen")).drop("__maybe_seen")
       .union(nullRows)
     val candidates = flagged.filter(col("__maybe_seen")).drop("__maybe_seen")
-    // same candidate-side prune as the broadcast form: the exact join
-    // must consult the index, but only the rows that can possibly match
-    // the (small) candidate set need to reach the shuffle — without
-    // this the sharded form would scan-and-shuffle all of `seen` to
-    // serve a few false positives
-    val seenUrls = seen.select(col(urlCol))
-    val nCand = candidates.select(col(urlCol)).count()
-    val seenPruned =
-      if (nCand == 0L) seenUrls.limit(0) // no candidates: nothing to check
-      else {
-        budgetGuard(nCand, 0.01, Similarity.DefaultBroadcastBudgetBytes,
-          "candidate-side")
-        // stat.bloomFilter returns an unreadable filter on an empty
-        // frame (NPE at readFrom) — the nCand==0 branch above avoids it
-        val candBf = candidates.select(col(urlCol))
-          .stat.bloomFilter(urlCol, math.max(nCand, 1L), 0.01)
-        seenUrls.filter(mightContainCol(seenUrls, candBf, urlCol))
-      }
-    val checked = candidates
-      .join(seenPruned, Seq(urlCol), "left_anti")
-      .select(cols.map(col).toIndexedSeq: _*)
-    definiteNew.union(checked)
+    // the same candidate-side prune as the broadcast form: without it
+    // the sharded form would scan-and-shuffle all of `seen` to serve a
+    // few false positives
+    withUnseenCandidates(definiteNew, candidates, seen.select(col(urlCol)),
+      urlCol, 0.01, Similarity.DefaultBroadcastBudgetBytes)
   }
 }

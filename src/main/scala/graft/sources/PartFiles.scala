@@ -6,7 +6,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, Encoders}
 
 /** The commit discipline of every part-file sink ([[Warc.writeWet]],
-  * [[Jsonl.write]]). Each task attempt streams its partition to an
+  * [[Jsonl.write]], the Bloom index files of
+  * [[graft.ops.IncrementalDedup.writeBloomIndex]]). Each task attempt streams its partition to an
   * attempt-unique temp under the sink's scratch dir, then commits by
   * rename. Rename is atomic per attempt (HDFS: first committer wins and
   * the loser's rename returns false; POSIX local fs: whole-file atomic
@@ -14,7 +15,7 @@ import org.apache.spark.sql.{Dataset, Encoders}
   * complete output: a speculative duplicate can never interleave into
   * it, and a failed or losing attempt deletes its temps and leaves no
   * partial final file. */
-private[sources] object PartFiles {
+private[graft] object PartFiles {
 
   /** Runs `part(rows, partitionId, attemptUid, conf)` once per non-empty
     * partition of `ds` and returns its (file, records) results sorted by

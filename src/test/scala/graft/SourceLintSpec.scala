@@ -52,4 +52,17 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offending(ops, split).nonEmpty, "the rule matches nothing")
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
+
+  test("scratch follows the session's local dir, deleted by one helper") {
+    // a host path bakes one machine's layout into the engine; scratch
+    // roots come from SPARK_LOCAL_DIRS / spark.local.dir instead. The
+    // bench harnesses choose their own local dir and are left out.
+    val frozen = Set("Bench.scala", "BenchExtra.scala")
+    val files = mainSources.filterNot(f => frozen(f.getFileName.toString))
+    val shm = offending(files, "/dev/shm".r)
+    assert(shm.isEmpty, shm.mkString("\n", "\n", ""))
+    val walks = offending(files, """Files\.walk\b""".r)
+    assert(walks.size == 1 && walks.head.contains("SparkEntry.scala:"),
+      walks.mkString("\n", "\n", ""))
+  }
 }

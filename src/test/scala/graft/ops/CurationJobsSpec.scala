@@ -78,7 +78,7 @@ class CurationJobsSpec extends AnyFunSuite {
   }
 
   test("decontamination, broadcast and shuffle twins") {
-    pin("Decontaminate.contamination", 8)(Decontaminate.contamination(
+    pin("Decontaminate.contamination", 5)(Decontaminate.contamination(
       docs, "doc_id", "text", bench, "text", 3).collect())
     pin("Decontaminate.contaminationJoined", 4)(
       Decontaminate.contaminationJoined(docs, "doc_id", "text", bench,
